@@ -225,9 +225,9 @@ object CdcQueries {
     Q("mon_mirror_segments",
       (s, d) => {
         // The five fixture waves merged without folding, then the
-        // mirror's per-segment health stats: one 1-row aggregate per
-        // segment (footer-served counts), unioned. Wave sizes and the
-        // delete wave's tombstone count are plain SQL over `orders`.
+        // mirror's per-segment health stats: one scan of the segment
+        // set, grouped by segment. Wave sizes and the delete wave's
+        // tombstone count are plain SQL over `orders`.
         val root = java.nio.file.Files
           .createTempDirectory("graft-segstats-q").toString + "/orders"
         val all = unwrapped(s, d)

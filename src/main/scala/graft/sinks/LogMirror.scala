@@ -1,10 +1,11 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
-import graft.cdc.Materialize
+import graft.cdc.{Materialize, SchemaEvolution}
 
 /** Log-structured CDC mirror: an immutable BASE segment plus an ordered
   * list of per-batch DELTA segments, committed through an atomic
@@ -23,14 +24,34 @@ import graft.cdc.Materialize
   *     ∝ batch keys. This is the reference's row-level upsert cost
   *     model (register-postgres-sink.json:15-17 writes only the
   *     batch's rows) realized on immutable storage.
-  *   - read: base ∪ deltas reconciled by the stored (ts_ms, offset)
-  *     version per key — the same ordering every mirror layout uses,
-  *     so late/replayed changes can never regress a newer row.
-  *   - compaction (automatic past `maxDeltas`, or explicit): folds
+  *   - read: base ∪ deltas planned as ONE parquet scan with the
+  *     schema the manifest records (a bucketed base is a second scan:
+  *     its `_bucket=` dirs cannot share a flat scan's partition
+  *     discovery) — no schema-inference job and no per-segment scan
+  *     stage, so a read's fixed cost does not grow with the delta
+  *     depth. Rows reconcile by the stored (ts_ms, offset) version per
+  *     key — the same ordering every mirror layout uses, so
+  *     late/replayed changes can never regress a newer row.
+  *   - compaction (automatic past `maxDeltas` or when a commit widens
+  *     a key column over a bucketed base, or explicit): folds
   *     base+deltas into a fresh base segment and resets the delta
   *     list — amortized O(mirror/maxDeltas) per batch, the standard
   *     LSM trade: read cost is bounded by `maxDeltas` reconcile
   *     inputs, write amplification is bounded by the fold cadence.
+  *
+  * Manifest format (`MANIFEST-<commitId>`, one entry per line):
+  * {{{
+  *   k:<key,cols>          key columns
+  *   n:<buckets>           base bucket count (bucketed layouts only)
+  *   s:<StructType json>   read schema of the live segments
+  *   base:<id>             base segment (absent before the first fold)
+  *   delta:<id>            one line per live delta segment
+  * }}}
+  * The read schema is the union of the live segments' columns, each at
+  * the wider type where segments differ ([[SchemaEvolution.widensTo]]:
+  * int→long, float→double), every field nullable; a segment missing a
+  * column reads it as null. Every commit (merge, fold, purge) rewrites
+  * it, and a manifest without it is rejected.
   *
   * Crash safety follows [[BucketedMirror]]'s versioned-dir + pointer
   * design: segment dirs land BEFORE the manifest commit (tmp-file +
@@ -51,9 +72,11 @@ import graft.cdc.Materialize
 object LogMirror {
 
   /** Committed mirror layout: key columns + optional base bucket count,
-    * the base segment id, and the ordered live delta ids. */
+    * the base segment id, the ordered live delta ids, and the read
+    * schema every scan of the segments is pinned to. */
   final case class Manifest(keyCols: Seq[String], bucketCount: Option[Int],
-                            base: Option[Long], deltas: Seq[Long])
+                            base: Option[Long], deltas: Seq[Long],
+                            schema: StructType)
 
   private[sinks] def manifestId(p: Path): Option[Long] = {
     val n = p.getName
@@ -88,7 +111,13 @@ object LogMirror {
         },
         deltas = lines.collect {
           case l if l.startsWith("delta:") => l.stripPrefix("delta:").toLong
-        }.sorted)
+        }.sorted,
+        schema = lines.collectFirst {
+          case l if l.startsWith("s:") =>
+            DataType.fromJson(l.stripPrefix("s:")).asInstanceOf[StructType]
+        }.getOrElse(sys.error(
+          s"LogMirror at $root: manifest ${mf.getName} records no read " +
+            "schema (s: line); rebuild the mirror by replaying its changes")))
     }
 
   private def writeManifest(fs: FileSystem, root: String, commitId: Long,
@@ -99,6 +128,7 @@ object LogMirror {
     graft.core.LocalFs.writeSmall(fs, tmp, (
       Seq(s"k:${m.keyCols.mkString(",")}") ++
         m.bucketCount.map(n => s"n:$n") ++
+        Seq(s"s:${m.schema.json}") ++
         m.base.map(b => s"base:$b") ++
         m.deltas.map(d => s"delta:$d"))
       .mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -131,17 +161,63 @@ object LogMirror {
       .select(keyCols.map(col) ++ payload.map(c => col(s"_latest.$c").as(c)): _*)
   }
 
-  /** allowMissingColumns: a delta written after an additive schema
-    * evolution carries columns the base predates — they backfill null
-    * (auto.evolve=true, register-postgres-sink.json:14). */
-  private def unionSegments(frames: Seq[DataFrame]): DataFrame =
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+  /** Read schema after adding a segment of schema `seg` to a segment
+    * set read as `current`: the union of their columns (first-seen
+    * order, so an additive column lands last), the wider type where
+    * they differ, every field nullable. A delta written after an
+    * additive evolution carries columns the base predates — they
+    * backfill null (auto.evolve=true, register-postgres-sink.json:14).
+    * A type change that does not widen fails the commit: no pinned
+    * scan could read both segments. */
+  private def widen(root: String, current: StructType,
+                    seg: StructType): StructType =
+    StructType(seg.fields.foldLeft(current.fields.toVector) { (acc, f) =>
+      acc.indexWhere(_.name == f.name) match {
+        case -1 => acc :+ f
+        case i =>
+          val have = acc(i).dataType
+          if (DataType.equalsStructurally(have, f.dataType, true) ||
+            SchemaEvolution.widensTo(f.dataType, have)) acc
+          else if (SchemaEvolution.widensTo(have, f.dataType))
+            acc.updated(i, acc(i).copy(dataType = f.dataType))
+          else sys.error(s"LogMirror at $root: column ${f.name} changes " +
+            s"type ${have.simpleString} -> ${f.dataType.simpleString}, " +
+            "which does not widen")
+      }
+    }).toNullable
 
-  private def segmentFrames(spark: SparkSession, root: String,
-                            m: Manifest): Seq[DataFrame] =
-    (m.base.map(v => spark.read.parquet(basePath(root, v))).toSeq ++
-      m.deltas.map(v => spark.read.parquet(deltaPath(root, v))))
-      .map(_.drop("_bucket"))
+  private val bucketCol = "_bucket"
+
+  private def isBucketed(fs: FileSystem, root: String, base: Long): Boolean =
+    fs.listStatus(new Path(basePath(root, base)))
+      .exists(_.getPath.getName.startsWith(s"$bucketCol="))
+
+  /** The one way segments are read: parquet scans pinned to the
+    * manifest's schema, so no inference job runs and the paths of a
+    * scan share one scan stage. A segment set is at most two scans: the
+    * deltas (and a flat base) in one, a bucketed base in its own — its
+    * `_bucket=` dirs cannot share a flat scan's partition discovery.
+    * `tag` runs on each raw scan, where `_metadata` still resolves;
+    * `bucketPrune` filters the bucketed base's `_bucket` partitions. */
+  private def segmentScan(spark: SparkSession, fs: FileSystem, root: String,
+                          m: Manifest, base: Option[Long], deltas: Seq[Long],
+                          bucketPrune: Option[Column] = None,
+                          tag: DataFrame => DataFrame = identity): DataFrame = {
+    def scan(schema: StructType, paths: Seq[String]): DataFrame =
+      tag(spark.read.schema(schema).parquet(paths: _*))
+    val bucketed = base.filter(isBucketed(fs, root, _))
+    val flat = base.filterNot(bucketed.contains).map(basePath(root, _)).toSeq ++
+      deltas.map(deltaPath(root, _))
+    val bucketScan = bucketed.map { v =>
+      val b = scan(m.schema.add(bucketCol, IntegerType), Seq(basePath(root, v)))
+      bucketPrune.fold(b)(p => b.filter(col(bucketCol) === p)).drop(bucketCol)
+    }
+    (bucketScan.toSeq ++ Option.when(flat.nonEmpty)(scan(m.schema, flat)))
+      .reduce(_.union(_))
+  }
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Merge one unwrapped change batch: write the batch's latest-per-key
     * delta segment (NO base read), commit, and fold when the delta list
@@ -159,7 +235,8 @@ object LogMirror {
       delta.sortWithinPartitions(keyCols.map(col): _*)
         .write.mode("overwrite").parquet(deltaPath(root, batchId))
     } finally delta.unpersist()
-    commitDelta(spark, fs, root, keyCols, batchId, maxDeltas, bucketCount)
+    commitDelta(spark, fs, root, keyCols, batchId, maxDeltas, bucketCount,
+      delta.schema)
   }
 
   private def precheck(fs: FileSystem, root: String, keyCols: Seq[String],
@@ -179,16 +256,26 @@ object LogMirror {
           s"committed manifest $newest at $root"))
   }
 
-  /** Manifest commit for an already-written `delta-<batchId>` segment
-    * (+ the past-`maxDeltas` fold). */
+  /** Manifest commit for an already-written `delta-<batchId>` segment of
+    * schema `segSchema` (+ the past-`maxDeltas` fold). */
   private def commitDelta(spark: SparkSession, fs: FileSystem, root: String,
                           keyCols: Seq[String], batchId: Long, maxDeltas: Int,
-                          bucketCount: Option[Int]): Unit = {
+                          bucketCount: Option[Int],
+                          segSchema: StructType): Unit = {
     val prev = readManifest(fs, root)
     val deltas = prev.map(_.deltas).getOrElse(Seq.empty)
       .filterNot(_ == batchId) :+ batchId // replay overwrites its own slot
-    val m = Manifest(keyCols, bucketCount, prev.flatMap(_.base), deltas)
-    if (deltas.length >= maxDeltas) compactTo(spark, fs, root, m, batchId)
+    val m = Manifest(keyCols, bucketCount, prev.flatMap(_.base), deltas,
+      widen(root, prev.fold(new StructType())(_.schema), segSchema))
+    // a bucketed base's `_bucket=` dirs hold the key hashed at the type
+    // it was folded with, and lookup hashes its probe at the manifest's
+    // key type (murmur3 hashes Int and Long differently): a commit that
+    // widens a key column folds at once, rehashing the base at the new type
+    val keyWidened = prev.exists(p =>
+      keyCols.exists(k => p.schema(k).dataType != m.schema(k).dataType))
+    if (deltas.length >= maxDeltas ||
+      (keyWidened && m.base.exists(isBucketed(fs, root, _))))
+      compactTo(spark, fs, root, m, batchId)
     else {
       writeManifest(fs, root, batchId, m)
       sweep(fs, root, m)
@@ -236,6 +323,7 @@ object LogMirror {
         .repartition(math.max(1, nf.values.sum), col(tableCol), col("_fg"))
         .drop("_fg")
     }
+    val segSchema = StructType(delta.schema.filterNot(_.name == tableCol))
     val tmp = new Path(mirrorRoot,
       s".log_group_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
@@ -258,7 +346,7 @@ object LogMirror {
           // per-table offset spreads folds over [maxDeltas, 1.5×maxDeltas)
           val stagger = math.abs(t.hashCode) % (maxDeltas / 2 + 1)
           commitDelta(spark, fs, root, keyCols, batchId,
-            maxDeltas + stagger, bucketCount)
+            maxDeltas + stagger, bucketCount, segSchema)
         }
       }
     } finally fs.delete(tmp, true)
@@ -280,7 +368,7 @@ object LogMirror {
   private def compactTo(spark: SparkSession, fs: FileSystem, root: String,
                         m: Manifest, commitId: Long): Unit =
     writeBase(spark, fs, root, m, commitId,
-      reconcile(unionSegments(segmentFrames(spark, root, m)), m.keyCols))
+      reconcile(segmentScan(spark, fs, root, m, m.base, m.deltas), m.keyCols))
 
   /** Hard-delete: remove EVERY trace of the given keys — live rows AND
     * tombstones — from the mirror (the right-to-be-forgotten obligation
@@ -299,7 +387,7 @@ object LogMirror {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     readManifest(fs, root).foreach { m =>
       val purgeId = latestManifest(fs, root).flatMap(manifestId).get + 1
-      val folded = reconcile(unionSegments(segmentFrames(spark, root, m)),
+      val folded = reconcile(segmentScan(spark, fs, root, m, m.base, m.deltas),
         m.keyCols)
         .join(keys.select(m.keyCols.map(col): _*), m.keyCols, "left_anti")
       writeBase(spark, fs, root, m, purgeId, folded)
@@ -311,10 +399,10 @@ object LogMirror {
                         folded: DataFrame): Unit = {
     val writer = m.bucketCount match {
       case Some(n) => folded
-        .withColumn("_bucket", bucketExpr(m.keyCols, n))
-        .repartition(n, col("_bucket"))
-        .sortWithinPartitions(("_bucket" +: m.keyCols).map(col): _*)
-        .write.partitionBy("_bucket")
+        .withColumn(bucketCol, bucketExpr(m.keyCols, n))
+        .repartition(n, col(bucketCol))
+        .sortWithinPartitions((bucketCol +: m.keyCols).map(col): _*)
+        .write.partitionBy(bucketCol)
       case None => folded
         .sortWithinPartitions(m.keyCols.map(col): _*)
         .write
@@ -328,40 +416,47 @@ object LogMirror {
   /** Per-segment health stats — (kind, version, n_rows, n_tombstones)
     * for the base and every live delta — the numbers an operator
     * watches to size `maxDeltas` / schedule compaction (deep deltas =
-    * slow reads; tombstone-heavy base = fold overdue). One plan: each
-    * segment aggregates to a single row (parquet footers serve the
-    * counts; no full scan materializes), then a union of 1-row frames.
-    * Feed the result into the monitoring spine like any health frame. */
+    * slow reads; tombstone-heavy base = fold overdue). One grouped
+    * scan: each row is tagged with its segment from the file path
+    * (`_metadata.file_path`), and one aggregation keyed by segment
+    * counts rows and tombstones; only the tombstone flag is read. A
+    * segment with no rows reports no row. Feed the result into the
+    * monitoring spine like any health frame. */
   def segmentStats(spark: SparkSession, root: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("kind", StringType), StructField("version", LongType),
-      StructField("n_rows", LongType), StructField("n_tombstones", LongType)))
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     readManifest(fs, root) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case None => emptyFrame(spark, StructType.fromDDL(
+        "kind STRING, version BIGINT, n_rows BIGINT, n_tombstones BIGINT"))
       case Some(m) =>
-        def statsOf(kind: String, v: Long, path: String): DataFrame =
-          spark.read.parquet(path).agg(
-            lit(kind).as("kind"), lit(v).as("version"),
-            count(lit(1)).as("n_rows"),
+        val segment = "_segment"
+        segmentScan(spark, fs, root, m, m.base, m.deltas,
+          tag = _.withColumn(segment, col("_metadata.file_path")))
+          .select(
+            regexp_extract(col(segment), segmentPattern, 1).as("kind"),
+            segmentId(col(segment)).as("version"),
+            col(Materialize.deletedFlag))
+          .groupBy("kind", "version")
+          .agg(count(lit(1)).as("n_rows"),
             coalesce(sum(col(Materialize.deletedFlag).cast("long")), lit(0L))
               .as("n_tombstones"))
-            .select("kind", "version", "n_rows", "n_tombstones")
-        (m.base.map(v => statsOf("base", v, basePath(root, v))).toSeq ++
-          m.deltas.map(v => statsOf("delta", v, deltaPath(root, v))))
-          .reduce(_.unionByName(_))
     }
   }
+
+  /** Segment kind and id from a data file's path; the greedy prefix
+    * matches the LAST `segments/` component, so a root that happens to
+    * contain one cannot shadow it. */
+  private val segmentPattern = ".*/segments/(base|delta)-([0-9]+)/"
+
+  private def segmentId(filePath: Column): Column =
+    regexp_extract(filePath, segmentPattern, 2).cast("long")
 
   /** Stats-driven compaction policy: fold when the delta list is
     * deeper than `maxDeltaDepth` OR tombstones exceed
     * `maxTombstoneRatio` of all segment rows (a tombstone-heavy mirror
     * pays reconcile work for keys that no longer exist — only a fold
     * collapses a tombstone onto the base row it masks). Returns true
-    * when it compacted. Decision cost is [[segmentStats]] — footer
-    * metadata, not a scan — so this is safe to call every batch from a
+    * when it compacted. Decision cost is [[segmentStats]] — one scan of
+    * the tombstone flag column — so this is safe to call every batch from a
     * maintenance cadence (`merge`'s own `maxDeltas` fold stays the
     * inline backstop). */
   def compactIfNeeded(spark: SparkSession, root: String,
@@ -404,17 +499,14 @@ object LogMirror {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     readManifest(fs, root) match {
       case Some(m) =>
-        reconcile(unionSegments(segmentFrames(spark, root, m)), m.keyCols)
+        reconcile(segmentScan(spark, fs, root, m, m.base, m.deltas), m.keyCols)
       case None =>
-        // never-written mirror: committed segments are always non-empty
-        // (versionedState of a non-empty batch keeps tombstones), so the
-        // only schema-less case is this one — bookkeeping columns only
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            s"`${Materialize.versionTs}` BIGINT, " +
-              s"`${Materialize.versionOffset}` BIGINT, " +
-              s"`${Materialize.deletedFlag}` BOOLEAN"))
+        // never-written mirror: the only manifest-less case, so the only
+        // one without a recorded schema — bookkeeping columns only
+        emptyFrame(spark, StructType.fromDDL(
+          s"`${Materialize.versionTs}` BIGINT, " +
+            s"`${Materialize.versionOffset}` BIGINT, " +
+            s"`${Materialize.deletedFlag}` BOOLEAN"))
     }
   }
 
@@ -449,13 +541,13 @@ object LogMirror {
             s"LogMirror at $root folded batches up to $b into its base; " +
               s"the state as of $version can no longer be reconstructed " +
               "(retention = maxDeltas)."))
-        val visible = m.copy(deltas = m.deltas.filter(_ <= version))
-        if (visible.base.isEmpty && visible.deltas.isEmpty)
-          // requested a version before the first commit: empty state in
-          // the live schema
-          read(spark, root).limit(0)
-        else Materialize.stripVersions(
-          reconcile(unionSegments(segmentFrames(spark, root, visible)),
+        val visible = m.deltas.filter(_ <= version)
+        Materialize.stripVersions(
+          if (m.base.isEmpty && visible.isEmpty)
+            // requested a version before the first commit: empty state
+            // in the live schema
+            emptyFrame(spark, m.schema)
+          else reconcile(segmentScan(spark, fs, root, m, m.base, visible),
             m.keyCols))
     }
   }
@@ -550,29 +642,25 @@ object LogMirror {
         val window = m.deltas.filter(_ > sinceVersion)
         if (window.isEmpty) {
           // consumer is caught up: empty feed in the live schema
-          val any = (m.deltas.lastOption.map(deltaPath(root, _)) orElse
-            m.base.map(basePath(root, _))).get
-          spark.read.parquet(any).drop("_bucket")
-            .withColumn(commitVersion, lit(-1L)).limit(0)
+          emptyFrame(spark, m.schema).withColumn(commitVersion, lit(-1L))
         } else {
-          val frames = window.map(v =>
-            spark.read.parquet(deltaPath(root, v)).drop("_bucket")
-              .withColumn(commitVersion, lit(v)))
+          // each row's commit version is its delta's id, read off the
+          // file path by the window's single scan
+          val windowRows = segmentScan(spark, fs, root, m, None, window,
+            tag = _.withColumn(commitVersion,
+              segmentId(col("_metadata.file_path"))))
           // commitVersion rides the payload through max_by, so each
           // surviving row carries the id of the batch that produced it
-          val windowNet = reconcile(unionSegments(frames), m.keyCols)
+          val windowNet = reconcile(windowRows, m.keyCols)
           val verCols = Seq(Materialize.versionTs, Materialize.versionOffset)
           // prior version per affected key, from KEY+VERSION columns
           // only — the parquet scan prunes the payload (bytes ∝ key and
           // version columns of the older segments, not the mirror)
-          val olderFrames =
-            (m.base.map(v => spark.read.parquet(basePath(root, v))).toSeq ++
-              m.deltas.filter(_ <= sinceVersion)
-                .map(v => spark.read.parquet(deltaPath(root, v))))
-              .map(_.select((m.keyCols ++ verCols).map(col): _*))
-          if (olderFrames.isEmpty) windowNet
+          val older = m.deltas.filter(_ <= sinceVersion)
+          if (m.base.isEmpty && older.isEmpty) windowNet
           else {
-            val prior = olderFrames.reduce(_.unionByName(_))
+            val prior = segmentScan(spark, fs, root, m, m.base, older)
+              .select((m.keyCols ++ verCols).map(col): _*)
               .join(windowNet.select(m.keyCols.map(col): _*), m.keyCols,
                 "left_semi")
               .groupBy(m.keyCols.map(col): _*)
@@ -589,9 +677,10 @@ object LogMirror {
     }
   }
 
-  /** Point lookup: the base read prunes to the key's `_bucket=`
-    * partition (manifest's stored n), each delta is key-filtered with
-    * row-group stats doing the pruning (segments are key-sorted) — then
+  /** Point lookup: one key-filtered scan of the segment set, probe
+    * literals typed from the manifest schema. A bucketed base prunes to
+    * the key's `_bucket=` partition (manifest's stored n); every other
+    * file is pruned by row-group stats (segments are key-sorted) — then
     * the handful of surviving rows reconcile. O(base partition +
     * #deltas row groups), never O(table). */
   def lookup(spark: SparkSession, root: String, keyCols: Seq[String],
@@ -600,28 +689,18 @@ object LogMirror {
     readManifest(fs, root) match {
       case None => Materialize.stripVersions(readVersioned(spark, root))
       case Some(m) =>
-        val schema = spark.read.parquet(
-          (m.base.map(basePath(root, _)) orElse
-            m.deltas.lastOption.map(deltaPath(root, _))).get).schema
         // typed literals: murmur3 hashes Int and Long differently, so an
-        // uncast probe would compute a bucket the row isn't in
+        // uncast probe would compute a bucket the row isn't in; the
+        // manifest's key types are the base's (a key widening refolds
+        // a bucketed base at once, commitDelta)
         val typed = keyCols.zip(keyValues).map { case (k, v) =>
-          lit(v).cast(schema(k).dataType)
+          lit(v).cast(m.schema(k).dataType)
         }
-        def keyFilter(df: DataFrame): DataFrame =
-          keyCols.zip(typed).foldLeft(df)((d, kv) => d.filter(col(kv._1) === kv._2))
-        val baseRows = m.base.map { v =>
-          val b = spark.read.parquet(basePath(root, v))
-          keyFilter(m.bucketCount match {
-            case Some(n) if b.columns.contains("_bucket") =>
-              b.filter(col("_bucket") === pmod(hash(typed: _*), lit(n)))
-            case _ => b
-          }).drop("_bucket")
-        }.toSeq
-        val deltaRows = m.deltas.map(v =>
-          keyFilter(spark.read.parquet(deltaPath(root, v))))
-        Materialize.stripVersions(
-          reconcile(unionSegments(baseRows ++ deltaRows), keyCols))
+        val rows = segmentScan(spark, fs, root, m, m.base, m.deltas,
+          bucketPrune = m.bucketCount.map(n => pmod(hash(typed: _*), lit(n))))
+          .filter(keyCols.zip(typed).map { case (k, v) => col(k) === v }
+            .reduce(_ && _))
+        Materialize.stripVersions(reconcile(rows, keyCols))
     }
   }
 }

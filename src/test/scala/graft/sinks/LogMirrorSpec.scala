@@ -169,6 +169,29 @@ class LogMirrorSpec extends SparkSpec {
       s"base lookup must prune on _bucket:\n$plan")
   }
 
+  test("bucketed base: a delta that widens the key column refolds the " +
+    "base, so lookups still find base-only keys") {
+    val root = Files.createTempDirectory("lm-look-widen").toString
+    def typed(c: DataFrame, idType: String): DataFrame =
+      c.withColumn("id", col("id").cast(idType))
+    // base-0 is bucketed by the murmur3 hash of an INT key
+    LogMirror.merge(spark, root, typed(changes((1L to 40L).map(i =>
+      (i, s"v$i", "r", 1000L, i)): _*), "INT"), keyCols, 0L, 16, Some(8))
+    LogMirror.compact(spark, root)
+    // batch 1 writes the key as BIGINT: probes now hash as longs
+    LogMirror.merge(spark, root, typed(changes((7L, "u7", "u", 2000L, 2000L)),
+      "BIGINT"), keyCols, 1L, 16, Some(8))
+    val found = (1L to 40L).map(k =>
+      k -> LogMirror.lookup(spark, root, keyCols, Seq(k))
+        .select("v").as[String].collect().toSeq)
+    val missed = found.collect { case (k, vs) if vs.isEmpty => k }
+    assert(missed.isEmpty, s"lookup missed base-only keys $missed")
+    assert(found.toMap.apply(7L) == Seq("u7"))
+    assert(found.toMap.apply(30L) == Seq("v30"))
+    assert(LogMirror.read(spark, root).schema("id").dataType ==
+      org.apache.spark.sql.types.LongType)
+  }
+
   test("changefeed: net effect of batches after the checkpoint, " +
     "latest-per-key across the window, deletes marked") {
     val root = Files.createTempDirectory("lm-feed").toString
@@ -405,16 +428,150 @@ class LogMirrorSpec extends SparkSpec {
   test("schema evolution: a delta with a new column backfills null " +
     "into base-era rows") {
     val root = Files.createTempDirectory("lm-evo").toString
-    merge(root, changes((1L, "a", "r", 1000L, 0L)), 0L)
+    // n is INT in the base era; batch 1 widens it to BIGINT and adds
+    // `extra`; batch 2 writes n narrow again and omits `extra`
+    def evolving(rows: Seq[(Long, String, Long, Option[Long], String, Long, Long)],
+                 nType: String, withExtra: Boolean): DataFrame =
+      rows.toDF("id", "v", "n", "extra", "op", "ts_ms", "offset")
+        .selectExpr(Seq("id", "v", s"CAST(n AS $nType) AS n") ++
+          (if (withExtra) Seq("extra") else Nil) ++
+          Seq("op", "ts_ms", "'t' AS topic", "0 AS partition", "offset"): _*)
+    LogMirror.merge(spark, root, evolving(Seq(
+      (1L, "a", 1L, None, "r", 1000L, 0L), (3L, "c", 3L, None, "r", 1000L, 1L)),
+      "INT", withExtra = false), keyCols, 0L, 16, None)
+    LogMirror.compact(spark, root) // base-0: n INT, no extra
+    val big = 5000000000L // past Int.MaxValue: only a BIGINT read holds it
+    LogMirror.merge(spark, root, evolving(Seq(
+      (2L, "b", big, Some(7L), "c", 2000L, 2L)), "BIGINT", withExtra = true),
+      keyCols, 1L, 16, None)
+    LogMirror.merge(spark, root, evolving(Seq(
+      (1L, "a2", 10L, None, "u", 3000L, 3L)), "INT", withExtra = false),
+      keyCols, 2L, 16, None)
+
+    def rows(df: DataFrame): Map[Long, (Long, Option[Long])] = {
+      assert(df.schema("n").dataType == org.apache.spark.sql.types.LongType,
+        s"n must read widened: ${df.schema.simpleString}")
+      df.select("id", "n", "extra").as[(Long, Long, Option[Long])]
+        .collect()
+        .map { case (id, n, e) => id -> (n, e) }.toMap
+    }
+    val head = Map(1L -> (10L, None), 2L -> (big, Some(7L)), 3L -> (3L, None))
+    assert(rows(LogMirror.read(spark, root)) == head)
+    assert(rows(LogMirror.readAsOf(spark, root, 1L)) ==
+      Map(1L -> (1L, None), 2L -> (big, Some(7L)), 3L -> (3L, None)))
+    val feed = LogMirror.changesSinceVersioned(spark, root, 0L)
+    assert(rows(feed) == Map(1L -> (10L, None), 2L -> (big, Some(7L))))
+    assert(feed.select("id", LogMirror.commitVersion).as[(Long, Long)]
+      .collect().toMap == Map(1L -> 2L, 2L -> 1L))
+    assert(rows(LogMirror.lookup(spark, root, keyCols, Seq(2L))) ==
+      Map(2L -> (big, Some(7L))))
+    assert(rows(LogMirror.lookup(spark, root, keyCols, Seq(3L))) ==
+      Map(3L -> (3L, None)))
+    // a second fold writes the widened, evolved base and keeps reading it
     LogMirror.compact(spark, root)
-    val evolved = Seq((2L, "b", 7L, "r", 2000L, 1L))
-      .toDF("id", "v", "extra", "op", "ts_ms", "offset")
-      .selectExpr("id", "v", "extra", "op", "ts_ms", "'t' AS topic",
-        "0 AS partition", "offset")
-    LogMirror.merge(spark, root, evolved, keyCols, 1L, 16, None)
-    assert(LogMirror.read(spark, root).count() == 2)
-    val byId = LogMirror.read(spark, root).select("id", "extra")
-      .as[(Long, Option[Long])].collect().toMap
-    assert(byId(1L).isEmpty && byId(2L).contains(7L))
+    assert(segmentNames(root) == Set("base-2"))
+    assert(rows(LogMirror.read(spark, root)) == head)
+    assert(rows(LogMirror.lookup(spark, root, keyCols, Seq(1L))) ==
+      Map(1L -> (10L, None)))
+  }
+
+  test("a type change that does not widen fails the commit; a " +
+    "schema-less manifest is rejected naming the root") {
+    val root = Files.createTempDirectory("lm-evo-bad").toString
+    merge(root, changes((1L, "a", "r", 1000L, 0L)), 0L)
+    val clash = Seq((2L, 5L, "r", 2000L, 1L)).toDF("id", "v", "op", "ts_ms", "offset")
+      .selectExpr("id", "v", "op", "ts_ms", "'t' AS topic", "0 AS partition", "offset")
+    val e = intercept[RuntimeException](merge(root, clash, 1L))
+    assert(e.getMessage.contains("does not widen"), e.getMessage)
+    assert(state(root) == Map(1L -> "a"), "the failed commit changed nothing")
+    // strip the s: line the way a manifest from before it would read
+    val fs = fsOf(root)
+    val mf = fs.listStatus(new Path(root)).map(_.getPath)
+      .find(_.getName.startsWith("MANIFEST-")).get
+    val in = fs.open(mf)
+    val kept = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filterNot(_.startsWith("s:")).mkString("", "\n", "\n")
+    finally in.close()
+    val out = fs.create(mf, true)
+    try out.write(kept.getBytes("UTF-8")) finally out.close()
+    val e2 = intercept[RuntimeException](LogMirror.read(spark, root))
+    assert(e2.getMessage.contains(root) && e2.getMessage.contains("s:"),
+      e2.getMessage)
+  }
+
+  test("read shape: building read, changefeed, lookup and segmentStats " +
+    "frames over a base + 6 deltas launches no Spark job; read plans one " +
+    "parquet scan, two for a bucketed base") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val group = "lm-read-shape"
+    val marker = "lm-read-shape-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .filter(_ == group)
+          .foreach(_ => jobs.add(
+            if (e.properties.getProperty("spark.job.description") == marker)
+              marker
+            else s"job ${e.jobId}"))
+    }
+    /** Jobs `build` launches: a marker job follows it on the same
+      * thread, and the listener bus delivers in order, so once the
+      * marker arrives every earlier job start has too. */
+    def jobsLaunchedBy(build: => Unit): Seq[String] = {
+      jobs.clear()
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, "read shape")
+      try {
+        build
+        sc.setJobDescription(marker)
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.contains(marker), "listener never saw the marker job")
+      jobs.toArray(Array.empty[String]).toSeq.filterNot(_ == marker)
+    }
+    def parquetScans(df: DataFrame): Int = {
+      val plan: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      plan.collect { case s: FileSourceScanExec => s }.size
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (buckets <- Seq(None, Some(4))) {
+      val root = Files.createTempDirectory("lm-shape").toString
+      LogMirror.merge(spark, root, changes((1L to 100L).map(i =>
+        (i, s"v$i", "r", 1000L, i)): _*), keyCols, 0L, 16, buckets)
+      LogMirror.compact(spark, root)
+      (1L to 6L).foreach(b => LogMirror.merge(spark, root,
+        changes((b, s"u$b", "u", 2000L + b, 1000L + b), (200L + b, "n", "c",
+          2000L + b, 2000L + b)), keyCols, b, 16, buckets))
+      assert(segmentNames(root).count(_.startsWith("delta-")) == 6)
+      var frames = Seq.empty[DataFrame]
+      val launched = jobsLaunchedBy {
+        frames = Seq(
+          LogMirror.read(spark, root),
+          LogMirror.changesSinceVersioned(spark, root, 2L),
+          LogMirror.lookup(spark, root, keyCols, Seq(3L)),
+          LogMirror.segmentStats(spark, root))
+      }
+      assert(launched.isEmpty,
+        s"building the frames (buckets=$buckets) launched jobs: $launched")
+      val want = if (buckets.isDefined) 2 else 1
+      assert(parquetScans(frames.head) == want,
+        s"read must plan $want parquet scan(s):\n" +
+          frames.head.queryExecution.executedPlan)
+      // and the frames still answer correctly
+      assert(state(root)(3L) == "u3" && state(root).size == 106)
+      assert(frames(1).count() == 8) // batches 3..6: 2 keys each
+      assert(frames(2).select("v").as[String].collect().toSeq == Seq("u3"))
+      assert(frames(3).as[(String, Long, Long, Long)].collect().toSet ==
+        Set(("base", 0L, 100L, 0L)) ++ (1L to 6L).map(("delta", _, 2L, 0L)))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -155,7 +155,7 @@ object Bench {
     // The fixture is PERSISTED before timing: ordersCdcEvents BUILDS
     // Kafka-shaped JSON envelopes from the orders table (to_json over
     // every row), and an unpersisted frame re-ran that generator inside
-    // every timed batch — MergeProfile attributed ~1.5 s of the 4.4 s
+    // every timed batch — a stage profile attributed ~1.5 s of the 4.4 s
     // batch to fixture construction, which a real pipeline never pays
     // (its bytes arrive from the broker; the streaming section already
     // collects them upfront for the same reason).
@@ -188,11 +188,10 @@ object Bench {
       (System.nanoTime() - tp0) / 1e9
     }
 
-    // Mirror write amplification: merge one identical SMALL batch into
-    // an identically seeded mirror under each layout and report the
-    // bytes that batch wrote. Swap rewrites the table, bucketed rewrites
-    // every touched bucket, log-structured writes only the batch's delta
-    // segment — per-batch bytes ∝ batch size, the 100 TB merge property.
+    // Mirror write amplification: merge one SMALL batch into a seeded
+    // mirror and report the bytes that batch wrote. The log-structured
+    // mirror writes only the batch's delta segment — per-batch bytes ∝
+    // batch size, the 100 TB merge property.
     val smallBatch = raw.limit(10).persist()
     smallBatch.count()
     def batchWriteBytes(sink: graft.sinks.MirrorSink): Long = {
@@ -214,8 +213,6 @@ object Bench {
       }
       sum
     }
-    val wampSwap = batchWriteBytes(graft.sinks.SwapMirror(None))
-    val wampBucket = batchWriteBytes(graft.sinks.BucketedMirrorSink(32))
     val wampLog = batchWriteBytes(graft.sinks.LogMirrorSink(maxDeltas = 64))
     smallBatch.unpersist()
 
@@ -496,7 +493,7 @@ object Bench {
     val detailsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS",
       "bench_details.json")
     val detailsJson =
-      s"""{"sf":"$sfDir","queries":$qs$failedJson,"cdc_stage_sec":$stageJson,"small_batch_write_bytes":{"swap":$wampSwap,"bucketed":$wampBucket,"log":$wampLog},"stream_runs":$streamRunsJson,"stream_stage_p95_ms":$streamStageJson,"shuffle_bytes":$shuffleJson,"load":$loadJson}"""
+      s"""{"sf":"$sfDir","queries":$qs$failedJson,"cdc_stage_sec":$stageJson,"small_batch_write_bytes":{"log":$wampLog},"stream_runs":$streamRunsJson,"stream_stage_p95_ms":$streamStageJson,"shuffle_bytes":$shuffleJson,"load":$loadJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailsPath), detailsJson)
     catch { case e: Throwable =>

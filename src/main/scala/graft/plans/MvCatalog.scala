@@ -161,7 +161,7 @@ object MvCatalog {
     * dirs (any change to either side falls the query through);
     * `freshCheck` overrides it for version-maintained views — e.g. an
     * [[graft.sinks.IncrementalJoinView]] whose checkpoint versions must
-    * equal the source mirrors' current versions, or a swap-mirror chain
+    * equal the source mirrors' current versions, or a view chain
     * comparing `_GRAFT_BATCH` markers. `sourcePredicate` declares the
     * per-side row predicate the view is built under (mirror reads are
     * `NOT _v_deleted`-filtered scans — pass [[LiveMirrorRows]]). */
@@ -264,16 +264,19 @@ object MvCatalog {
     * aggregate the table's mirror directly. Freshness is VERSION-based
     * instead of file listings: the view state's applied-batch
     * watermark (`_b_upto`) must equal the mirror's last merged batch
-    * id (the swap layout's `_GRAFT_BATCH` marker / the log layout's
-    * manifest id) — a mirror merge the view hasn't folded yet makes
-    * the claim stale, and queries fall through to the base scan until
-    * the view catches up. Registered aggregates: `count(*)` → n_rows
-    * plus the spec's sum/max/min columns (HLL distinct sketches are
-    * not relational aggregates and are not claimed).
+    * id (`MirrorSink.lastBatchId`: the log layout's manifest id) — a
+    * mirror merge the view hasn't folded yet makes the claim stale, and
+    * queries fall through to the base scan until the view catches up.
+    * Registered aggregates: `count(*)` → n_rows plus the spec's
+    * sum/max/min columns (HLL distinct sketches are not relational
+    * aggregates and are not claimed).
     *
-    * Only swap-layout mirrors are rewritable (queries over a
-    * LOG-layout mirror read through `LogMirror.read`'s reconcile plan,
-    * never a bare scan the rule could match). */
+    * The claim is keyed by the table's mirror root: an aggregate over
+    * `LogMirror.read` of that root rewrites when its scans are exactly
+    * the current manifest's segments
+    * ([[graft.sinks.LogMirror.rootOfRead]]) and it keeps only live rows
+    * (`NOT _v_deleted`, absorbed by [[LiveMirrorRows]]). A versioned
+    * read, a time-travel window or a raw segment scan never matches. */
   def registerMaintained(spark: SparkSession,
                          cfg: graft.streaming.CdcPipeline.Config,
                          viewName: String): Unit = {
@@ -296,7 +299,7 @@ object MvCatalog {
           // the _GRAFT_BATCH marker rides the view swap — one
           // filesystem read instead of a per-compile Spark job on the
           // state parquet; marker-less legacy states fall back
-          graft.sinks.SwapMirror
+          graft.core.SwapPublish
             .readBatchMarker(fs, new Path(stateDir)).getOrElse {
               import org.apache.spark.sql.functions.{coalesce, lit, max => fmax}
               viewState().agg(coalesce(fmax(
@@ -306,7 +309,7 @@ object MvCatalog {
         } catch { case _: Exception => false } // no state yet = stale
       }
     }
-    val q = qualify(spark, s"$tableRoot/live")
+    val q = qualify(spark, tableRoot)
     // the claim's grain is the view's EFFECTIVE grouping — declared
     // columns PLUS derived cell columns: claiming only groupCols would
     // let a coarser query take the exact-match projection path and

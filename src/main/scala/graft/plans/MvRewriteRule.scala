@@ -57,30 +57,72 @@ object MvRewriteRule extends Rule[LogicalPlan]
       case f: Filter => rewriteTopK(f).getOrElse(f)
     }
 
-  private case class Src(rel: LogicalRelation, filter: Option[Expression])
+  /** A rewrite source: the location a claim is registered under, the
+    * source's column names, its residual filter, and — for a
+    * [[graft.sinks.LogMirror]] read — `packed`, the reconcile's
+    * latest-row struct whose fields the plan above reads as columns. */
+  private case class Src(loc: String, columns: Seq[String],
+                         filter: Option[Expression],
+                         packed: Option[Attribute] = None) {
+    /** `e` with every field read of the packed struct as a plain column
+      * of the field's name; None if the struct is still referenced. */
+    def unpacked(e: Expression): Option[Expression] = packed match {
+      case None => Some(e)
+      case Some(p) =>
+        val flat = e.transform {
+          case g @ GetStructField(a: AttributeReference, _, _)
+            if a.exprId == p.exprId =>
+            AttributeReference(g.extractFieldName, g.dataType, g.nullable)()
+        }
+        Option.when(!flat.references.contains(p))(flat)
+    }
+  }
 
-  /** The scan under the aggregate, looked through a pruning projection
+  /** The source under the aggregate, looked through a pruning projection
     * of bare attributes (what ColumnPruning inserts) and at most one
     * deterministic, subquery-free Filter — predicates over group
     * columns commute with the grouping, so [[rewrite]] can re-apply
-    * them over the view's group values. */
+    * them over the view's group values. A source is a single-root
+    * parquet scan, or a [[graft.sinks.LogMirror]] read of a mirror's
+    * current segment set ([[graft.sinks.LogMirror.rootOfRead]]), whose
+    * live-row filter then sits between the reconcile and the
+    * projection unpacking its latest-row struct. */
   private def sourceOf(plan: LogicalPlan): Option[Src] =
     plan match {
-      case r: LogicalRelation => Some(Src(r, None))
+      case r: LogicalRelation =>
+        locationOf(r).map(Src(_, r.output.map(_.name), None))
+      case a: Aggregate =>
+        graft.sinks.LogMirror.rootOfRead(a).map { root =>
+          val keys = a.groupingExpressions.collect { case k: Attribute => k }
+          val packed = a.output.find(o => !keys.exists(_.exprId == o.exprId))
+          val fields = packed.toSeq.flatMap(_.dataType match {
+            case st: org.apache.spark.sql.types.StructType => st.fieldNames.toSeq
+            case _ => Nil
+          })
+          Src(root, keys.map(_.name) ++ fields, None, packed)
+        }
       // bare-attribute pruning projections, plus IDENTITY aliases
       // (Alias(attr, attr.name)) — the shape [[rewriteJoin]] emits, so
       // an agg-view claim over a JOIN VIEW composes with the join
-      // rewrite in the same pass (the chained star-rollup case)
+      // rewrite in the same pass (the chained star-rollup case) — and,
+      // over a log-mirror read, same-named field reads of its struct
       case Project(ps, child) if ps.forall {
         case _: AttributeReference => true
         case Alias(a: AttributeReference, name) => a.name == name
+        case Alias(g @ GetStructField(_: AttributeReference, _, _), name) =>
+          g.extractFieldName == name
         case _ => false
-      } => sourceOf(child)
+      } => sourceOf(child).filter(s => ps.forall {
+        case Alias(GetStructField(a: AttributeReference, _, _), _) =>
+          s.packed.exists(_.exprId == a.exprId)
+        case _ => true
+      })
       case Filter(cond, child)
         if cond.deterministic &&
           cond.find(_.isInstanceOf[PlanExpression[_]]).isEmpty =>
         sourceOf(child).flatMap(s =>
-          if (s.filter.isEmpty) Some(s.copy(filter = Some(cond))) else None)
+          if (s.filter.isEmpty) s.unpacked(cond).map(c => s.copy(filter = Some(c)))
+          else None)
       case _ => None
     }
 
@@ -116,8 +158,7 @@ object MvRewriteRule extends Rule[LogicalPlan]
     val spark = SparkSession.active
     for {
       src <- sourceOf(agg.child)
-      loc <- locationOf(src.rel)
-      entry <- MvCatalog.freshEntry(spark, loc)
+      entry <- MvCatalog.freshEntry(spark, MvCatalog.qualify(spark, src.loc))
       groupAttrs <- bareAttrs(agg.groupingExpressions)
       names = groupAttrs.map(_.name)
       if names.distinct == names && names.toSet.subsetOf(entry.groupCols.toSet)
@@ -186,10 +227,8 @@ object MvRewriteRule extends Rule[LogicalPlan]
       for {
         srcF <- sourceOf(factSide)
         srcD <- sourceOf(dimSide)
-        locF <- locationOf(srcF.rel)
-        locD <- locationOf(srcD.rel)
         entry <- MvCatalog.freshJoinEntry(spark,
-          MvCatalog.qualify(spark, locF), MvCatalog.qualify(spark, locD))
+          MvCatalog.qualify(spark, srcF.loc), MvCatalog.qualify(spark, srcD.loc))
         // condition = exactly the registered same-named key equalities
         pairs <- keyPairs(j.condition.get, factSide, dimSide)
         if pairs.forall { case (f, d) => f.name == d.name } &&
@@ -239,8 +278,7 @@ object MvRewriteRule extends Rule[LogicalPlan]
         // shared key) would rebind ambiguously — refuse
         if remaining.forall(_.references.forall(a =>
           entry.joinKeys.contains(a.name) ||
-            !(srcF.rel.output.exists(_.name == a.name) &&
-              srcD.rel.output.exists(_.name == a.name))))
+            !(srcF.columns.contains(a.name) && srcD.columns.contains(a.name))))
         child <- remaining match {
           case Nil => Some(viewPlan)
           case cs => rebind(cs.reduce(And), viewPlan).map(Filter(_, viewPlan))
@@ -303,8 +341,7 @@ object MvRewriteRule extends Rule[LogicalPlan]
           wgl.child
         case other => other
       })
-      loc <- locationOf(src.rel)
-      entry <- MvCatalog.freshTopKEntry(spark, MvCatalog.qualify(spark, loc))
+      entry <- MvCatalog.freshTopKEntry(spark, MvCatalog.qualify(spark, src.loc))
       partAttrs <- bareAttrs(w.partitionSpec)
       if partAttrs.map(_.name).sorted == entry.partitionCols.sorted
       orderPairs <- {

@@ -2,6 +2,10 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CreateNamedStruct, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, MaxBy}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
@@ -12,12 +16,11 @@ import graft.cdc.{Materialize, SchemaEvolution}
   * manifest pointer — the layout that makes a merge's write cost
   * proportional to the BATCH, not to the mirror or even a bucket of it.
   *
-  * The other two parquet-native layouts both rewrite state a batch
-  * didn't change: [[SwapMirror]] rewrites the whole table,
-  * [[BucketedMirror]] rewrites every touched bucket (a 1-row change
-  * still rewrites its whole ~GB bucket at scale). Here a merge writes
-  * ONLY the batch collapsed to latest-per-key — the delta segment —
-  * and never reads the base at all:
+  * A full-rewrite mirror rewrites the whole table per batch, and a
+  * bucketed one every bucket the batch touches (a 1-row change still
+  * rewrites its whole ~GB bucket at scale). Here a merge writes ONLY
+  * the batch collapsed to latest-per-key — the delta segment — and
+  * never reads the base at all:
   *
   *   - merge: `versionedState(batch)` → `segments/delta-<batchId>`,
   *     manifest appends the segment. Zero base reads, write bytes
@@ -53,10 +56,9 @@ import graft.cdc.{Materialize, SchemaEvolution}
   * column reads it as null. Every commit (merge, fold, purge) rewrites
   * it, and a manifest without it is rejected.
   *
-  * Crash safety follows [[BucketedMirror]]'s versioned-dir + pointer
-  * design: segment dirs land BEFORE the manifest commit (tmp-file +
-  * atomic rename, readers take the highest manifest id), so a crash at
-  * any point leaves the previous manifest pointing at complete
+  * Crash safety is a versioned-dir + pointer design: segment dirs land
+  * BEFORE the manifest commit (tmp-file + atomic rename, readers take
+  * the highest manifest id), so a crash at any point leaves the previous manifest pointing at complete
   * segments. Replays are idempotent — a replayed batch overwrites its
   * own delta dir and recommits an identical manifest; tombstones are
   * RETAINED through compaction, so a replayed batch containing a
@@ -291,8 +293,7 @@ object LogMirror {
     * before manifests, a replayed batch overwrites its own slot — and a
     * crash mid-loop leaves the remaining tables' manifests at the prior
     * batch, which the replay completes. Steady-state job count is O(1)
-    * in the table count instead of O(tables) — the log-structured
-    * analog of the swap layout's group merge. `changes` must carry
+    * in the table count instead of O(tables). `changes` must carry
     * `tableCol`; tables absent from the batch are untouched. */
   def mergeGroup(spark: SparkSession, mirrorRoot: String, changes: DataFrame,
                  tables: Seq[String], keyCols: Seq[String], batchId: Long,
@@ -481,9 +482,9 @@ object LogMirror {
 
   /** Drop segment dirs the committed manifest no longer references
     * (superseded bases, folded deltas, crash leftovers). Single-writer
-    * discipline, same as [[BucketedMirror]]'s version sweep: a reader
-    * holding the immediately-previous manifest may race a compaction
-    * sweep — run compaction off the read path or tolerate a retry. */
+    * discipline: a reader holding the immediately-previous manifest may
+    * race a compaction sweep — run compaction off the read path or
+    * tolerate a retry. */
   private def sweep(fs: FileSystem, root: String, m: Manifest): Unit = {
     val dir = new Path(s"$root/segments")
     if (!fs.exists(dir)) return
@@ -513,6 +514,70 @@ object LogMirror {
   /** Live current-state read. */
   def read(spark: SparkSession, root: String): DataFrame =
     Materialize.stripVersions(readVersioned(spark, root))
+
+  /** The root of the mirror whose CURRENT state `plan` reconciles: Some
+    * only when `plan` is [[readVersioned]]'s reconcile — grouped by the
+    * manifest's key columns, one `max_by` of the scanned columns packed
+    * under their own names and ordered by the stored version — directly
+    * over parquet scans whose paths are exactly the latest manifest's
+    * base and deltas. A plan pinned to an older segment set (built
+    * before a later commit), a time-travel or changefeed window, a
+    * key-filtered lookup or a raw segment scan reads other rows and
+    * gets None. This lets a plan rewrite recognize a mirror read
+    * without knowing the layout ([[graft.plans.MvRewriteRule]]); the
+    * live-row filter above it is the caller's to check. */
+  def rootOfRead(plan: LogicalPlan): Option[String] = plan match {
+    case Aggregate(groups, aggs, child, _) =>
+      val keys = groups.collect { case a: AttributeReference => a }
+      // the field names of a struct that packs columns under their own
+      // names; None for any other expression
+      def packed(e: Expression): Option[Seq[String]] = e match {
+        case s: CreateNamedStruct =>
+          val names = s.names.map(_.toString)
+          Option.when(names.zip(s.valExprs).forall {
+            case (n, a: AttributeReference) => n == a.name
+            case _ => false
+          })(names)
+        case _ => None
+      }
+      val reconciles = aggs.forall {
+        case a: AttributeReference => keys.exists(_.exprId == a.exprId)
+        case Alias(AggregateExpression(MaxBy(value, order), _, false, None, _), _) =>
+          packed(value).isDefined && packed(order).contains(
+            Seq(Materialize.versionTs, Materialize.versionOffset))
+        case _ => false
+      } && aggs.count(!_.isInstanceOf[AttributeReference]) == 1
+      for {
+        paths <- Option.when(keys.size == groups.size && reconciles)(
+          scanPaths(child)).flatten
+        segs = paths.map(_.getParent)
+        root <- segs.map(_.getParent).distinct match {
+          case Seq(r) if segs.forall(_.getName == "segments") => Some(r)
+          case _ => None
+        }
+        fs = root.getFileSystem(
+          SparkSession.active.sparkContext.hadoopConfiguration)
+        m <- scala.util.Try(readManifest(fs, root.toString)).toOption.flatten
+        if m.keyCols == keys.map(_.name)
+        live = m.base.map(v => s"base-$v").toSeq ++ m.deltas.map(v => s"delta-$v")
+        if paths.map(_.getName).sorted == live.sorted
+      } yield root.toString
+    case _ => None
+  }
+
+  /** Root paths of the parquet scans under a reconcile: scans, unions
+    * of them, and column-pruning projections only — None when anything
+    * else (a filter, a join, a non-file relation) sits in between. */
+  private def scanPaths(plan: LogicalPlan): Option[Seq[Path]] = plan match {
+    case LogicalRelation(fsr: HadoopFsRelation, _, _, _, _) =>
+      Some(fsr.location.rootPaths)
+    case Project(ps, child) if ps.forall(_.isInstanceOf[AttributeReference]) =>
+      scanPaths(child)
+    case Union(children, _, _) =>
+      val each = children.map(scanPaths)
+      Option.when(each.forall(_.isDefined))(each.flatMap(_.get))
+    case _ => None
+  }
 
   /** Version time travel: the mirror's state as of committed batch
     * `version` — reconcile the base plus ONLY the delta segments with

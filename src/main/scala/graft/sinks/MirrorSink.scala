@@ -1,8 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.cdc.Materialize
 
@@ -15,21 +13,12 @@ import graft.cdc.Materialize
   * Delta/Iceberg-style row-level MERGE sink implements `merge` by
   * feeding [[Materialize]]'s versioned change batch to its MERGE
   * command and the reads by snapshot queries — no pipeline changes
-  * (plug it in via `CdcPipeline.Config.sinkOverride`). Three
-  * parquet-native implementations ship in-repo, in increasing
-  * write-efficiency order:
-  *
-  *   - [[SwapMirror]] — full-rewrite + atomic two-rename publish.
-  *     Simple and crash-safe; write amplification ∝ mirror size
-  *     (fine while batches are a meaningful fraction of the table).
-  *   - [[BucketedMirrorSink]] — hash-bucketed versioned dirs + manifest
-  *     pointer ([[BucketedMirror]]): a batch rewrites only the buckets
-  *     it touches.
-  *   - [[LogMirrorSink]] — log-structured base+delta segments
-  *     ([[LogMirror]]): a batch writes ONLY its own delta (bytes ∝
-  *     batch, not mirror or bucket), reads reconcile by version,
-  *     compaction amortized — the row-level-MERGE cost model on
-  *     immutable storage, and the 100 TB merge path.
+  * (plug it in via `CdcPipeline.Config.sinkOverride`). The one
+  * parquet-native implementation in-repo, and the pipeline's default,
+  * is [[LogMirrorSink]]: log-structured base+delta segments
+  * ([[LogMirror]]) where a batch writes ONLY its own delta (bytes ∝
+  * batch, not mirror), reads reconcile by version and compaction is
+  * amortized — the row-level-MERGE cost model on immutable storage.
   *
   * Contract: `merge` must be idempotent under batch replay (the
   * pipeline runs in foreachBatch, at-least-once), and `read` must never
@@ -38,7 +27,7 @@ import graft.cdc.Materialize
   * Hard purges (right-to-be-forgotten, [[LogMirror.purgeKeys]]) leave
   * NO source record to replicate, so [[ChangefeedReplicator]] can
   * propagate them to a target only when the target sink purges natively
-  * (LogMirror does); other layouts need an out-of-band purge on each
+  * (LogMirror does); other sinks need an out-of-band purge on each
   * replica.
   */
 trait MirrorSink extends Serializable {
@@ -65,159 +54,8 @@ trait MirrorSink extends Serializable {
     * one — the freshness version the MV-rewrite integration compares
     * against a maintained view's applied-batch watermark
     * ([[graft.plans.MvCatalog.registerMaintained]]). None = unknown
-    * (layout doesn't version) → the integration conservatively treats
+    * (the sink doesn't version) → the integration conservatively treats
     * the view as stale and queries fall through to the base table. */
   def lastBatchId(spark: SparkSession, tableRoot: String): Option[Long] =
     None
-}
-
-/** Full-rewrite mirror with atomic two-rename publish — the plain
-  * parquet stand-in for a transactional sink. With `bucketCount` set
-  * the rewrite is partitioned by `_bucket = pmod(hash(pk), n)` so point
-  * lookups prune to one partition dir even on the swap layout. */
-final case class SwapMirror(bucketCount: Option[Int] = None) extends MirrorSink {
-  import SwapMirror._
-
-  private def bucketExpr(keyCols: Seq[String], n: Int) =
-    pmod(hash(keyCols.map(col): _*), lit(n))
-
-  override def merge(spark: SparkSession, tableRoot: String, changes: DataFrame,
-                     keyCols: Seq[String], batchId: Long): Unit = {
-    val live = new Path(s"$tableRoot/live")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverMirror(fs, tableRoot)
-    val merged =
-      if (fs.exists(live)) Materialize.merge(
-        spark.read.parquet(live.toString).drop("_bucket"), changes, keyCols)
-      else Materialize.versionedState(changes, keyCols)
-    atomicSwap(fs, tableRoot) { staging =>
-      val writer = bucketCount match {
-        case Some(n) => merged
-          .withColumn("_bucket", bucketExpr(keyCols, n))
-          .repartition(n, col("_bucket"))
-          .write.partitionBy("_bucket")
-        case None => merged.write
-      }
-      writer.mode("overwrite").parquet(staging.toString)
-      SwapMirror.writeBatchMarker(fs, staging, batchId)
-    }
-  }
-
-  override def lastBatchId(spark: SparkSession,
-                           tableRoot: String): Option[Long] =
-    SwapMirror.readBatchMarker(
-      new Path(s"$tableRoot/live")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new Path(s"$tableRoot/live"))
-
-  override def read(spark: SparkSession, tableRoot: String): DataFrame =
-    Materialize.stripVersions(
-      spark.read.parquet(s"$tableRoot/live")).drop("_bucket")
-
-  override def lookup(spark: SparkSession, tableRoot: String,
-                      keyCols: Seq[String], keyValues: Seq[Any]): DataFrame = {
-    val base = spark.read.parquet(s"$tableRoot/live")
-    // cast each probe literal to the STORED key type before hashing:
-    // murmur3 hashes an Int and a Long differently, so an uncast literal
-    // of the wrong width would compute a bucket the row isn't in and the
-    // lookup would silently return empty
-    val typedKeys = keyCols.zip(keyValues).map { case (k, v) =>
-      lit(v).cast(base.schema(k).dataType)
-    }
-    val keyed = keyCols.zip(typedKeys).foldLeft(
-      bucketCount match {
-        // a mirror written before bucketing was enabled has no _bucket
-        // partition column — fall back to the unpruned scan
-        case Some(n) if base.columns.contains("_bucket") =>
-          base.filter(col("_bucket") === pmod(hash(typedKeys: _*), lit(n)))
-        case _ => base
-      })((df, kv) => df.filter(col(kv._1) === kv._2))
-    Materialize.stripVersions(keyed).drop("_bucket")
-  }
-}
-
-object SwapMirror {
-
-  /** Batch-id marker riding the atomic swap: "_"-prefixed so parquet
-    * readers and listing fingerprints ignore it; published in the SAME
-    * rename as the data, so the marker can never disagree with the
-    * state next to it. */
-  private[graft] def writeBatchMarker(fs: FileSystem, dir: Path,
-                                      batchId: Long): Unit =
-    if (batchId >= 0)
-      graft.core.LocalFs.writeSmall(fs, new Path(dir, "_GRAFT_BATCH"),
-        batchId.toString.getBytes("UTF-8"))
-
-  private[graft] def readBatchMarker(fs: FileSystem,
-                                     dir: Path): Option[Long] = {
-    val p = new Path(dir, "_GRAFT_BATCH")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](32)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } catch { case _: Exception => None } finally in.close()
-    }
-  }
-
-  /** Two-rename atomic publish of a freshly-written `.staging` dir as
-    * `live` (recovery for the crash window between the renames is
-    * [[recoverMirror]]). */
-  def atomicSwap(fs: FileSystem, root: String)(write: Path => Unit): Unit = {
-    val live = new Path(s"$root/live")
-    val staging = new Path(s"$root/.staging")
-    // the table root must exist BEFORE `write` renames data into
-    // staging: Hadoop's local rename into a missing parent silently
-    // degrades to a full file COPY (measured 365 ms vs 1 ms for a
-    // 32-file segment — it dominated every first-batch swap)
-    graft.core.LocalFs.mkdirs(fs, new Path(root))
-    fs.delete(staging, true)
-    write(staging)
-    val old = new Path(s"$root/.old")
-    fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(staging, live)
-    fs.delete(old, true)
-  }
-
-  /** Crash recovery for the two-rename swap: if a previous merge died
-    * between rename(live,.old) and rename(.staging,live) there is no
-    * live dir — without recovery the next merge would rebuild the mirror
-    * from one batch and silently drop all prior state (the checkpoint
-    * prevents replaying earlier batches). A completely-written staging
-    * dir (Spark's _SUCCESS marker) is the newest state → finish the
-    * swap; otherwise .old is the last consistent state → roll back.
-    * A crash mid-write leaves live intact, so nothing to do then. */
-  def recoverMirror(fs: FileSystem, tableRoot: String): Unit = {
-    val live = new Path(s"$tableRoot/live")
-    if (!fs.exists(live)) {
-      val staging = new Path(s"$tableRoot/.staging")
-      val old = new Path(s"$tableRoot/.old")
-      if (fs.exists(new Path(staging, "_SUCCESS"))) {
-        fs.rename(staging, live)
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        fs.rename(old, live)
-      }
-    }
-  }
-}
-
-/** [[BucketedMirror]] behind the [[MirrorSink]] interface: versioned
-  * per-bucket dirs + atomic manifest pointer; a merge reads and
-  * rewrites ONLY the touched buckets. */
-final case class BucketedMirrorSink(nBuckets: Int) extends MirrorSink {
-
-  override def merge(spark: SparkSession, tableRoot: String, changes: DataFrame,
-                     keyCols: Seq[String], batchId: Long): Unit =
-    BucketedMirror.merge(spark, tableRoot, changes, keyCols, nBuckets, batchId)
-
-  override def read(spark: SparkSession, tableRoot: String): DataFrame =
-    BucketedMirror.read(spark, tableRoot)
-
-  override def lookup(spark: SparkSession, tableRoot: String,
-                      keyCols: Seq[String], keyValues: Seq[Any]): DataFrame =
-    BucketedMirror.lookup(spark, tableRoot, keyCols, keyValues, nBuckets)
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.cdc.{Envelope, Materialize}
+import graft.cdc.Envelope
+import graft.core.SwapPublish
 
 /** The CDC replication pipeline as a Structured Streaming job — the
   * Spark-native equivalent of the reference's Kafka Connect sink chain
@@ -28,10 +29,12 @@ import graft.cdc.{Envelope, Materialize}
   *     the merge backfills nulls.
   *
   * Scale design: the per-batch merge is one hash aggregation keyed by PK
-  * per table; shuffle volume is bounded by batch size + mirror size. At
-  * 100 TB the mirror read/rewrite would be a Delta/Iceberg MERGE (or
-  * JDBC upsert, matching the reference) — the batch-side plan is
-  * identical, only the sink swaps, so the merge logic stays shared with
+  * per table group, and the default sink ([[graft.sinks.LogMirrorSink]])
+  * writes only the batch's delta segment, so shuffle and write volume
+  * are bounded by batch size, not mirror size. A Delta/Iceberg MERGE (or
+  * JDBC upsert, matching the reference) plugs in through the
+  * [[graft.sinks.MirrorSink]] trait — the batch-side plan is identical,
+  * only the sink swaps, so the merge logic stays shared with
   * [[graft.cdc.Materialize]].
   */
 object CdcPipeline {
@@ -71,14 +74,6 @@ object CdcPipeline {
   /** @param rowSchema   default row schema (tables without an override)
     * @param keyCols     default primary-key columns
     * @param tableSpecs  per-table overrides (schema registry)
-    * @param bucketCount when set, mirrors are written partitioned by
-    *   `_bucket = pmod(hash(keys), n)` — at 100 TB this is what makes a
-    *   key lookup a partition-pruned read instead of a full scan, and a
-    *   mirror-vs-batch merge a co-partitioned join.
-    * @param incrementalMirror with bucketCount set, store mirrors in the
-    *   [[graft.sinks.BucketedMirror]] manifest layout: a merge reads and
-    *   rewrites ONLY the buckets the batch touches (write amplification
-    *   ∝ touched buckets, not mirror size) — the 100 TB merge path.
     * @param aggViews    maintained aggregate views by name; each batch
     *   folds its deltas into the view state (O(touched groups), never a
     *   mirror rescan), guarded by the applied batch id for idempotence
@@ -86,8 +81,8 @@ object CdcPipeline {
     * @param sinkOverride plug in any [[graft.sinks.MirrorSink]] — the
     *   adapter point for transactional table formats (a Delta/Iceberg
     *   MERGE sink implements the trait; the pipeline is unchanged).
-    *   Unset, the sink derives from the flags: `incrementalMirror` →
-    *   [[graft.sinks.BucketedMirrorSink]], else [[graft.sinks.SwapMirror]]. */
+    *   Unset, mirrors are [[graft.sinks.LogMirrorSink]]`()`; set it to a
+    *   LogMirrorSink to choose `maxDeltas` or a bucketed base. */
   final case class Config(
       rowSchema: StructType,
       keyCols: Seq[String],
@@ -95,16 +90,6 @@ object CdcPipeline {
       dlqDir: String,
       checkpointDir: String,
       triggerMs: Long = 500L,
-      bucketCount: Option[Int] = None,
-      // Target mirror file size for the swap (non-bucketed) layout:
-      // write tasks are sized per table from the LIVE mirror's byte
-      // count (ceil(bytes / target)), so a 30k-row bench table writes
-      // ONE file instead of shuffle-partitions-many (the r11 merge
-      // floor was the per-file create fork tax of a 288-file dynamic-
-      // partition commit on non-native Hadoop), while a 100 TB table
-      // still fans out to bytes/128MB parallel writers.
-      targetFileBytes: Long = 128L << 20,
-      incrementalMirror: Boolean = false,
       tableSpecs: Map[String, TableSpec] = Map.empty,
       aggViews: Map[String, AggView] = Map.empty,
       sinkOverride: Option[graft.sinks.MirrorSink] = None,
@@ -135,11 +120,9 @@ object CdcPipeline {
       // Some(b) forces either way.
       persistRoutedBatch: Option[Boolean] = None) {
     require(!consistentSnapshots ||
-      sinkOverride.exists(_.isInstanceOf[graft.sinks.LogMirrorSink]),
+      mirrorSink.isInstanceOf[graft.sinks.LogMirrorSink],
       "consistentSnapshots pin LogMirror versions (readAsOf) — they " +
         "require the LogMirrorSink")
-    require(!incrementalMirror || bucketCount.isDefined,
-      "incrementalMirror requires bucketCount")
     require(expectations.values.forall(_.isEmpty) || quarantineDir.isDefined,
       "expectations require quarantineDir")
     require(tableExpectations.isEmpty || quarantineDir.isDefined,
@@ -149,10 +132,8 @@ object CdcPipeline {
         "view's delta path) — register the view first")
     def specFor(table: String): TableSpec =
       tableSpecs.getOrElse(table, TableSpec(rowSchema, keyCols))
-    def mirrorSink: graft.sinks.MirrorSink = sinkOverride.getOrElse {
-      if (incrementalMirror) graft.sinks.BucketedMirrorSink(bucketCount.get)
-      else graft.sinks.SwapMirror(bucketCount)
-    }
+    def mirrorSink: graft.sinks.MirrorSink =
+      sinkOverride.getOrElse(graft.sinks.LogMirrorSink())
   }
 
   /** Per-stage wall seconds for one processBatch call, reported through
@@ -166,9 +147,6 @@ object CdcPipeline {
       snapshot: Double, dlq: Double) {
     def total: Double = route + parse + merge + views + snapshot + dlq
   }
-
-  private def bucketCol(spec: TableSpec, n: Int) =
-    pmod(hash(spec.keyCols.map(col): _*), lit(n))
 
   /** Start the pipeline on a streaming DataFrame of Kafka-shaped records
     * (topic, key, value, partition, offset) — from
@@ -265,14 +243,12 @@ object CdcPipeline {
         // mergeFor maps each table to the future completing its mirror
         // merge — view updates with max maintenance sequence on it (the
         // dirty-group recompute must read the POST-batch mirror)
-        // Swap mirrors take the unified group-merge fast path (one job
+        // Log mirrors take the unified group-merge fast path (one job
         // per same-schema same-key group — a layout-specific
         // optimization); every other sink merges per table through the
         // MirrorSink interface.
-        val groupMergeable: Option[Either[graft.sinks.SwapMirror,
-            graft.sinks.LogMirrorSink]] = cfg.mirrorSink match {
-          case s: graft.sinks.SwapMirror => Some(Left(s))
-          case s: graft.sinks.LogMirrorSink => Some(Right(s))
+        val groupSink = cfg.mirrorSink match {
+          case s: graft.sinks.LogMirrorSink => Some(s)
           case _ => None
         }
         // Row-level expectations: violating CHANGE rows (deletes exempt
@@ -326,7 +302,7 @@ object CdcPipeline {
         val jobsWithTables: Seq[(Seq[String], Future[Unit])] =
           bySchema.toSeq.flatMap { case (schema, ts) =>
             val parsed = parsedBySchema(schema)
-            groupMergeable match {
+            groupSink match {
               case None =>
                 ts.map(t => Seq(t) -> perTableJob(parsed, t))
               case Some(sink) =>
@@ -335,14 +311,8 @@ object CdcPipeline {
                   fast.groupBy(t => cfg.specFor(t).keyCols).values.toSeq
                     .map { group =>
                       group -> Future {
-                        sink match {
-                          case Left(swap) => mergeGroupIntoMirrors(
-                            spark, parsed, group, cfg, swap.bucketCount,
-                            batchId, snapPlan, rowCounts)
-                          case Right(log) => mergeGroupIntoLogMirrors(
-                            spark, parsed, group, cfg, log, batchId,
-                            snapPlan, rowCounts)
-                        }
+                        mergeGroupIntoLogMirrors(spark, parsed, group, cfg,
+                          sink, batchId, snapPlan, rowCounts)
                       }
                     }
             }
@@ -430,16 +400,17 @@ object CdcPipeline {
             dlqAll.repartition(1).write.mode("append").parquet(cfg.dlqDir)
           }
         }
-        // The DLQ future must NEVER outlive the batch (ADVICE r13): if
-        // a merge/view await below throws, the exception propagates
-        // past the unpersist finallys while the orphan DLQ job could
-        // still be appending to cfg.dlqDir — and the replayed batch's
-        // own DLQ append could then collide with it in the shared
-        // _temporary staging dir (lost/partial DLQ files, beyond the
-        // acknowledged at-least-once duplicates). Await.ready in a
-        // finally joins the job without masking a propagating merge
-        // exception (its own failure already lands via the
-        // Await.result at the join point on the success path).
+        // No future may outlive the batch: if a merge/view await below
+        // throws, the exception propagates past the unpersist finallys
+        // while sibling merges, views and the DLQ job could still be
+        // writing to mirror roots, view state and cfg.dlqDir — and the
+        // replayed batch would then race them (a sibling committing
+        // after the replay's merge, or two DLQ appends colliding in the
+        // shared _temporary staging dir). Await.ready in the finally
+        // joins every future without masking the propagating exception
+        // (each failure already lands via its Await.result on the
+        // success path), and only then releases the shared mirror
+        // caches the views read.
         try {
           jobs.foreach(Await.result(_, Duration.Inf))
           // snapshot progress commits once every chunk landed; a replay
@@ -447,7 +418,6 @@ object CdcPipeline {
           snapPlan.commit()
           val tMerge = secsSince(t0)
           viewJobs.foreach(Await.result(_, Duration.Inf))
-          sharedMirrors.forEach(_.unpersist())
           val tViews = secsSince(t0)
 
           // Cross-table consistency cut: AFTER every table's merge landed,
@@ -478,7 +448,10 @@ object CdcPipeline {
             route = tRoute, parse = tParse - tRoute, merge = tMerge - tParse,
             views = tViews - tMerge, snapshot = tSnap - tViews,
             dlq = secsSince(t0) - tSnap)))
-        } finally Await.ready(dlqJob, Duration.Inf)
+        } finally {
+          (jobs ++ viewJobs :+ dlqJob).foreach(Await.ready(_, Duration.Inf))
+          sharedMirrors.forEach(_.unpersist())
+        }
       } finally parsedBySchema.values.foreach(_.unpersist())
     } finally if (doPersist) { routed.unpersist(); () }
   }
@@ -502,130 +475,6 @@ object CdcPipeline {
         n == "LogicalRDD" || n == "OneRowRelation"
     }
 
-  /** Unified merge for a group of same-schema same-key tables: the
-    * change stream is keyed by `(table_name, pk)` so the whole group is
-    * ONE hash aggregation and ONE `partitionBy(table_name)` write; the
-    * published state is then swapped per table (each table keeps its own
-    * atomic two-rename publish + recovery, so crash semantics are
-    * unchanged — a batch replay re-merges idempotently whatever subset
-    * had already swapped). Write amplification is the same as the
-    * per-table path (every touched table rewrites); scheduling overhead
-    * drops from #tables jobs to one. */
-  private def mergeGroupIntoMirrors(spark: SparkSession, parsed: DataFrame,
-                                    ts: Seq[String], cfg: Config,
-                                    bucketCount: Option[Int],
-                                    batchId: Long,
-                                    snap: SignalSnapshot.Planned =
-                                      SignalSnapshot.noop,
-                                    rowCounts: Map[String, Long] =
-                                      Map.empty): Unit = {
-    val spec = cfg.specFor(ts.head) // group = same rowSchema + keyCols
-    val fs = new Path(cfg.mirrorRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ts.foreach(t => recoverMirror(fs, s"${cfg.mirrorRoot}/$t"))
-    val changes0 = Envelope.unwrap(
-      parsed.filter(col("table_name").isin(ts: _*) && col("_wf") === 1),
-      spec.keyCols)
-      .withColumn("table_name", Envelope.route(col("topic")))
-    // snapshot chunks join the group's change set with an EXPLICIT
-    // table_name (their synthetic topic routes nowhere)
-    val changes = ts.flatMap(t => snap.chunkFor(t)
-        .map(_.withColumn("table_name", lit(t))))
-      .foldLeft(changes0)(_.unionByName(_))
-    val existing = ts.flatMap { t =>
-      val live = new Path(s"${cfg.mirrorRoot}/$t/live")
-      if (fs.exists(live))
-        Some(spark.read.parquet(live.toString).drop("_bucket")
-          .withColumn("table_name", lit(t)))
-      else None
-    }
-    val groupKey = "table_name" +: spec.keyCols
-    // allowMissingColumns: sibling mirrors can lag an additive schema
-    // evolution (a table that hasn't merged since the new column
-    // appeared still has the old layout) — missing columns backfill null
-    val merged = existing.reduceOption(_.unionByName(_, allowMissingColumns = true)) match {
-      case Some(mirror) => Materialize.merge(mirror, changes, groupKey)
-      case None => Materialize.versionedState(changes, groupKey)
-    }
-    // one write for the group, then per-table staging + swap
-    val tmp = new Path(cfg.mirrorRoot,
-      s".group_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    val dbg = sys.env.contains("GRAFT_MERGE_DEBUG")
-    def mark(label: String, t0: Long): Long = {
-      if (dbg) println(f"[mergedebug] $label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      System.nanoTime()
-    }
-    try {
-      var t = System.nanoTime()
-      val writer = bucketCount match {
-        case Some(n) => merged
-          .withColumn("_bucket", bucketCol(spec, n))
-          .repartition(n, col("table_name"), col("_bucket"))
-          .write.partitionBy("table_name", "_bucket")
-        case None if cfg.targetFileBytes <= 0 =>
-          // escape hatch (and A/B baseline): unsized dynamic-partition
-          // write — one file per (shuffle partition × table present)
-          merged.write.partitionBy("table_name")
-        case None =>
-          // Size write tasks from live mirror bytes (FS metadata, one
-          // listing per table): each table gets ceil(bytes/target)
-          // files instead of one per (shuffle partition × table). At
-          // bench scale that is 9 files, not 288 — and each file
-          // create forks a chmod on non-native Hadoop (the measured
-          // r11 merge floor). At 100 TB the same rule yields
-          // bytes/128MB parallel writers per table. The extra
-          // exchange this adds is O(state) — bounded by the O(state)
-          // parquet rewrite the swap layout already pays per batch
-          // (tables too big for that rewrite belong on the
-          // bucketed/log layouts, which keep their own sizing).
-          // Live bytes LAG state by one batch: on the FIRST batch
-          // (live absent, bytes = 0) — or any large state-growing
-          // batch, e.g. an initial 100 TB snapshot — sizing from live
-          // alone would serialize the whole post-merge state through
-          // ONE write task. Take the max with a batch-row-derived
-          // floor (same 1M-rows/file heuristic as LogMirror
-          // .mergeGroup's rowsPerFile fallback): post-merge state is
-          // always ≥ the batch's upserts for that table.
-          val rowsPerFile = 1000000L
-          val nf: Map[String, Int] = ts.map { t =>
-            val live = new Path(s"${cfg.mirrorRoot}/$t/live")
-            val bytes =
-              if (fs.exists(live)) fs.getContentSummary(live).getLength
-              else 0L
-            val fromBytes =
-              math.ceil(bytes.toDouble / cfg.targetFileBytes).toInt
-            val fromRows = ((rowCounts.getOrElse(t, 0L) + rowsPerFile - 1)
-              / rowsPerFile).toInt
-            t -> math.max(1, math.max(fromBytes, fromRows))
-          }.toMap
-          val nfCol = nf.foldLeft(lit(1)) { case (acc, (t, n)) =>
-            when(col("table_name") === t, lit(n)).otherwise(acc)
-          }
-          val total = math.max(1, nf.values.sum)
-          merged
-            .withColumn("_fg",
-              pmod(hash(spec.keyCols.map(col): _*), nfCol))
-            .repartition(total, col("table_name"), col("_fg"))
-            .drop("_fg")
-            .write.partitionBy("table_name")
-      }
-      writer.mode("overwrite").parquet(tmp.toString)
-      t = mark("group write", t)
-      ts.foreach { tb =>
-        val s0 = System.nanoTime()
-        val part = new Path(tmp, s"table_name=$tb")
-        if (fs.exists(part)) atomicSwap(fs, s"${cfg.mirrorRoot}/$tb") { staging =>
-          if (!fs.rename(part, staging))
-            sys.error(s"staging rename failed for $tb")
-          graft.core.LocalFs.touch(fs, new Path(staging, "_SUCCESS"))
-          graft.sinks.SwapMirror.writeBatchMarker(fs, staging, batchId)
-        }
-        if (dbg) println(f"[mergedebug]   swap $tb%-22s ${(System.nanoTime() - s0) / 1e9}%6.3f s")
-      }
-      t = mark("swaps", t)
-    } finally fs.delete(tmp, true)
-  }
-
   /** Group merge for same-schema same-key tables on the LOG-STRUCTURED
     * layout: one latest-per-key job + one partitioned write lands every
     * table's delta segment (see [[graft.sinks.LogMirror.mergeGroup]]) —
@@ -636,10 +485,8 @@ object CdcPipeline {
                                        cfg: Config,
                                        sink: graft.sinks.LogMirrorSink,
                                        batchId: Long,
-                                       snap: SignalSnapshot.Planned =
-                                         SignalSnapshot.noop,
-                                       rowCounts: Map[String, Long] =
-                                         Map.empty): Unit = {
+                                       snap: SignalSnapshot.Planned,
+                                       rowCounts: Map[String, Long]): Unit = {
     val spec = cfg.specFor(ts.head) // group = same rowSchema + keyCols
     val changes0 = Envelope.unwrap(
       parsed.filter(col("table_name").isin(ts: _*) && col("_wf") === 1),
@@ -655,27 +502,13 @@ object CdcPipeline {
       rowCounts = rowCounts)
   }
 
-  /** Keyed merge of one table's changes into its parquet mirror with an
-    * atomic staging-dir swap (a stand-in for a transactional sink).
-    * Delegates to [[graft.sinks.SwapMirror]]. */
-  def mergeIntoMirror(spark: SparkSession, changes: DataFrame, table: String,
-                      cfg: Config): Unit =
-    graft.sinks.SwapMirror(cfg.bucketCount).merge(spark,
-      s"${cfg.mirrorRoot}/$table", changes, cfg.specFor(table).keyCols,
-      batchId = -1L)
-
-  /** See [[graft.sinks.SwapMirror.recoverMirror]]. */
-  private[streaming] def recoverMirror(
-      fs: org.apache.hadoop.fs.FileSystem, tableRoot: String): Unit =
-    graft.sinks.SwapMirror.recoverMirror(fs, tableRoot)
-
   /** Fold one batch's deltas into a maintained view's state. Delta
     * application is not idempotent, so the state carries the last
     * applied batch id as a constant column `_b_upto` (RLE-compressed to
     * nothing in parquet): state and watermark commit ATOMICALLY in the
-    * same staging-dir swap, and a replayed batch (foreachBatch restart)
-    * is skipped instead of double-counted. Reuses the mirror swap's
-    * crash recovery. */
+    * same staging-dir swap ([[graft.core.SwapPublish]]), and a replayed
+    * batch (foreachBatch restart) is skipped instead of double-counted;
+    * the swap's crash recovery runs first. */
   private def updateAggView(spark: SparkSession, name: String,
       parsed: DataFrame, view: AggView, batchId: Long, cfg: Config,
       sharedMirror: () => DataFrame): Unit = {
@@ -689,7 +522,7 @@ object CdcPipeline {
     val root = s"${cfg.mirrorRoot}/_views/$name"
     val live = new Path(s"$root/live")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverMirror(fs, root)
+    SwapPublish.recover(fs, root)
     val delta = IncrementalAgg.deltas(parsed, view.spec)
     // max maintenance recomputes dirty groups from the POST-batch
     // mirror (this view job is sequenced after the table's merge);
@@ -697,7 +530,7 @@ object CdcPipeline {
     val mirrorRows = Some(sharedMirror)
     val upto =
       if (!fs.exists(live)) -1L
-      else graft.sinks.SwapMirror.readBatchMarker(fs, live).getOrElse {
+      else SwapPublish.readBatchMarker(fs, live).getOrElse {
         // legacy state (written before the marker rode the swap): fall
         // back to the parquet watermark column. coalesce guards the
         // empty-state file (all groups deleted, or a first batch that
@@ -732,22 +565,16 @@ object CdcPipeline {
         // dirty recompute on the very first batch
         IncrementalAgg.merge(delta.limit(0), delta, view.spec, mirrorRows,
           cacheBatch)
-    try atomicSwap(fs, root) { staging =>
+    try SwapPublish.atomicSwap(fs, root) { staging =>
       // aggregate state is #groups rows — orders of magnitude smaller
       // than the stream; one file keeps the swap cheap and the read local
       merged.withColumn("_b_upto", lit(batchId))
         .coalesce(1).write.mode("overwrite").parquet(staging.toString)
       // watermark marker rides the SAME atomic rename as the state, so
       // the cheap read path above can never disagree with the data
-      graft.sinks.SwapMirror.writeBatchMarker(fs, staging, batchId)
+      SwapPublish.writeBatchMarker(fs, staging, batchId)
     } finally cached.forEach(_.unpersist())
   }
-
-  /** Two-rename atomic publish — see [[graft.sinks.SwapMirror.atomicSwap]]
-    * (shared by group merges and view updates). */
-  private def atomicSwap(fs: org.apache.hadoop.fs.FileSystem, root: String)
-                        (write: Path => Unit): Unit =
-    graft.sinks.SwapMirror.atomicSwap(fs, root)(write)
 
   /** Evaluate a view's table-grain expectations after its batch update:
     * the O(groups) view state rolls up to one stats row, rules run

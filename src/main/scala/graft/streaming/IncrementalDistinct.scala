@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.SwapMirror
+import graft.core.SwapPublish
 
 /** Incremental maintenance of grouped COUNT(DISTINCT) via MERGEABLE HLL
   * sketches — the companion to [[IncrementalAgg]] for the one aggregate
@@ -54,12 +54,12 @@ object IncrementalDistinct {
              batch: DataFrame): Unit = {
     val live = new Path(s"$root/live")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapMirror.recoverMirror(fs, root)
+    SwapPublish.recover(fs, root)
     val delta = sketch(batch, spec)
     val merged =
       if (fs.exists(live)) merge(spark.read.parquet(live.toString), delta, spec)
       else delta
-    SwapMirror.atomicSwap(fs, root)(staging =>
+    SwapPublish.atomicSwap(fs, root)(staging =>
       merged.write.mode("overwrite").parquet(staging.toString))
   }
 
@@ -67,7 +67,7 @@ object IncrementalDistinct {
   def estimates(spark: SparkSession, root: String, spec: Spec): DataFrame = {
     val live = new Path(s"$root/live")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapMirror.recoverMirror(fs, root)
+    SwapPublish.recover(fs, root)
     if (!fs.exists(live)) sys.error(
       s"IncrementalDistinct state at $root does not exist — call update() " +
         "with at least one batch before reading estimates")

@@ -8,9 +8,9 @@ import graft.SparkSpec
   * join story beside broadcast and salting: two tables bucketed (and
   * sorted) on the join key by the SAME bucket count join with NO
   * exchange on either side; at scale that's the difference between a
-  * recurring full-fact-table shuffle and none. (BucketedMirror's
-  * manifest layout serves point lookups; this is the catalog-table
-  * form Spark's planner exploits for joins.) */
+  * recurring full-fact-table shuffle and none. (A bucketed LogMirror
+  * base serves point lookups; this is the catalog-table form Spark's
+  * planner exploits for joins.) */
 class BucketedJoinSpec extends SparkSpec {
 
   test("co-bucketed sorted tables sort-merge join with zero exchanges") {

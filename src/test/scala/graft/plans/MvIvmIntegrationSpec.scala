@@ -13,10 +13,11 @@ import graft.streaming.{CdcPipeline, IncrementalAgg, Rec}
   * maintained agg view registers as a TRANSPARENT rewrite target for
   * aggregates over its table's mirror, with VERSION-based freshness —
   * the view's applied-batch watermark (`_b_upto`) against the mirror's
-  * last merged batch id (`_GRAFT_BATCH` swap marker). A query over the
-  * mirror silently reads the O(groups) view while fresh, falls through
-  * to the base scan the moment the mirror advances past the view, and
-  * resumes (via the gap REBUILD) when the view catches up. */
+  * last merged batch id (the default LogMirror sink's manifest id). A
+  * query over the mirror silently reads the O(groups) view while
+  * fresh, falls through to the base scan the moment the mirror advances
+  * past the view, and resumes (via the gap REBUILD) when the view
+  * catches up. */
 class MvIvmIntegrationSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
@@ -68,7 +69,7 @@ class MvIvmIntegrationSpec extends SparkSpec
     assert(p1.contains("_views/by_g"), p1.take(1500)) // reads the VIEW
     assert(result() == Map("a" -> (14.0, 2L), "b" -> (7.0, 1L)))
 
-    // batch 1 merged WITHOUT the view: the mirror advances (marker 1),
+    // batch 1 merged WITHOUT the view: the mirror advances (manifest 1),
     // the view watermark stays at 0 -> stale -> base-table fallthrough
     // with the POST-batch answer
     CdcPipeline.processBatch(
@@ -86,11 +87,24 @@ class MvIvmIntegrationSpec extends SparkSpec
     assert(p3.contains("_views/by_g"), p3.take(1500))
     assert(result() ==
       Map("a" -> (10.0, 1L), "b" -> (8.0, 2L), "c" -> (3.0, 1L)))
+    // a filter on a group column rides into the reconcile's struct
+    // fields; it still rewrites and re-applies over the view's groups
+    val filtered = CdcPipeline.mirror(spark, withView, "t1")
+      .filter(col("g") === "b").groupBy("g").agg(sum("x").as("sx"))
+    assert(scanOf(filtered).contains("_views/by_g"))
+    assert(filtered.as[(String, Double)].collect().toSeq == Seq(("b", 8.0)))
 
-    // the raw live scan WITHOUT the live-rows predicate must NOT
-    // rewrite (it sees tombstone rows the view excludes)
-    val raw = spark.read.parquet(s"$root/mirror/t1/live")
+    // reads WITHOUT the live-rows predicate must NOT rewrite (they see
+    // tombstone rows the view excludes): a raw scan of the current
+    // segments, and the versioned reconcile over exactly those segments
+    val segments = new java.io.File(s"$root/mirror/t1/segments").listFiles()
+      .map(_.getPath).toSeq
+    assert(segments.nonEmpty)
+    val raw = spark.read.parquet(segments: _*)
       .groupBy("g").agg(count(lit(1)).as("n"))
     assert(!scanOf(raw).contains("_views/by_g"))
+    val versioned = graft.sinks.LogMirror.readVersioned(spark, s"$root/mirror/t1")
+      .groupBy("g").agg(count(lit(1)).as("n"))
+    assert(!scanOf(versioned).contains("_views/by_g"))
   }
 }

@@ -1,11 +1,7 @@
 package graft.sinks
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -14,8 +10,8 @@ import graft.streaming.{CdcPipeline, Rec}
 /** The MirrorSink adapter contract: the pipeline's merge plan is
   * sink-agnostic — a custom sink (the stand-in for a Delta/Iceberg
   * row-level MERGE) plugs in via Config.sinkOverride and receives the
-  * versioned change batches; the two in-repo layouts produce identical
-  * state for identical input. */
+  * versioned change batches; plain and bucketed log mirrors and the
+  * custom sink produce identical state for identical input. */
 class MirrorSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,43 +31,6 @@ class MirrorSinkSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-sink").toString
     CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
       s"$root/dlq", s"$root/ckpt", sinkOverride = sink)
-  }
-
-  /** Toy transactional sink: rows live in a driver-side map keyed by
-    * (tableRoot, pk) — the MERGE semantics of a table format, minus the
-    * storage. Records every merge call so the spec can assert the
-    * pipeline routed through the adapter. */
-  private class MapSink extends MirrorSink {
-    val state = new ConcurrentHashMap[(String, Long), (String, Long)]()
-    val mergeCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    override def merge(spark: SparkSession, tableRoot: String,
-                       changes: DataFrame, keyCols: Seq[String],
-                       batchId: Long): Unit = {
-      mergeCalls.incrementAndGet()
-      // changes are the unwrapped per-table stream: op codes ('d' =
-      // tombstone) + (ts_ms, offset) version order — exactly what a
-      // table format's MERGE command consumes
-      changes.collect().foreach { r =>
-        val id = r.getLong(r.fieldIndex("id"))
-        val ts = r.getLong(r.fieldIndex("ts_ms"))
-        val current = Option(state.get((tableRoot, id)))
-        if (current.forall(_._2 <= ts)) {
-          if (r.getString(r.fieldIndex("op")) == "d")
-            state.remove((tableRoot, id))
-          else state.put((tableRoot, id), (r.getString(r.fieldIndex("v")), ts))
-        }
-      }
-    }
-
-    override def read(spark: SparkSession, tableRoot: String): DataFrame =
-      state.asScala.toSeq.collect {
-        case ((root, id), (v, _)) if root == tableRoot => (id, v)
-      }.toDF("id", "v")
-
-    override def lookup(spark: SparkSession, tableRoot: String,
-                        keyCols: Seq[String], keyValues: Seq[Any]): DataFrame =
-      read(spark, tableRoot).filter($"id" === keyValues.head.toString.toLong)
   }
 
   test("a custom sink plugged via sinkOverride receives every table's " +
@@ -96,12 +55,12 @@ class MirrorSinkSpec extends SparkSpec {
     assert(CdcPipeline.lookup(spark, c, "compras", Seq(7L)).count() == 1)
   }
 
-  test("swap, bucketed and log-structured sinks produce identical state " +
-    "for identical input") {
-    val swapCfg = cfg(Some(SwapMirror(Some(4))))
-    val bucketCfg = cfg(Some(BucketedMirrorSink(4)))
-    val logCfg = cfg(Some(LogMirrorSink(maxDeltas = 2, bucketCount = Some(4))))
-    val all = Seq(swapCfg, bucketCfg, logCfg)
+  test("plain and bucketed log-structured sinks and a custom sink " +
+    "produce identical state for identical input") {
+    val plainCfg = cfg(Some(LogMirrorSink(maxDeltas = 2)))
+    val bucketCfg = cfg(Some(LogMirrorSink(maxDeltas = 2, bucketCount = Some(4))))
+    val mapCfg = cfg(Some(new MapSink))
+    val all = Seq(plainCfg, bucketCfg, mapCfg)
     val batches = Seq(
       Seq(rec("ventas", 1, "a", "r", 1000, 0), rec("ventas", 2, "b", "r", 1000, 1),
         rec("ventas", 3, "c", "r", 1000, 2)),
@@ -111,17 +70,18 @@ class MirrorSinkSpec extends SparkSpec {
       val df = b.toDS().toDF()
       all.foreach(c => CdcPipeline.processBatch(df, i.toLong, c))
     }
-    // replay the last batch against the log sink (maxDeltas=2 means the
-    // second batch compacted — the replay exercises the post-compaction
-    // idempotence path through the full pipeline)
-    CdcPipeline.processBatch(batches.last.toDS().toDF(), 1L, logCfg)
+    // replay the last batch against both log sinks (maxDeltas=2 means
+    // the second batch compacted — the replay exercises the
+    // post-compaction idempotence path through the full pipeline)
+    Seq(plainCfg, bucketCfg).foreach(c =>
+      CdcPipeline.processBatch(batches.last.toDS().toDF(), 1L, c))
     def state(c: CdcPipeline.Config) =
       CdcPipeline.mirror(spark, c, "ventas").orderBy("id").collect()
         .map(r => (r.getLong(r.fieldIndex("id")), r.getString(r.fieldIndex("v")))).toSeq
-    assert(state(swapCfg) == state(bucketCfg))
-    assert(state(swapCfg) == state(logCfg))
-    assert(state(swapCfg) == Seq((1L, "a2"), (3L, "c"), (9L, "i")))
-    // all three prune lookups and agree on them too
+    assert(state(plainCfg) == state(bucketCfg))
+    assert(state(plainCfg) == state(mapCfg))
+    assert(state(plainCfg) == Seq((1L, "a2"), (3L, "c"), (9L, "i")))
+    // all three serve lookups and agree on them too
     all.foreach(c =>
       assert(CdcPipeline.lookup(spark, c, "ventas", Seq(9L)).count() == 1))
   }

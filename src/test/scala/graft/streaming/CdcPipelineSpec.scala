@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.cdc.Envelope
+import graft.sinks.{LogMirror, LogMirrorSink}
 
 /** End-to-end streaming replication: MemoryStream of Debezium-shaped
   * records driven through the full pipeline (parse → DLQ split → unwrap
@@ -28,6 +30,9 @@ class CdcPipelineSpec extends SparkSpec {
                   ts: Long, off: Long) =
     Rec(s"mysql-server.pos_bi_db.$table", s"""{"payload":{"id":$id}}""",
       env(id, v, op, ts), 0, off)
+
+  private def fsOf(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def freshCfg() = {
     val root = Files.createTempDirectory("graft-pipe").toString
@@ -362,26 +367,35 @@ class CdcPipelineSpec extends SparkSpec {
 
   test("bucketed mirror: same state, partitioned layout, pruned lookup") {
     val root = Files.createTempDirectory("graft-pipe-b").toString
+    // maxDeltas = 1 folds on every commit, so the state lives in the
+    // bucketed base that lookups prune
     val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
-      s"$root/dlq", s"$root/ckpt", triggerMs = 10, bucketCount = Some(4))
+      s"$root/dlq", s"$root/ckpt", triggerMs = 10,
+      sinkOverride = Some(LogMirrorSink(maxDeltas = 1, bucketCount = Some(4))))
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Rec]
     val q = CdcPipeline.start(ms.toDF(), cfg)
     try {
       ms.addData((1L to 20L).map(i => rec("ventas", i, s"v$i", "r", 1000, i)): _*)
       q.processAllAvailable()
+      // a second batch folds into the base the first one built
+      ms.addData(rec("ventas", 7, "v7b", "u", 2000, 21))
+      q.processAllAvailable()
       assert(CdcPipeline.mirror(spark, cfg, "ventas").count() == 20)
-      // physical layout: one dir per bucket
-      val dirs = new java.io.File(s"$root/mirror/ventas/live").listFiles()
-        .filter(_.getName.startsWith("_bucket=")).map(_.getName).sorted
+      // physical layout: the folded base holds one dir per bucket
+      val tableRoot = s"$root/mirror/ventas"
+      val m = LogMirror.readManifest(fsOf(tableRoot), tableRoot).get
+      assert(m.deltas.isEmpty && m.base.isDefined, s"no fold: $m")
+      val dirs = new java.io.File(s"$tableRoot/segments/base-${m.base.get}")
+        .listFiles().filter(_.getName.startsWith("_bucket=")).map(_.getName).sorted
       assert(dirs.length > 1, s"expected bucket dirs, got ${dirs.mkString(",")}")
       // point lookup returns exactly the row
       val row = CdcPipeline.lookup(spark, cfg, "ventas", Seq(7L)).collect()
-      assert(row.length == 1 && row.head.getString(1) == "v7")
+      assert(row.length == 1 && row.head.getString(1) == "v7b")
       // a mistyped probe literal (Int for the LongType key) must still
       // hash into the right bucket — murmur3(Int) != murmur3(Long)
       val rowInt = CdcPipeline.lookup(spark, cfg, "ventas", Seq(7)).collect()
-      assert(rowInt.length == 1 && rowInt.head.getString(1) == "v7")
+      assert(rowInt.length == 1 && rowInt.head.getString(1) == "v7b")
       // and its plan prunes partitions via the _bucket predicate
       val plan = CdcPipeline.lookup(spark, cfg, "ventas", Seq(7L))
         .queryExecution.executedPlan.toString
@@ -391,37 +405,161 @@ class CdcPipelineSpec extends SparkSpec {
   }
 
   test("mirror swap crash recovery: no prior state is lost") {
-    // A crash between rename(live, .old) and rename(.staging, live)
-    // leaves no live dir; without recovery the next merge would rebuild
-    // the mirror from its own batch alone and delete .old — silently
-    // dropping all earlier keys (the checkpoint blocks replay).
-    val cfg = freshCfg()
-    val fs = new org.apache.hadoop.fs.Path(cfg.mirrorRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"${cfg.mirrorRoot}/ventas/$s")
+    // Maintained-view state publishes through the two-rename swap
+    // (SwapPublish) under the mirror root. A crash between
+    // rename(live, .old) and rename(.staging, live) leaves no live dir;
+    // without recovery the next update would find no state and rebuild
+    // the view from the mirror instead of folding the batch into the
+    // state it already had. A sum-only view never reads the mirror on
+    // its incremental path, so a counting sink shows which path ran.
+    val root = Files.createTempDirectory("graft-pipe-swap").toString
+    val sink = new graft.sinks.MapSink {
+      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+      override def read(spark: org.apache.spark.sql.SparkSession,
+                        tableRoot: String) = {
+        reads.incrementAndGet(); super.read(spark, tableRoot)
+      }
+    }
+    val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
+      s"$root/dlq", s"$root/ckpt", sinkOverride = Some(sink),
+      aggViews = Map("by_v" -> CdcPipeline.AggView("ventas",
+        IncrementalAgg.Spec(Seq("v"), Nil))))
+    val fs = fsOf(root)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s"${cfg.mirrorRoot}/_views/by_v/$s")
+    def view() = CdcPipeline.aggView(spark, cfg, "by_v")
+      .select("v", "n_rows").as[(String, Long)].collect().toMap
 
-    val batch1 = Seq(rec("ventas", 1, "a", "r", 1000, 0),
-      rec("ventas", 2, "b", "r", 1000, 1)).toDS().toDF()
-    CdcPipeline.processBatch(batch1, 0L, cfg)
-    assert(CdcPipeline.mirror(spark, cfg, "ventas").count() == 2)
+    CdcPipeline.processBatch(Seq(rec("ventas", 1, "a", "r", 1000, 0),
+      rec("ventas", 2, "b", "r", 1000, 1)).toDF(), 0L, cfg)
+    assert(view() == Map("a" -> 1L, "b" -> 1L))
 
-    // crash window A: live renamed away, old holds the consistent state
+    // crash window A: live renamed away, .old holds the consistent state
     fs.rename(p("live"), p(".old"))
-    val batch2 = Seq(rec("ventas", 3, "c", "c", 2000, 2)).toDS().toDF()
-    CdcPipeline.processBatch(batch2, 1L, cfg)
-    val rows = CdcPipeline.mirror(spark, cfg, "ventas").orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(rows == Seq((1L, "a"), (2L, "b"), (3L, "c")),
-      s"recovery lost state: $rows")
+    CdcPipeline.processBatch(Seq(rec("ventas", 3, "c", "c", 2000, 2)).toDF(),
+      1L, cfg)
+    assert(view() == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
+    assert(sink.reads.get() == 0,
+      "the batch rebuilt the view from the mirror: the swap lost its state")
+    assert(!fs.exists(p(".old")))
 
     // crash window B: swap died after the staging write completed
     // (_SUCCESS present) but before rename — staging is the NEWEST state
     // and must win over .old
     fs.rename(p("live"), p(".staging"))
     fs.mkdirs(p(".old"))
-    CdcPipeline.recoverMirror(fs, s"${cfg.mirrorRoot}/ventas")
+    graft.core.SwapPublish.recover(fs, s"${cfg.mirrorRoot}/_views/by_v")
     assert(fs.exists(p("live")) && !fs.exists(p(".old")))
-    assert(CdcPipeline.mirror(spark, cfg, "ventas").count() == 3)
+    assert(view() == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
+  }
+
+  test("log mirror crash recovery: a replay after a crash between segment " +
+    "write and manifest commit, or inside a fold, equals one-shot " +
+    "materialization") {
+    val batches = Seq(
+      Seq(rec("ventas", 1, "a", "r", 1000, 0), rec("ventas", 2, "b", "r", 1000, 1),
+        rec("ventas", 3, "c", "r", 1000, 2)),
+      Seq(rec("ventas", 1, "a2", "u", 2000, 3), rec("ventas", 2, "", "d", 2000, 4)),
+      Seq(rec("ventas", 4, "d", "c", 3000, 5), rec("ventas", 3, "c2", "u", 3000, 6)))
+    def materialized(n: Int): Map[Long, String] =
+      graft.cdc.Materialize.currentState(Envelope.unwrap(Envelope.wellFormed(
+        Envelope.parse(batches.take(n).flatten.toDF(), rowSchema)), Seq("id")),
+        Seq("id")).select("id", "v").as[(Long, String)].collect().toMap
+    // maxDeltas 16 commits a delta per batch; maxDeltas 1 folds on every
+    // commit, so its crash lands inside the fold (base written, manifest
+    // not committed)
+    for (sink <- Seq(LogMirrorSink(), LogMirrorSink(maxDeltas = 1))) {
+      val root = Files.createTempDirectory("graft-pipe-crash").toString
+      val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
+        s"$root/dlq", s"$root/ckpt", sinkOverride = Some(sink))
+      val tableRoot = s"${cfg.mirrorRoot}/ventas"
+      def state() = CdcPipeline.mirror(spark, cfg, "ventas").select("id", "v")
+        .as[(Long, String)].collect().toMap
+      CdcPipeline.processBatch(batches(0).toDF(), 0L, cfg)
+      // crash point: a directory where batch 1's manifest tmp file goes
+      // makes its commit fail after the segments landed
+      val blocker = new java.io.File(s"$tableRoot/.MANIFEST-1.tmp")
+      assert(new java.io.File(blocker, "x").mkdirs())
+      intercept[Exception] {
+        CdcPipeline.processBatch(batches(1).toDF(), 1L, cfg)
+      }
+      assert(new java.io.File(s"$tableRoot/segments/delta-1").exists(),
+        "the crash must fall after the segment write")
+      if (sink.maxDeltas == 1)
+        assert(new java.io.File(s"$tableRoot/segments/base-1").exists(),
+          "the crash must fall after the fold's base write")
+      // readers still see the last committed batch
+      assert(state() == materialized(1), sink.toString)
+      // restart: the replay of batch 1, then the next batch
+      org.apache.commons.io.FileUtils.deleteDirectory(blocker)
+      CdcPipeline.processBatch(batches(1).toDF(), 1L, cfg)
+      assert(state() == materialized(2), sink.toString)
+      CdcPipeline.processBatch(batches(2).toDF(), 2L, cfg)
+      assert(state() == materialized(3), sink.toString)
+      assert(materialized(3) == Map(1L -> "a2", 3L -> "c2", 4L -> "d"))
+    }
+  }
+
+  test("a failed merge joins every sibling merge and view before it " +
+    "surfaces: nothing writes after processBatch throws") {
+    // "bad" throws once "good" has merged, so good's view is running;
+    // "slow" is still merging. Good's table expectation reads a slow
+    // reference and always fails, so the view writes a quarantine row
+    // late. Every such write must land before the exception surfaces.
+    val root = Files.createTempDirectory("graft-pipe-fail").toString
+    val goodMerged = new java.util.concurrent.CountDownLatch(1)
+    val merges = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sink = new graft.sinks.MapSink {
+      override def merge(spark: org.apache.spark.sql.SparkSession,
+                         tableRoot: String,
+                         changes: org.apache.spark.sql.DataFrame,
+                         keyCols: Seq[String], batchId: Long): Unit = {
+        val t = tableRoot.split('/').last
+        if (t == "bad") {
+          goodMerged.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          throw new IllegalStateException("injected merge failure")
+        }
+        if (t == "slow") Thread.sleep(1000)
+        super.merge(spark, tableRoot, changes, keyCols, batchId)
+        merges.add(t)
+        if (t == "good") goodMerged.countDown()
+      }
+    }
+    val slowReference = (s: org.apache.spark.sql.SparkSession) => {
+      Thread.sleep(2500)
+      s.range(1).toDF("id")
+    }
+    val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
+      s"$root/dlq", s"$root/ckpt", sinkOverride = Some(sink),
+      aggViews = Map("good_v" -> CdcPipeline.AggView("good",
+        IncrementalAgg.Spec(Seq("v"), Nil))),
+      quarantineDir = Some(s"$root/quarantine"),
+      tableExpectations = Map("good_v" -> CdcPipeline.TableExpectation(
+        rules = Seq(graft.operators.Expectations.Rule("never",
+          org.apache.spark.sql.functions.lit(false))),
+        reference = Some(slowReference))))
+    def files(): Set[(String, Long)] = {
+      val it = fsOf(root).listFiles(new org.apache.hadoop.fs.Path(root), true)
+      val out = Set.newBuilder[(String, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += f.getPath.toString -> f.getModificationTime
+      }
+      out.result()
+    }
+    val err = intercept[IllegalStateException] {
+      CdcPipeline.processBatch(Seq(rec("good", 1, "a", "r", 1000, 0),
+        rec("bad", 2, "b", "r", 1000, 1), rec("slow", 3, "c", "r", 1000, 2))
+        .toDF(), 0L, cfg)
+    }
+    assert(err.getMessage == "injected merge failure")
+    val (mergedAtThrow, filesAtThrow) = (merges.toArray.toSeq, files())
+    Thread.sleep(4000)
+    assert(merges.toArray.toSeq == mergedAtThrow,
+      s"a merge landed after the batch failed: $mergedAtThrow -> $merges")
+    assert(files() == filesAtThrow,
+      s"a write landed after the batch failed: ${files() -- filesAtThrow}")
+    assert(mergedAtThrow.toSet == Set("good", "slow"))
+    assert(CdcPipeline.tableViolations(spark, cfg, "good_v").count() == 1)
   }
 
   test("monitoring listener observes batches; lag alert fires on big batch") {

@@ -29,6 +29,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // batch, BEFORE scan pushdown, so pushed predicates reach
     // PushedFilters / partition pruning
     e.injectOptimizerRule(_ => graft.plans.AsofJoinPushdown)
+    // the latest-per-key kernel under every CDC path
+    e.injectPlannerStrategy(_ => graft.plans.LatestPerKeyStrategy)
   }
 }
 
@@ -127,6 +129,7 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.MvRewriteRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.MvRewriteRule
+    graft.plans.LatestPerKey.ensureRegistered(spark)
     // typed Aggregator surface (SURVEY §2.10): bounded per-group top-k,
     // callable from SQL as topk_scored(score, id)
     spark.udf.register("topk_scored",

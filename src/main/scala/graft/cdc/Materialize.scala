@@ -1,18 +1,21 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.plans.LatestPerKey
 
 /** Upsert-materialization of a CDC change stream into current-state
   * mirrors — the Spark-native equivalent of the reference's JDBC upsert
   * sink (reference: register-postgres-sink.json:15-17 insert.mode=upsert,
   * pk.mode=record_key, delete.enabled=true).
   *
-  * Scale design: latest-per-key is a single hash aggregation with
-  * map-side partial aggregation (`max_by` over a (ts_ms, offset) ordering
-  * struct) — ONE shuffle keyed by PK, no window-sort. At 100 TB this is
-  * the difference between a shuffle+sort per batch and a combine-heavy
-  * agg whose shuffle volume is bounded by (#distinct keys), not (#events).
+  * Scale design: latest-per-key is [[graft.plans.LatestPerKey]] — ONE
+  * shuffle keyed by PK, one in-partition sort by (key, version desc) and
+  * a streaming pass that keeps each key's first row. No aggregation
+  * buffer, so the shuffle carries every event (not one partial per key)
+  * but no struct-ordered SortAggregate pair sorts it twice; the output
+  * stays key-partitioned and key-sorted for the write that follows.
   *
   * Mirrors are VERSIONED: each row keeps the (ts_ms, offset) of the
   * change that produced it (`_v_ts_ms`/`_v_offset`) and deletes persist
@@ -29,17 +32,13 @@ object Materialize {
   val deletedFlag = "_v_deleted"
   private val metaCols = Seq("op", "ts_ms", "topic", "partition", "offset")
 
-  /** Ordering: event time then log position (SURVEY A5/O1). */
-  def ordering: Column = struct(col("ts_ms"), col("offset"))
-
-  /** Reduce an unwrapped change batch to the newest record per key.
-    * Keeps op so callers can drop keys whose final op is a delete. */
+  /** Reduce an unwrapped change batch to the newest record per key,
+    * ordered by event time then log position (SURVEY A5/O1). Keeps op
+    * so callers can drop keys whose final op is a delete. */
   def latestPerKey(unwrapped: DataFrame, keyCols: Seq[String]): DataFrame = {
     val payload = unwrapped.columns.filterNot(keyCols.contains)
-    unwrapped
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(payload.toSeq.map(col): _*), ordering).as("_latest"))
-      .select(keyCols.map(col) ++ payload.map(c => col(s"_latest.$c").as(c)): _*)
+    LatestPerKey(unwrapped, keyCols, Seq("ts_ms", "offset"))
+      .select((keyCols ++ payload).map(col): _*)
   }
 
   /** Versioned mirror state of a change batch: newest record per key
@@ -92,8 +91,8 @@ object Materialize {
   /** Merge one change batch into an existing VERSIONED mirror (the
     * foreachBatch body). Mirror rows (and tombstones) compete with batch
     * changes at their stored versions, so ordering is correct across
-    * batch boundaries and replays are idempotent. Single hash-agg; AQE
-    * may broadcast the small side. Returns the new versioned mirror. */
+    * batch boundaries and replays are idempotent. One latest-per-key
+    * pass over the union. Returns the new versioned mirror. */
   def merge(mirrorVersioned: DataFrame, batchUnwrapped: DataFrame,
             keyCols: Seq[String]): DataFrame = {
     val mirrorAsChanges = mirrorVersioned

@@ -1089,6 +1089,8 @@ object CdcQueries {
           .withColumn("hw", lit(1999L) + (col("chunk") % 8) * 500L)
         val perKey = ev
           .filter(col("ts_ms") <= col("hw")) // chunk select reads state at hw
+          // max_by, not LatestPerKey: the same groupBy also computes
+          // in_window, which the kernel's first-row pass cannot
           .groupBy(col("id"), col("chunk"), col("hw"))
           .agg(
             max_by(col("op"), struct(col("ts_ms"), col("offset")))

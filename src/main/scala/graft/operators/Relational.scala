@@ -170,19 +170,18 @@ object Relational {
     Q("agg_latest_per_key",
       (s, d) => {
         val e = load(s, d, "events")
-        e.groupBy(col("user_id"))
-          .agg(max_by(
-            struct(col("event_type"), col("value")),
-            struct(col("ts"), col("event_id"))).as("last"))
+          .select("user_id", "event_type", "value", "ts", "event_id")
+        graft.plans.LatestPerKey(e, Seq("user_id"), Seq("ts", "event_id"))
           .select(col("user_id"),
-            col("last.event_type").as("last_type"),
-            col("last.value").as("last_value"))
+            col("event_type").as("last_type"),
+            col("value").as("last_value"))
       },
       Some("""SELECT user_id, event_type AS last_type, value AS last_value
              |FROM events
              |QUALIFY row_number() OVER
              |  (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""".stripMargin),
-      "A5 last-write-wins per key via max_by — one shuffle, no sort"),
+      "A5 last-write-wins per key via the LatestPerKey kernel — one " +
+        "shuffle, one sort, first row per key"),
 
     // ---- J1-style: full-outer reconciliation join --------------------
     Q("join_full_outer_reconcile",

@@ -21,6 +21,17 @@ object Skew {
     * left-side join types; right/full outer are rejected — an unmatched
     * right row exists once per salt replica, so those types would emit
     * it saltFactor times.
+    *
+    * Memory bound: the join is hinted SHUFFLE_HASH, so each task builds
+    * its share of the replicated right side as an in-memory hash
+    * relation, with no sort-merge or spill fallback. A task holds the
+    * right rows whose (key, salt) hashes to its partition — about
+    * |right| × saltFactor / `spark.sql.shuffle.partitions` rows, more
+    * where hashing is uneven or AQE coalesces partitions into one task
+    * — and that relation must fit in the task's share of execution
+    * memory. A large right side, a large saltFactor or few shuffle
+    * partitions can exceed it where a sort-merge join would have
+    * spilled; such a caller should join without this helper.
     */
   def saltedEquiJoin(left: DataFrame, right: DataFrame, key: String,
                      saltFactor: Int, joinType: String = "inner",

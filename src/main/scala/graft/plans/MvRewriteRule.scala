@@ -58,25 +58,9 @@ object MvRewriteRule extends Rule[LogicalPlan]
     }
 
   /** A rewrite source: the location a claim is registered under, the
-    * source's column names, its residual filter, and — for a
-    * [[graft.sinks.LogMirror]] read — `packed`, the reconcile's
-    * latest-row struct whose fields the plan above reads as columns. */
+    * source's column names and its residual filter. */
   private case class Src(loc: String, columns: Seq[String],
-                         filter: Option[Expression],
-                         packed: Option[Attribute] = None) {
-    /** `e` with every field read of the packed struct as a plain column
-      * of the field's name; None if the struct is still referenced. */
-    def unpacked(e: Expression): Option[Expression] = packed match {
-      case None => Some(e)
-      case Some(p) =>
-        val flat = e.transform {
-          case g @ GetStructField(a: AttributeReference, _, _)
-            if a.exprId == p.exprId =>
-            AttributeReference(g.extractFieldName, g.dataType, g.nullable)()
-        }
-        Option.when(!flat.references.contains(p))(flat)
-    }
-  }
+                         filter: Option[Expression])
 
   /** The source under the aggregate, looked through a pruning projection
     * of bare attributes (what ColumnPruning inserts) and at most one
@@ -85,44 +69,30 @@ object MvRewriteRule extends Rule[LogicalPlan]
     * them over the view's group values. A source is a single-root
     * parquet scan, or a [[graft.sinks.LogMirror]] read of a mirror's
     * current segment set ([[graft.sinks.LogMirror.rootOfRead]]), whose
-    * live-row filter then sits between the reconcile and the
-    * projection unpacking its latest-row struct. */
+    * live-row filter then sits above the latest-per-key node. */
   private def sourceOf(plan: LogicalPlan): Option[Src] =
     plan match {
       case r: LogicalRelation =>
         locationOf(r).map(Src(_, r.output.map(_.name), None))
-      case a: Aggregate =>
-        graft.sinks.LogMirror.rootOfRead(a).map { root =>
-          val keys = a.groupingExpressions.collect { case k: Attribute => k }
-          val packed = a.output.find(o => !keys.exists(_.exprId == o.exprId))
-          val fields = packed.toSeq.flatMap(_.dataType match {
-            case st: org.apache.spark.sql.types.StructType => st.fieldNames.toSeq
-            case _ => Nil
-          })
-          Src(root, keys.map(_.name) ++ fields, None, packed)
-        }
+      // columns from the scans: column pruning may have narrowed the
+      // node's own output
+      case n: LatestPerKeyNode =>
+        graft.sinks.LogMirror.rootOfRead(n).map(Src(_,
+          n.collectLeaves().flatMap(_.output.map(_.name)).distinct, None))
       // bare-attribute pruning projections, plus IDENTITY aliases
       // (Alias(attr, attr.name)) — the shape [[rewriteJoin]] emits, so
       // an agg-view claim over a JOIN VIEW composes with the join
-      // rewrite in the same pass (the chained star-rollup case) — and,
-      // over a log-mirror read, same-named field reads of its struct
+      // rewrite in the same pass (the chained star-rollup case)
       case Project(ps, child) if ps.forall {
         case _: AttributeReference => true
         case Alias(a: AttributeReference, name) => a.name == name
-        case Alias(g @ GetStructField(_: AttributeReference, _, _), name) =>
-          g.extractFieldName == name
         case _ => false
-      } => sourceOf(child).filter(s => ps.forall {
-        case Alias(GetStructField(a: AttributeReference, _, _), _) =>
-          s.packed.exists(_.exprId == a.exprId)
-        case _ => true
-      })
+      } => sourceOf(child)
       case Filter(cond, child)
         if cond.deterministic &&
           cond.find(_.isInstanceOf[PlanExpression[_]]).isEmpty =>
         sourceOf(child).flatMap(s =>
-          if (s.filter.isEmpty) s.unpacked(cond).map(c => s.copy(filter = Some(c)))
-          else None)
+          if (s.filter.isEmpty) Some(s.copy(filter = Some(cond))) else None)
       case _ => None
     }
 

@@ -2,14 +2,14 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CreateNamedStruct, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, MaxBy}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, Union}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.cdc.{Materialize, SchemaEvolution}
+import graft.plans.{LatestPerKey, LatestPerKeyNode}
 
 /** Log-structured CDC mirror: an immutable BASE segment plus an ordered
   * list of per-batch DELTA segments, committed through an atomic
@@ -149,19 +149,15 @@ object LogMirror {
   private def bucketExpr(keyCols: Seq[String], n: Int) =
     pmod(hash(keyCols.map(col): _*), lit(n))
 
+  private val versionCols = Seq(Materialize.versionTs, Materialize.versionOffset)
+
   /** Latest row per key across segments by the stored version order —
     * the cross-segment analog of [[Materialize.latestPerKey]], running
-    * on already-versioned rows. One hash aggregation with map-side
-    * partial `max_by`; shuffle keyed by PK. */
-  private def reconcile(segments: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val payload = segments.columns.filterNot(keyCols.contains)
-    segments
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(payload.toSeq.map(col): _*),
-        struct(col(Materialize.versionTs), col(Materialize.versionOffset)))
-        .as("_latest"))
-      .select(keyCols.map(col) ++ payload.map(c => col(s"_latest.$c").as(c)): _*)
-  }
+    * on already-versioned rows through the same kernel
+    * ([[graft.plans.LatestPerKey]]): one exchange keyed by PK, one sort,
+    * a first-row-per-key pass. Columns keep the scan's order. */
+  private def reconcile(segments: DataFrame, keyCols: Seq[String]): DataFrame =
+    LatestPerKey(segments, keyCols, versionCols)
 
   /** Read schema after adding a segment of schema `seg` to a segment
     * set read as `current`: the union of their columns (first-seen
@@ -286,7 +282,7 @@ object LogMirror {
 
   /** Group merge for same-schema same-key tables (the steady-state
     * shape of a multi-table CDC pipeline): ONE `(table, key)`-keyed
-    * latest-per-key aggregation and ONE `partitionBy(table)` write land
+    * latest-per-key pass and ONE `partitionBy(table)` write land
     * EVERY table's delta segment in a single Spark job; each table then
     * receives its segment by a metadata rename and commits its own
     * manifest. Per-table crash semantics are unchanged — segments land
@@ -294,36 +290,21 @@ object LogMirror {
     * crash mid-loop leaves the remaining tables' manifests at the prior
     * batch, which the replay completes. Steady-state job count is O(1)
     * in the table count instead of O(tables). `changes` must carry
-    * `tableCol`; tables absent from the batch are untouched. */
+    * `tableCol`; tables absent from the batch are untouched.
+    *
+    * The kernel's `(table, key)` hash exchange is the write's only
+    * exchange: AQE coalesces its partitions to the batch's bytes, so a
+    * small trigger writes one file per table rather than one per
+    * shuffle partition, and the kernel's key order serves the
+    * key-sorted write without another sort. */
   def mergeGroup(spark: SparkSession, mirrorRoot: String, changes: DataFrame,
                  tables: Seq[String], keyCols: Seq[String], batchId: Long,
                  maxDeltas: Int, bucketCount: Option[Int],
-                 tableCol: String = "table_name",
-                 rowCounts: Map[String, Long] = Map.empty): Unit = {
+                 tableCol: String = "table_name"): Unit = {
     val fs = new Path(mirrorRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     tables.foreach(t => precheck(fs, s"$mirrorRoot/$t", keyCols, batchId))
-    val delta0 = Materialize.versionedState(changes, tableCol +: keyCols)
-    // Size delta-segment write tasks from the batch's per-table row
-    // counts (when the pipeline supplies them): a 3k-row trigger
-    // otherwise fans a 32-partition agg across 9 dynamic partitions —
-    // up to 288 near-empty files per trigger, each create forking a
-    // chmod on non-native Hadoop. ~1M rows/file ≈ the 128 MB target
-    // at this envelope's ~128 B/row; a table above that still gets
-    // proportional parallel writers.
-    val delta = if (rowCounts.isEmpty) delta0 else {
-      val rowsPerFile = 1000000L
-      val nf = tables.map(t => t ->
-        math.max(1L, (rowCounts.getOrElse(t, 0L) + rowsPerFile - 1)
-          / rowsPerFile).toInt).toMap
-      val nfCol = nf.foldLeft(lit(1)) { case (acc, (t, n)) =>
-        when(col(tableCol) === t, lit(n)).otherwise(acc)
-      }
-      delta0
-        .withColumn("_fg", pmod(hash(keyCols.map(col): _*), nfCol))
-        .repartition(math.max(1, nf.values.sum), col(tableCol), col("_fg"))
-        .drop("_fg")
-    }
+    val delta = Materialize.versionedState(changes, tableCol +: keyCols)
     val segSchema = StructType(delta.schema.filterNot(_.name == tableCol))
     val tmp = new Path(mirrorRoot,
       s".log_group_staging_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -516,40 +497,27 @@ object LogMirror {
     Materialize.stripVersions(readVersioned(spark, root))
 
   /** The root of the mirror whose CURRENT state `plan` reconciles: Some
-    * only when `plan` is [[readVersioned]]'s reconcile — grouped by the
-    * manifest's key columns, one `max_by` of the scanned columns packed
-    * under their own names and ordered by the stored version — directly
-    * over parquet scans whose paths are exactly the latest manifest's
-    * base and deltas. A plan pinned to an older segment set (built
+    * only when `plan` is [[readVersioned]]'s reconcile — the
+    * latest-per-key node keyed by the manifest's key columns and
+    * versioned by the stored version — directly over parquet scans
+    * whose paths are exactly the latest manifest's base and deltas. A
+    * plan pinned to an older segment set (built
     * before a later commit), a time-travel or changefeed window, a
     * key-filtered lookup or a raw segment scan reads other rows and
     * gets None. This lets a plan rewrite recognize a mirror read
     * without knowing the layout ([[graft.plans.MvRewriteRule]]); the
     * live-row filter above it is the caller's to check. */
   def rootOfRead(plan: LogicalPlan): Option[String] = plan match {
-    case Aggregate(groups, aggs, child, _) =>
-      val keys = groups.collect { case a: AttributeReference => a }
-      // the field names of a struct that packs columns under their own
-      // names; None for any other expression
-      def packed(e: Expression): Option[Seq[String]] = e match {
-        case s: CreateNamedStruct =>
-          val names = s.names.map(_.toString)
-          Option.when(names.zip(s.valExprs).forall {
-            case (n, a: AttributeReference) => n == a.name
-            case _ => false
-          })(names)
-        case _ => None
+    case LatestPerKeyNode(keyExprs, versions, child) =>
+      // bare columns only: a computed key or version reads other rows
+      def names(es: Seq[Expression]): Option[Seq[String]] = {
+        val as = es.collect { case a: AttributeReference => a.name }
+        Option.when(as.size == es.size)(as)
       }
-      val reconciles = aggs.forall {
-        case a: AttributeReference => keys.exists(_.exprId == a.exprId)
-        case Alias(AggregateExpression(MaxBy(value, order), _, false, None, _), _) =>
-          packed(value).isDefined && packed(order).contains(
-            Seq(Materialize.versionTs, Materialize.versionOffset))
-        case _ => false
-      } && aggs.count(!_.isInstanceOf[AttributeReference]) == 1
       for {
-        paths <- Option.when(keys.size == groups.size && reconciles)(
-          scanPaths(child)).flatten
+        keys <- names(keyExprs)
+        if names(versions).contains(versionCols)
+        paths <- scanPaths(child)
         segs = paths.map(_.getParent)
         root <- segs.map(_.getParent).distinct match {
           case Seq(r) if segs.forall(_.getName == "segments") => Some(r)
@@ -558,7 +526,7 @@ object LogMirror {
         fs = root.getFileSystem(
           SparkSession.active.sparkContext.hadoopConfiguration)
         m <- scala.util.Try(readManifest(fs, root.toString)).toOption.flatten
-        if m.keyCols == keys.map(_.name)
+        if m.keyCols == keys
         live = m.base.map(v => s"base-$v").toSeq ++ m.deltas.map(v => s"delta-$v")
         if paths.map(_.getName).sorted == live.sorted
       } yield root.toString
@@ -714,28 +682,31 @@ object LogMirror {
           val windowRows = segmentScan(spark, fs, root, m, None, window,
             tag = _.withColumn(commitVersion,
               segmentId(col("_metadata.file_path"))))
-          // commitVersion rides the payload through max_by, so each
+          // commitVersion rides along as a plain column, so each
           // surviving row carries the id of the batch that produced it
           val windowNet = reconcile(windowRows, m.keyCols)
-          val verCols = Seq(Materialize.versionTs, Materialize.versionOffset)
           // prior version per affected key, from KEY+VERSION columns
           // only — the parquet scan prunes the payload (bytes ∝ key and
           // version columns of the older segments, not the mirror)
           val older = m.deltas.filter(_ <= sinceVersion)
           if (m.base.isEmpty && older.isEmpty) windowNet
           else {
-            val prior = segmentScan(spark, fs, root, m, m.base, older)
-              .select((m.keyCols ++ verCols).map(col): _*)
-              .join(windowNet.select(m.keyCols.map(col): _*), m.keyCols,
-                "left_semi")
-              .groupBy(m.keyCols.map(col): _*)
-              .agg(max(struct(verCols.map(col): _*)).as("_prior_v"))
+            // the window's keys come from its raw rows: a semi join
+            // needs the key set, not the reconciled rows
+            val prior = reconcile(
+              segmentScan(spark, fs, root, m, m.base, older)
+                .select((m.keyCols ++ versionCols).map(col): _*)
+                .join(windowRows.select(m.keyCols.map(col): _*), m.keyCols,
+                  "left_semi"),
+              m.keyCols)
+              .select(m.keyCols.map(col) :+
+                struct(versionCols.map(col): _*).as("_prior_v"): _*)
             // a window change emits only when it STRICTLY outranks the
             // pre-checkpoint version: late arrivals that lost the race
             // and exact redeliveries (ties) emit nothing
             windowNet.join(prior, m.keyCols, "left")
               .filter(col("_prior_v").isNull ||
-                struct(verCols.map(col): _*) > col("_prior_v"))
+                struct(versionCols.map(col): _*) > col("_prior_v"))
               .drop("_prior_v")
           }
         }

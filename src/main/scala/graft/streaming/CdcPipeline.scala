@@ -28,8 +28,8 @@ import graft.core.SwapPublish
   *     register-postgres-sink.json:14): update the TableSpec registry and
   *     the merge backfills nulls.
   *
-  * Scale design: the per-batch merge is one hash aggregation keyed by PK
-  * per table group, and the default sink ([[graft.sinks.LogMirrorSink]])
+  * Scale design: the per-batch merge is one latest-per-key pass keyed by
+  * PK per table group ([[graft.plans.LatestPerKey]]), and the default sink ([[graft.sinks.LogMirrorSink]])
   * writes only the batch's delta segment, so shuffle and write volume
   * are bounded by batch size, not mirror size. A Delta/Iceberg MERGE (or
   * JDBC upsert, matching the reference) plugs in through the
@@ -191,11 +191,6 @@ object CdcPipeline {
       val tstats = routed.groupBy(col("table_name")).count().collect()
       val tables = tstats.map(_.getString(0)).filter(_ != "")
       val hasUnroutable = tstats.exists(_.getString(0) == "")
-      // per-table routed counts: reused below to size log-mirror delta
-      // write tasks (files ∝ batch bytes, not shuffle partitions)
-      val rowCounts: Map[String, Long] =
-        tstats.filter(_.getString(0) != "")
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
       val tRoute = secsSince(t0)
 
       val bySchema = tables.toSeq.groupBy(t => cfg.specFor(t).rowSchema)
@@ -234,7 +229,7 @@ object CdcPipeline {
         // job, so many small per-table batches don't serialize on the
         // driver (the reference is single-threaded here, tasks.max=1).
         // Tables sharing (row schema, key) merge in ONE job — one
-        // (table, key)-keyed hash agg + one partitioned write for the
+        // (table, key)-keyed latest-per-key + one partitioned write for the
         // whole group instead of a shuffle + write + commit per table
         // (the reference's 9-table fan-out is exactly this regime).
         import scala.concurrent.{Await, ExecutionContext, Future}
@@ -312,7 +307,7 @@ object CdcPipeline {
                     .map { group =>
                       group -> Future {
                         mergeGroupIntoLogMirrors(spark, parsed, group, cfg,
-                          sink, batchId, snapPlan, rowCounts)
+                          sink, batchId, snapPlan)
                       }
                     }
             }
@@ -485,8 +480,7 @@ object CdcPipeline {
                                        cfg: Config,
                                        sink: graft.sinks.LogMirrorSink,
                                        batchId: Long,
-                                       snap: SignalSnapshot.Planned,
-                                       rowCounts: Map[String, Long]): Unit = {
+                                       snap: SignalSnapshot.Planned): Unit = {
     val spec = cfg.specFor(ts.head) // group = same rowSchema + keyCols
     val changes0 = Envelope.unwrap(
       parsed.filter(col("table_name").isin(ts: _*) && col("_wf") === 1),
@@ -498,8 +492,7 @@ object CdcPipeline {
         .map(_.withColumn("table_name", lit(t))))
       .foldLeft(changes0)(_.unionByName(_))
     graft.sinks.LogMirror.mergeGroup(spark, cfg.mirrorRoot, changes, ts,
-      spec.keyCols, batchId, sink.maxDeltas, sink.bucketCount,
-      rowCounts = rowCounts)
+      spec.keyCols, batchId, sink.maxDeltas, sink.bucketCount)
   }
 
   /** Fold one batch's deltas into a maintained view's state. Delta

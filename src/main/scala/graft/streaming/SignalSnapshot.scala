@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   *     — ms-granularity ties are common under CDC bursts. One
   *     boundary record remains genuinely ambiguous: the IMMEDIATELY
   *     NEXT stream record (offset exactly off0) arriving with ts_ms
-  *     equal to hw0 ties the epoch, and the keyed max_by resolves
+  *     equal to hw0 ties the epoch, and the latest-per-key resolves
   *     ties arbitrarily — unavoidable with a (ts, offset)-only
   *     version (the chunk must strictly beat (hw0, off0-1), the
   *     newest signal-time row, to repair it when stale). The exposure

@@ -13,17 +13,17 @@ import graft.SparkSpec
 
 /** Plan audit for the unified CDC group merge: tables sharing a row
   * schema and key must land their delta segments from ONE job whose
-  * plan has exactly TWO shuffles — the `(table_name, pk)`-keyed
-  * latest-per-key aggregation, then the writer-sizing repartition on
-  * `(table_name, _fg)` that bounds output files per table from the
-  * batch's row counts (the per-file create tax of a 288-file dynamic-
-  * partition commit was the measured merge floor) — feeding one
-  * partitioned write, instead of an agg + write per table (PLANS.md
-  * "CDC group merge"). Captured from the REAL pipeline via a
-  * QueryExecutionListener, on the default sink and on an explicitly
-  * configured LogMirrorSink, so a refactor that silently reverts to
-  * per-table merges, adds a DATA shuffle, or drops the sizing exchange
-  * fails here. */
+  * plan has exactly ONE shuffle and ONE sort — the `(table_name, pk)`
+  * hash exchange and key sort of the latest-per-key kernel, whose
+  * output order also serves the key-sorted partitioned write — instead
+  * of a merge + write per table (PLANS.md "CDC group merge"). AQE
+  * coalescing that exchange sizes the write tasks: a small batch still
+  * writes one file per table (the per-file create tax of a 288-file
+  * dynamic-partition commit was once the measured merge floor).
+  * Captured from the REAL pipeline via a QueryExecutionListener, on the
+  * default sink and on an explicitly configured LogMirrorSink, so a
+  * refactor that silently reverts to per-table merges, adds a shuffle
+  * or a sort, or fans a small batch into many files fails here. */
 class GroupMergePlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,7 +35,8 @@ class GroupMergePlanSpec extends SparkSpec {
       s"""{"payload":{"after":{"id":$id,"v":"x$id"},"op":"r","ts_ms":1000}}""",
       0, off)
 
-  test("same-schema tables merge as one write job: keyed agg shuffle + writer-sizing repartition") {
+  /** The final plan of the one mirror write `processBatch` runs. */
+  private def groupWritePlan(batch: Seq[Rec], cfg: CdcPipeline.Config): String = {
     val captured = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -45,13 +46,7 @@ class GroupMergePlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      val root = Files.createTempDirectory("graft-gm").toString
-      val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
-        s"$root/dlq", s"$root/ckpt")
-      val batch = Seq(
-        rec("ventas", 1, 0), rec("ventas", 2, 1),
-        rec("compras", 7, 2), rec("gastos", 9, 3)).toDS().toDF()
-      CdcPipeline.processBatch(batch, 0L, cfg)
+      CdcPipeline.processBatch(batch.toDS().toDF(), 0L, cfg)
       // the listener bus is async
       val deadline = System.nanoTime() + 10000000000L
       def writes = captured.asScala.toSeq.map(_.executedPlan.toString)
@@ -61,60 +56,63 @@ class GroupMergePlanSpec extends SparkSpec {
 
       val mirrorWrites = writes.filter(_.contains("table_name"))
       assert(mirrorWrites.size == 1,
-        s"3 same-schema tables must produce ONE group write, got " +
+        s"same-schema tables must produce ONE group write, got " +
           s"${mirrorWrites.size}:\n${writes.mkString("\n----\n")}")
       // AQE's toString appends an "== Initial Plan ==" section that
-      // repeats every node — count shuffles in the final plan only
-      val finalPlan = mirrorWrites.head.split("== Initial Plan ==").head
-      val exchanges = "Exchange".r.findAllIn(finalPlan).size
-      assert(exchanges == 2,
-        s"group merge = keyed agg shuffle + writer-sizing repartition, " +
-          s"got $exchanges:\n" + finalPlan.take(2000))
-      assert(finalPlan.contains("REPARTITION_BY_NUM"),
-        s"writer-sizing exchange missing:\n" + finalPlan.take(2000))
+      // repeats every node — read the final plan only
+      mirrorWrites.head.split("== Initial Plan ==").head
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("the LOG-STRUCTURED group path also lands every table's delta " +
-    "from one write job with the same two-exchange shape") {
-    val captured = new ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = captured.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val root = Files.createTempDirectory("graft-gml").toString
-      val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
-        s"$root/dlq", s"$root/ckpt",
-        sinkOverride = Some(graft.sinks.LogMirrorSink()))
-      val batch = Seq(
-        rec("ventas", 1, 0), rec("ventas", 2, 1),
-        rec("compras", 7, 2), rec("gastos", 9, 3)).toDS().toDF()
-      CdcPipeline.processBatch(batch, 0L, cfg)
-      val deadline = System.nanoTime() + 10000000000L
-      def writes = captured.asScala.toSeq.map(_.executedPlan.toString)
-        .filter(_.contains("WriteFiles"))
-        .filterNot(_.contains("dlq"))
-      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+  /** One exchange (the kernel's), one sort (the kernel's), no aggregate. */
+  private def assertOneExchangeOneSort(finalPlan: String): Unit = {
+    val exchanges = "Exchange".r.findAllIn(finalPlan).size
+    val sorts = "\\bSort \\[".r.findAllIn(finalPlan).size
+    assert(exchanges == 1 && sorts == 1 && finalPlan.contains("LatestPerKey") &&
+      !finalPlan.contains("Aggregate"),
+      s"group merge = the kernel's exchange and sort feeding the write, " +
+        s"got $exchanges exchanges, $sorts sorts:\n" + finalPlan.take(2000))
+  }
 
-      val mirrorWrites = writes.filter(_.contains("table_name"))
-      assert(mirrorWrites.size == 1,
-        s"3 same-schema tables must produce ONE grouped delta write, " +
-          s"got ${mirrorWrites.size}:\n${writes.mkString("\n----\n")}")
-      val finalPlan = mirrorWrites.head.split("== Initial Plan ==").head
-      val exchanges = "Exchange".r.findAllIn(finalPlan).size
-      assert(exchanges == 2,
-        s"grouped log merge = keyed agg shuffle + writer-sizing " +
-          s"repartition, got $exchanges:\n" + finalPlan.take(2000))
-      assert(finalPlan.contains("REPARTITION_BY_NUM"),
-        s"writer-sizing exchange missing:\n" + finalPlan.take(2000))
-      // and the segments actually landed per table
-      for (t <- Seq("ventas", "compras", "gastos"))
-        assert(graft.sinks.LogMirror.read(spark, s"$root/mirror/$t")
-          .count() > 0, s"$t segment missing")
-    } finally spark.listenerManager.unregister(listener)
+  private def tempCfg(prefix: String, sink: Option[graft.sinks.MirrorSink] = None) = {
+    val root = Files.createTempDirectory(prefix).toString
+    CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror", s"$root/dlq",
+      s"$root/ckpt", sinkOverride = sink)
+  }
+
+  private val threeTables = Seq(
+    rec("ventas", 1, 0), rec("ventas", 2, 1),
+    rec("compras", 7, 2), rec("gastos", 9, 3))
+
+  test("same-schema tables merge as one write job: the kernel's exchange " +
+    "and sort, nothing else") {
+    assertOneExchangeOneSort(groupWritePlan(threeTables, tempCfg("graft-gm")))
+  }
+
+  test("the LOG-STRUCTURED group path also lands every table's delta " +
+    "from one write job with the same one-exchange shape") {
+    val cfg = tempCfg("graft-gml", Some(graft.sinks.LogMirrorSink()))
+    assertOneExchangeOneSort(groupWritePlan(threeTables, cfg))
+    // and the segments actually landed per table
+    for (t <- Seq("ventas", "compras", "gastos"))
+      assert(graft.sinks.LogMirror.read(spark, s"${cfg.mirrorRoot}/$t")
+        .count() > 0, s"$t segment missing")
+  }
+
+  test("a 3k-row nine-table batch writes one file per table") {
+    val tables = Seq("ventas", "compras", "gastos", "entidades", "productos",
+      "detalle_ventas", "detalle_compras", "cierres_caja", "pagos_clientes")
+    val cfg = tempCfg("graft-gmf")
+    val batch = (0 until 3000).map(i => rec(tables(i % tables.size), i, i))
+    assertOneExchangeOneSort(groupWritePlan(batch, cfg))
+    val fs = new org.apache.hadoop.fs.Path(cfg.mirrorRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (t <- tables) {
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(
+        s"${cfg.mirrorRoot}/$t/segments/delta-0"))
+        .count(_.getPath.getName.endsWith(".parquet"))
+      // the writer-sizing repartition this path had before wrote one
+      assert(files == 1, s"$t: $files files")
+    }
   }
 }

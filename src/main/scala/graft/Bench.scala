@@ -1,7 +1,12 @@
 package graft
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.streaming.CdcPipeline
 
 /** Kafka-shaped record for the streaming bench's MemoryStream (top
   * level so the Encoder derives without an outer instance). */
@@ -122,6 +127,38 @@ object Bench {
     // contract, so the zero-fact-shuffle claim stays measured
     "join_asof_broadcast")
 
+  /** The first `n` fixture events as MemoryStream records, collected up
+    * front so a stream replays bytes instead of rebuilding envelopes. */
+  def records(raw: DataFrame, n: Int): Array[BenchRec] =
+    raw.limit(n).collect().map(r => BenchRec(
+      r.getAs[String]("topic"), r.getAs[String]("key"),
+      r.getAs[String]("value"), r.getAs[Int]("partition"),
+      r.getAs[Long]("offset")))
+
+  /** [[CdcPipeline.start]]'s query, keeping each trigger's stage clock:
+    * the foreachBatch appends `(batchId, processBatch's StageTimings)`
+    * to `out`. */
+  def startTimed(source: DataFrame, cfg: CdcPipeline.Config,
+                 out: mutable.Buffer[(Long, CdcPipeline.StageTimings)])
+      : StreamingQuery =
+    source.writeStream
+      .queryName("cdc-replication")
+      .option("checkpointLocation", cfg.checkpointDir)
+      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val st = CdcPipeline.processBatch(batch, batchId, cfg)
+        out.synchronized { out += batchId -> st }; ()
+      }
+      .start()
+
+  /** /proc/loadavg's 1-minute figure (-1 when unreadable): the host
+    * shows 2-16x same-code swings (NOTES.md), and a load stamp makes
+    * "contended box" checkable instead of asserted. */
+  def loadavg(): Double =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -161,31 +198,22 @@ object Bench {
     // collects them upfront for the same reason).
     val raw = graft.cdc.Fixture.ordersCdcEvents(spark, sfDir).persist()
     val nEvents = raw.count()
-    // /proc/loadavg fingerprint: the host shows 2-16x same-code swings
-    // (NOTES.md) — start/end load in the JSON makes "contended box"
-    // checkable instead of asserted.
-    def loadavg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     val loadStart = loadavg()
-    def pipeRun(withViews: Boolean = false,
-                stages: Option[scala.collection.mutable.Buffer[
-                  graft.streaming.CdcPipeline.StageTimings]] = None): Double = {
+    // one full batch: wall seconds and processBatch's stage clock
+    def pipeRun(withViews: Boolean = false)
+        : (Double, CdcPipeline.StageTimings) = {
       val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
       val views =
-        if (!withViews) Map.empty[String, graft.streaming.CdcPipeline.AggView]
-        else Map("by_status" -> graft.streaming.CdcPipeline.AggView("orders_t0",
+        if (!withViews) Map.empty[String, CdcPipeline.AggView]
+        else Map("by_status" -> CdcPipeline.AggView("orders_t0",
           graft.streaming.IncrementalAgg.Spec(
             Seq("o_orderstatus"), Seq("o_totalprice"))))
-      val cfg = graft.streaming.CdcPipeline.Config(
+      val cfg = CdcPipeline.Config(
         graft.cdc.Fixture.rowSchema, Seq("id"),
-        s"$root/mirror", s"$root/dlq", s"$root/ckpt", aggViews = views,
-        stageTimer = stages.map(b =>
-          (st: graft.streaming.CdcPipeline.StageTimings) => { b += st; () }))
+        s"$root/mirror", s"$root/dlq", s"$root/ckpt", aggViews = views)
       val tp0 = System.nanoTime()
-      graft.streaming.CdcPipeline.processBatch(raw, 0L, cfg)
-      (System.nanoTime() - tp0) / 1e9
+      val st = CdcPipeline.processBatch(raw, 0L, cfg)
+      ((System.nanoTime() - tp0) / 1e9, st)
     }
 
     // Mirror write amplification: merge one SMALL batch into a seeded
@@ -237,16 +265,20 @@ object Bench {
     // headline numbers are per-metric MEDIANS; the per-run
     // [eps, p50, p95, load] tuples ship in the JSON so a bad window is
     // attributable to its loadavg instead of relitigated.
-    val streamAll = raw.limit(250000).collect().map(r => BenchRec(
-      r.getAs[String]("topic"), r.getAs[String]("key"),
-      r.getAs[String]("value"), r.getAs[Int]("partition"),
-      r.getAs[Long]("offset")))
+    //
+    // Each run also keeps the stage clock of its 20 timed triggers
+    // (startTimed), so the p95 trigger tail is attributable to a stage
+    // (compaction rides `merge`, the poison probe rides `dlq`); the
+    // stream_stage_p95_ms field pools the three runs' triggers.
+    val streamAll = records(raw, 250000)
+    val streamStages = mutable.ArrayBuffer.empty[CdcPipeline.StageTimings]
     def streamRun(): (Long, Long, Long, Double) = {
       val loadAtStart = loadavg()
       val root = java.nio.file.Files.createTempDirectory("graft-bench-s").toString
       // maxDeltas = 32: the fold cadence DOMINATES this phase (the
-      // round-8 StreamSweep measured drain 28-31k ev/s at 16 vs 43-61k
-      // at 32 on this host, p95 2.2 s -> 0.75 s — the p95 at 16 was
+      // round-8 sweep with the since-removed StreamSweep dev main
+      // measured drain 28-31k ev/s at 16 vs 43-61k at 32 on this
+      // host, p95 2.2 s -> 0.75 s — the p95 at 16 was
       // simply the every-16th-trigger fold). 32 folds about once per
       // drain window, so the amortized compaction cost stays inside
       // the measurement; read amplification stays bounded at <= 32
@@ -267,13 +299,16 @@ object Bench {
       try {
         val ms = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[BenchRec]
-        val query = graft.streaming.CdcPipeline.start(ms.toDF(), cfg)
+        val stages = mutable.ArrayBuffer.empty[(Long, CdcPipeline.StageTimings)]
+        val query = startTimed(ms.toDF(), cfg, stages)
         val warmupTriggers = 2
         val (latency, rest) = streamAll.splitAt((warmupTriggers + 20) * 3000)
         latency.grouped(3000).foreach { chunk =>
           ms.addData(chunk.toSeq)
           query.processAllAvailable() // one trigger per reference-sized batch
         }
+        streamStages ++= stages.synchronized { stages.toSeq }
+          .collect { case (id, st) if id >= warmupTriggers => st }
         val durations = query.recentProgress.toSeq
           .filter(p => p.numInputRows > 0 && p.batchId >= warmupTriggers)
           .map(_.batchDuration).sorted
@@ -290,52 +325,6 @@ object Bench {
         ((rest.length / wall).toLong, pct(0.5), pct(0.95), loadAtStart)
       } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
     }
-    // Streaming STAGE attribution (VERDICT r9 item 3): a separate short
-    // attributed run — stageTimer per trigger, so the p95 tail is
-    // attributable to a stage (compaction rides `merge`, the poison
-    // probe rides `dlq`) instead of relitigated. Separate because
-    // attribution mode force-materializes the parse cache, which would
-    // perturb the comparable headline numbers above.
-    def streamStageAttrib(): Seq[(String, Long)] = {
-      val all = raw.limit(45000).collect().map(r => BenchRec(
-        r.getAs[String]("topic"), r.getAs[String]("key"),
-        r.getAs[String]("value"), r.getAs[Int]("partition"),
-        r.getAs[Long]("offset")))
-      val root = java.nio.file.Files.createTempDirectory("graft-bench-a").toString
-      val stBuf = scala.collection.mutable.ArrayBuffer
-        .empty[graft.streaming.CdcPipeline.StageTimings]
-      val cfg = graft.streaming.CdcPipeline.Config(
-        graft.cdc.Fixture.rowSchema, Seq("id"),
-        s"$root/mirror", s"$root/dlq", s"$root/ckpt", triggerMs = 1L,
-        sinkOverride = Some(graft.sinks.LogMirrorSink(maxDeltas = 32)),
-        stageTimer = Some(st => { stBuf.synchronized { stBuf += st }; () }))
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ms = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[BenchRec]
-        val query = graft.streaming.CdcPipeline.start(ms.toDF(), cfg)
-        all.grouped(3000).foreach { chunk =>
-          ms.addData(chunk.toSeq)
-          query.processAllAvailable()
-        }
-        query.stop()
-        val timed = stBuf.synchronized { stBuf.drop(2).toSeq } // warmup
-        def p95(xs: Seq[Double]): Long =
-          if (xs.isEmpty) -1L
-          else {
-            val s = xs.sorted
-            (s(math.min(s.length - 1, (0.95 * s.length).toInt)) * 1000).toLong
-          }
-        Seq("route" -> p95(timed.map(_.route)),
-          "parse" -> p95(timed.map(_.parse)),
-          "merge" -> p95(timed.map(_.merge)),
-          "dlq" -> p95(timed.map(_.dlq)))
-      } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
     val names = headline.filter(SparkEntry.queries.contains)
     def med(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1d else { val s = xs.sorted; s((s.length - 1) / 2) }
@@ -354,8 +343,8 @@ object Bench {
     // leaves a stopped StreamingQuery's listener/exec-thread debris
     // in the shared session). cdc_events_per_sec now measures the
     // merge path itself. The three stream runs stay separated FROM
-    // EACH OTHER by the stage-attribution and shuffle-telemetry
-    // passes so one host spike still can't hit all of them.
+    // EACH OTHER by the shuffle-telemetry pass and the ANN
+    // recall probe so one host spike still can't hit all of them.
     val pass1 = names.map(n => n -> timed(n)).toMap
     val pipe1 = pipeRun()
     val pipeV1 = pipeRun(withViews = true)
@@ -371,31 +360,23 @@ object Bench {
     // BEST-of-three (min elapsed = max throughput): the least-contended
     // sample is the closest view of the code's own cost on this host;
     // the per-stage medians below make any swing attributable.
-    val pipeSec = Seq(pipe1, pipe2, pipe3).min
+    val pipeSec = Seq(pipe1, pipe2, pipe3).map(_._1).min
     val eps = (nEvents / pipeSec).toLong
-    val epsViews = (nEvents / Seq(pipeV1, pipeV2, pipeV3).min).toLong
-    // Per-stage attribution (VERDICT r8 item 1): three PROFILED runs of
-    // the with-views pipeline — stageTimer forces the parse cache, so
-    // merge times merging alone — reported as per-stage medians. These
-    // runs are separate from the headline samples above (attribution
-    // mode adds one cached pass, which would perturb the comparable
-    // number).
-    val stBuf = scala.collection.mutable.ArrayBuffer
-      .empty[graft.streaming.CdcPipeline.StageTimings]
-    (1 to 3).foreach(_ => pipeRun(withViews = true, stages = Some(stBuf)))
+    val pipeViews = Seq(pipeV1, pipeV2, pipeV3)
+    val epsViews = (nEvents / pipeViews.map(_._1).min).toLong
+    // Per-stage attribution: medians of the with-views headline samples'
+    // own stage clocks (the production plan, so parsing rides `merge`)
+    val stages = pipeViews.map(_._2)
     val stageMed = Seq(
-      "route" -> med(stBuf.map(_.route).toSeq),
-      "parse" -> med(stBuf.map(_.parse).toSeq),
-      "merge" -> med(stBuf.map(_.merge).toSeq),
-      "views" -> med(stBuf.map(_.views).toSeq),
-      "snap" -> med(stBuf.map(_.snapshot).toSeq),
-      "dlq" -> med(stBuf.map(_.dlq).toSeq))
+      "route" -> med(stages.map(_.route)),
+      "merge" -> med(stages.map(_.merge)),
+      "views" -> med(stages.map(_.views)),
+      "snap" -> med(stages.map(_.snapshot)),
+      "dlq" -> med(stages.map(_.dlq)))
 
     // Streaming section LAST (order rationale above): three separated
-    // runs with the attribution and telemetry passes between them.
+    // runs with the telemetry pass and the recall probe between them.
     val stream1 = streamRun()
-    val streamStageP95 = streamStageAttrib()
-    val stream2 = streamRun()
 
     // Untimed telemetry pass: per-query runtime shuffle volume —
     // bytes actually written to exchanges, spill, exchange count —
@@ -432,6 +413,12 @@ object Bench {
     // trips a gate instead of hiding inside wall time.
     val spillTotal = shuffleEntries.map(t => math.max(0L, t._3)).sum
 
+    val stream2 = streamRun()
+    // ANN approximation quality on the raw corpus (recall vs the
+    // brute-force arm) — a committed per-round number, so an index or
+    // codebook change that degrades recall moves this instead of
+    // passing every exactness gate
+    val recall = graft.operators.SimilarityQueries.annRecallAt10(spark, sfDir)
     val stream3 = streamRun()
 
     def f(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
@@ -458,7 +445,16 @@ object Bench {
       else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     val stageJson = stageMed.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    val streamStageJson = streamStageP95
+    def p95Ms(xs: Seq[Double]): Long =
+      if (xs.isEmpty) -1L
+      else {
+        val s = xs.sorted
+        (s(math.min(s.length - 1, (0.95 * s.length).toInt)) * 1000).toLong
+      }
+    val streamStageJson = Seq(
+      "route" -> p95Ms(streamStages.map(_.route).toSeq),
+      "merge" -> p95Ms(streamStages.map(_.merge).toSeq),
+      "dlq" -> p95Ms(streamStages.map(_.dlq).toSeq))
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // streaming headline = per-metric MEDIAN of the three separated
     // runs; the raw [eps, p50_ms, p95_ms, loadavg_at_start] tuples ship
@@ -471,11 +467,6 @@ object Bench {
     val streamRunsJson = sruns.map(r =>
       s"[${r._1},${r._2},${r._3},${"%.2f".formatLocal(Locale.ROOT, r._4)}]")
       .mkString("[", ",", "]")
-    // ANN approximation quality on the raw corpus (recall vs the
-    // brute-force arm) — a committed per-round number, so an index or
-    // codebook change that degrades recall moves this instead of
-    // passing every exactness gate
-    val recall = graft.operators.SimilarityQueries.annRecallAt10(spark, sfDir)
     def f2(v: Double): String = "%.2f".formatLocal(Locale.ROOT, v)
     val annJson =
       s"""{"ivf":${f2(recall("ivf"))},"ivfpq":${f2(recall("ivfpq"))}}"""

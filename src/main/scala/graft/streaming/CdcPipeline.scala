@@ -98,27 +98,12 @@ object CdcPipeline {
       quarantineDir: Option[String] = None,
       tableExpectations: Map[String, TableExpectation] = Map.empty,
       consistentSnapshots: Boolean = false,
-      stageTimer: Option[StageTimings => Unit] = None,
       // Debezium-style signaling: a dir of execute-snapshot signal
       // JSON rows + per-table snapshot sources (the table's current
       // truth) drive chunked ad-hoc backfills — see SignalSnapshot
       signalDir: Option[String] = None,
       snapshotSources: Map[String, () => DataFrame] = Map.empty,
-      snapshotChunkKeys: Int = 4096,
-      // Cache the routed batch frame. The clean-path batch is read at
-      // most twice (table stats + parse-cache fill), and building the
-      // columnar cache for the full payload costs MORE than the saved
-      // re-read when the source re-reads cheaply AND byte-stably
-      // (MemoryStream / snapshot files / already-persisted frames:
-      // ~1 s per 271k-event batch, measured — it dominated the route
-      // stage). But an EXTERNAL source (Kafka) pays 2+ broker fetches
-      // per trigger, and a re-read that isn't byte-stable would let
-      // the table-stats pass and the merge/DLQ passes observe
-      // DIFFERENT data. None (default) derives per batch from the
-      // batch plan's leaves: skip the persist when every leaf is a
-      // local/in-memory/file-snapshot relation, persist otherwise.
-      // Some(b) forces either way.
-      persistRoutedBatch: Option[Boolean] = None) {
+      snapshotChunkKeys: Int = 4096) {
     require(!consistentSnapshots ||
       mirrorSink.isInstanceOf[graft.sinks.LogMirrorSink],
       "consistentSnapshots pin LogMirror versions (readAsOf) — they " +
@@ -136,16 +121,16 @@ object CdcPipeline {
       sinkOverride.getOrElse(graft.sinks.LogMirrorSink())
   }
 
-  /** Per-stage wall seconds for one processBatch call, reported through
-    * [[Config.stageTimer]]. When the timer is set, the parse stage is
-    * force-materialized (one count per cached schema frame) so `merge`
-    * measures merging alone — attribution mode costs one extra cached
-    * pass and is OFF on the production path (timer unset = zero
-    * overhead, no extra jobs). */
+  /** Per-stage wall seconds of one processBatch call, its return value.
+    * The clock always runs: it is a `nanoTime` read between stages of
+    * the production plan, with no extra job. The parse caches fill
+    * lazily inside the merge jobs, so parsing is charged to `merge`;
+    * `dlq` is the await residue of the DLQ job that overlaps the
+    * merges. */
   final case class StageTimings(
-      route: Double, parse: Double, merge: Double, views: Double,
-      snapshot: Double, dlq: Double) {
-    def total: Double = route + parse + merge + views + snapshot + dlq
+      route: Double, merge: Double, views: Double, snapshot: Double,
+      dlq: Double) {
+    def total: Double = route + merge + views + snapshot + dlq
   }
 
   /** Start the pipeline on a streaming DataFrame of Kafka-shaped records
@@ -158,7 +143,7 @@ object CdcPipeline {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, cfg)
+        processBatch(batch, batchId, cfg); ()
       }
       .start()
 
@@ -171,15 +156,21 @@ object CdcPipeline {
     * Tables sharing a row schema share one from_json pass and ONE cached
     * frame: with N same-schema tables the old per-table formulation
     * scanned the routed cache N times and pinned N subsets; this parses
-    * every record exactly once regardless of fan-out. */
-  def processBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
+    * every record exactly once regardless of fan-out.
+    *
+    * Returns the batch's [[StageTimings]]. */
+  def processBatch(batch: DataFrame, batchId: Long,
+                   cfg: Config): StageTimings = {
     val spark = batch.sparkSession
     val t0 = System.nanoTime()
     def secsSince(t: Long) = (System.nanoTime() - t) / 1e9
-    // persistRoutedBatch trades one saved source re-read against the
-    // columnar-cache build for the full payload — see Config. In auto
-    // mode the decision derives from the batch's actual source type.
-    val doPersist = cfg.persistRoutedBatch.getOrElse(!rereadIsStable(batch))
+    // Cache the routed batch only when re-reading the source is
+    // expensive or unstable (see rereadIsStable): the clean-path batch
+    // is read at most twice (table stats + parse-cache fill), and the
+    // columnar cache of the full payload costs MORE than that re-read
+    // for a cheap, byte-stable source (~1 s per 271k-event batch,
+    // measured — it dominated the route stage).
+    val doPersist = !rereadIsStable(batch)
     val routed0 = batch
       .withColumn("table_name", Envelope.route(col("topic")))
     val routed = if (doPersist) routed0.persist() else routed0
@@ -205,10 +196,6 @@ object CdcPipeline {
         schema -> Envelope.parse(sub, schema)
           .withColumn("_wf", Envelope.isWellFormed.cast("int")).persist()
       }
-      // attribution mode only: materialize the parse caches now so the
-      // merge stage below times merging, not the first cache fill
-      if (cfg.stageTimer.isDefined) parsedBySchema.values.foreach(_.count())
-      val tParse = secsSince(t0)
 
       // Signal-driven incremental snapshots: plan this batch's chunk
       // per active table (DBLog dedup against THIS batch's changes);
@@ -331,10 +318,11 @@ object CdcPipeline {
         // table's merge (max recompute reads the post-batch mirror)
         // but CONCURRENTLY with its sibling views (independent chained
         // futures). Extrema views of one table additionally SHARE one
-        // lazily-cached post-merge mirror read: the StreamSweep views
-        // sweep measured the per-view mirror reconcile as the dominant
-        // multi-view cost (drain 36k -> 8k ev/s from 1 to 4 views when
-        // every extrema view re-reconciled the log mirror itself).
+        // lazily-cached post-merge mirror read: a views sweep (with the
+        // since-removed StreamSweep dev main) measured the per-view
+        // mirror reconcile as the dominant multi-view cost (drain 36k ->
+        // 8k ev/s from 1 to 4 views when every extrema view
+        // re-reconciled the log mirror itself).
         val sharedMirrors =
           new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
         val viewJobs = cfg.aggViews.toSeq
@@ -439,10 +427,9 @@ object CdcPipeline {
           // is the await RESIDUE — near zero whenever the probe
           // finished inside the merge window.
           Await.result(dlqJob, Duration.Inf)
-          cfg.stageTimer.foreach(f => f(StageTimings(
-            route = tRoute, parse = tParse - tRoute, merge = tMerge - tParse,
+          StageTimings(route = tRoute, merge = tMerge - tRoute,
             views = tViews - tMerge, snapshot = tSnap - tViews,
-            dlq = secsSince(t0) - tSnap)))
+            dlq = secsSince(t0) - tSnap)
         } finally {
           (jobs ++ viewJobs :+ dlqJob).foreach(Await.ready(_, Duration.Inf))
           sharedMirrors.forEach(_.unpersist())
@@ -452,15 +439,17 @@ object CdcPipeline {
   }
 
   /** True when re-evaluating `df` is cheap AND deterministic: every
-    * leaf of its logical plan is a driver-local relation (MemoryStream
+    * leaf of its analyzed plan is a local in-memory relation (MemoryStream
     * batches), an RDD-backed relation, or a file-snapshot relation
     * (parquet/csv/... fixtures — a re-read returns the same bytes).
     * Anything else — Kafka/JDBC/DSv2 external relations — is treated
     * as expensive/unstable, so the routed batch gets persisted to
     * guarantee the stats pass and the merge/DLQ passes observe the
-    * SAME data. */
+    * SAME data. The analyzed plan, not the parsed one: a
+    * `spark.read.parquet` frame's parsed leaf is an unresolved data
+    * source, which only analysis turns into the file relation. */
   private[streaming] def rereadIsStable(df: DataFrame): Boolean =
-    df.queryExecution.logical.collectLeaves().forall {
+    df.queryExecution.analyzed.collectLeaves().forall {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation.isInstanceOf[
@@ -507,7 +496,8 @@ object CdcPipeline {
       sharedMirror: () => DataFrame): Unit = {
     // merge's dirty probe + the state write would otherwise evaluate
     // the candidate fold twice per batch — measured as the dominant
-    // per-view trigger cost (StreamSweep views mode)
+    // per-view trigger cost (a views sweep with the since-removed
+    // StreamSweep dev main)
     val cached = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def cacheBatch(df: DataFrame): DataFrame = {
       val p = df.persist(); cached.add(p); p
@@ -532,7 +522,8 @@ object CdcPipeline {
         // The marker path replaces a per-view-per-trigger Spark job
         // (scan + agg + head on the state file) with one tiny
         // filesystem read — measured as a real slice of the multi-view
-        // drain cost (StreamSweep views mode)
+        // drain cost (a views sweep with the since-removed StreamSweep
+        // dev main)
         spark.read.parquet(live.toString)
           .agg(coalesce(max(col("_b_upto")), lit(-1L))).head().getLong(0)
       }

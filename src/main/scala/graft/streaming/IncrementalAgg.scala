@@ -90,8 +90,8 @@ object IncrementalAgg {
     * retracted extremum is then answered by the runner-up from the
     * list; the mirror is recomputed only when the list DRAINS (all K
     * best retracted before fresh inserts refill it) — O(1) amortized
-    * mirror reads instead of one per retraction batch. The StreamSweep
-    * views sweep measured the per-retraction recompute as the dominant
+    * mirror reads instead of one per retraction batch. A views sweep
+    * (with the since-removed StreamSweep dev main) measured the per-retraction recompute as the dominant
     * extrema-view cost (drain 36k → 19k ev/s for ONE max view). */
   private[streaming] val CandK = 8
 

@@ -562,6 +562,81 @@ class CdcPipelineSpec extends SparkSpec {
     assert(CdcPipeline.tableViolations(spark, cfg, "good_v").count() == 1)
   }
 
+  test("processBatch returns its stage clock: every stage >= 0, total " +
+    "within the call's wall time") {
+    val root = Files.createTempDirectory("graft-pipe-clock").toString
+    val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
+      s"$root/dlq", s"$root/ckpt", consistentSnapshots = true,
+      aggViews = Map("v_by_v" -> CdcPipeline.AggView("ventas",
+        IncrementalAgg.Spec(Seq("v"), Nil, maxCols = Seq("id")))))
+    val batch = Seq(rec("ventas", 1, "a", "r", 1000, 0),
+      rec("ventas", 2, "b", "r", 1000, 1), rec("compras", 7, "z", "r", 1000, 2),
+      Rec("mysql-server.pos_bi_db.ventas", "k", "{broken", 0, 3)).toDF()
+    val t0 = System.nanoTime()
+    val st = CdcPipeline.processBatch(batch, 0L, cfg)
+    val wall = (System.nanoTime() - t0) / 1e9
+    val stages = Seq(st.route, st.merge, st.views, st.snapshot, st.dlq)
+    assert(stages.forall(_ >= 0), st)
+    assert(st.total == stages.sum && st.total <= wall, s"$st vs wall $wall")
+    // the clock rides the production plan: the batch really landed
+    assert(CdcPipeline.mirror(spark, cfg, "ventas").count() == 2)
+    assert(CdcPipeline.aggView(spark, cfg, "v_by_v").count() == 2)
+    assert(CdcPipeline.deadLetters(spark, cfg).count() == 1)
+  }
+
+  test("rereadIsStable: in-memory micro-batches and parquet reads are " +
+    "re-read; any other leaf persists the routed batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Rec]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val q = ms.toDF().writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen.add(CdcPipeline.rereadIsStable(b)); ()
+      }.start()
+    try {
+      ms.addData(rec("ventas", 1, "a", "r", 1000, 0))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen.toArray.toSeq == Seq(true))
+
+    val dir = Files.createTempDirectory("graft-pipe-stable").toString
+    Seq(rec("ventas", 1, "a", "r", 1000, 0)).toDF()
+      .write.mode("overwrite").parquet(s"$dir/batch")
+    val parquet = spark.read.parquet(s"$dir/batch")
+    val ranged = spark.range(1, 2).selectExpr(
+      "'mysql-server.pos_bi_db.ventas' AS topic", "'k' AS key",
+      """concat('{"payload":{"after":{"id":', id, ',"v":"a"},"op":"r",""" +
+        """"ts_ms":1000}}') AS value""",
+      "0 AS partition", "id AS offset")
+    assert(CdcPipeline.rereadIsStable(parquet))
+    assert(!CdcPipeline.rereadIsStable(ranged))
+
+    // processBatch acts on the verdict: only the unstable batch's routed
+    // frame is cached while its merge runs
+    def routedCachedDuringMerge(batch: org.apache.spark.sql.DataFrame,
+                                name: String): Boolean = {
+      val cached = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val sink = new graft.sinks.MapSink {
+        override def merge(s: org.apache.spark.sql.SparkSession,
+                           tableRoot: String,
+                           changes: org.apache.spark.sql.DataFrame,
+                           keyCols: Seq[String], batchId: Long): Unit = {
+          cached.set(batch.withColumn("table_name",
+            Envelope.route(org.apache.spark.sql.functions.col("topic")))
+            .storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+          super.merge(s, tableRoot, changes, keyCols, batchId)
+        }
+      }
+      val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$dir/$name/mirror",
+        s"$dir/$name/dlq", s"$dir/$name/ckpt", sinkOverride = Some(sink))
+      CdcPipeline.processBatch(batch, 0L, cfg)
+      assert(sink.read(spark, s"$dir/$name/mirror/ventas").count() == 1)
+      cached.get
+    }
+    assert(!routedCachedDuringMerge(parquet, "parquet"))
+    assert(routedCachedDuringMerge(ranged, "range"))
+  }
+
   test("monitoring listener observes batches; lag alert fires on big batch") {
     val cfg = freshCfg()
     val mon = Monitoring.attach(spark)

@@ -45,6 +45,27 @@ object Envelope {
     raw.withColumn("env",
       from_json(col("value").cast("string"), envelopeSchema(rowSchema)))
 
+  /** `parsed` with both row images cut to `rowSchema`'s fields, in its
+    * order: the shape `parse(raw, rowSchema)` yields, read off a parse
+    * whose row schema is a superset of `rowSchema` with the same types.
+    * Null envelopes, payloads and images stay null; a parse already at
+    * `rowSchema` is returned as is. */
+  def narrow(parsed: DataFrame, rowSchema: StructType): DataFrame = {
+    val after = parsed.select(col("env.payload.after")).schema.head.dataType
+    if (after == rowSchema.toNullable) return parsed
+    val payload = col("env.payload")
+    def image(side: String): Column = {
+      val img = payload.getField(side)
+      when(img.isNotNull,
+        struct(rowSchema.fieldNames.toSeq.map(f => img.getField(f).as(f)): _*))
+    }
+    parsed.withColumn("env", when(col("env").isNotNull, struct(
+      when(payload.isNotNull, struct(image("before").as("before"),
+        image("after").as("after"), payload.getField("source").as("source"),
+        payload.getField("op").as("op"), payload.getField("ts_ms").as("ts_ms")))
+        .as("payload"))))
+  }
+
   /** A record is well-formed iff it parsed AND carries an op code.
     * Tombstones (null value) are NOT dead letters.
     *

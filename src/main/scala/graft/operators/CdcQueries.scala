@@ -590,7 +590,12 @@ object CdcQueries {
         val (src, view) = (s"$root/src", s"$root/view")
         val all = unwrapped(s, d)
         import graft.sinks.{IncrementalAggView, LogMirror}
-        val aggs = Seq(sum(col("o_totalprice")).as("sum_price"),
+        // the price sum is exact: each row's price (a 2-dp price times
+        // 1.1 or 1.2, so 3 dp up to double error) casts to a 6-dp
+        // decimal, which lands on the 3-dp value on both sides, and a
+        // decimal sum does not depend on summation order — a double sum
+        // near a .x5 boundary rounds differently per accumulation order
+        val aggs = Seq(sum(col("o_totalprice").cast("decimal(38,6)")).as("sum_price"),
           count(lit(1)).as("n_rows"), max(col("id")).as("max_id"))
         Seq(1000L, 2000L, 3000L, 4000L, 5000L).zipWithIndex.foreach {
           case (ts, i) =>
@@ -601,11 +606,13 @@ object CdcQueries {
         }
         IncrementalAggView.read(s, view)
           .select(col("o_orderstatus"),
-            round(col("sum_price"), 1).as("sum_price"),
+            round(col("sum_price"), 1).cast("double").as("sum_price"),
             col("n_rows"), col("max_id"))
       },
       Some(s"""WITH fin AS ($oracleFinalState)
-              |SELECT o_orderstatus, round(sum(o_totalprice), 1) AS sum_price,
+              |SELECT o_orderstatus,
+              |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))), 1) AS DOUBLE)
+              |    AS sum_price,
               |  count(*) AS n_rows, max(id) AS max_id
               |FROM fin GROUP BY 1""".stripMargin),
       "incrementally-maintained aggregate view over the log mirror's " +

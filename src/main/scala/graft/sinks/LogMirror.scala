@@ -280,55 +280,93 @@ object LogMirror {
     }
   }
 
-  /** Group merge for same-schema same-key tables (the steady-state
-    * shape of a multi-table CDC pipeline): ONE `(table, key)`-keyed
-    * latest-per-key pass and ONE `partitionBy(table)` write land
-    * EVERY table's delta segment in a single Spark job; each table then
-    * receives its segment by a metadata rename and commits its own
-    * manifest. Per-table crash semantics are unchanged — segments land
-    * before manifests, a replayed batch overwrites its own slot — and a
-    * crash mid-loop leaves the remaining tables' manifests at the prior
-    * batch, which the replay completes. Steady-state job count is O(1)
-    * in the table count instead of O(tables). `changes` must carry
-    * `tableCol`; tables absent from the batch are untouched.
+  /** One table of a [[mergeGroup]]: its mirror name, its key columns
+    * and its registered row columns (keys included, in row order). */
+  final case class GroupTable(name: String, keyCols: Seq[String],
+                              columns: Seq[String])
+
+  /** Group merge: ONE latest-per-key pass and ONE `partitionBy(table)`
+    * write land the delta segment of every table in `tables`, whatever
+    * their keys and row schemas; each table then receives its segment
+    * by a metadata rename and commits its own manifest. Per-table crash
+    * semantics are unchanged: segments land before manifests, a
+    * replayed batch overwrites its own slot, and a crash mid-loop
+    * leaves the remaining tables' manifests at the prior batch, which
+    * the replay completes. The job count does not depend on the number
+    * of tables or schemas. Tables absent from the batch are untouched.
     *
-    * The kernel's `(table, key)` hash exchange is the write's only
-    * exchange: AQE coalesces its partitions to the batch's bytes, so a
-    * small trigger writes one file per table rather than one per
-    * shuffle partition, and the kernel's key order serves the
-    * key-sorted write without another sort. */
+    * `changes` carries `tableCol`, the union of the tables' columns and
+    * the change metadata (`op`, `ts_ms`, `offset`, ...); a table's rows
+    * hold nulls in the columns it does not register. Same-named columns
+    * must share one type. The kernel is keyed by `tableCol` plus every
+    * key column of the group, each MASKED to the tables keyed on it: a
+    * key column is null on the rows of every other table. Keying on the
+    * raw column instead would split one table's rows by a foreign-key
+    * column that happens to be another table's key (`ventas.id_entidad`
+    * is the key of `entidades`), and an update that changed it would
+    * leave two live rows. Columns a table does not register are nulled
+    * on its rows before the write, and each manifest pins the table's
+    * OWN columns (keys first, then its other columns in row order, then
+    * the version columns: the layout [[merge]] writes), so a read never
+    * sees another table's columns.
+    *
+    * The kernel's hash exchange is the write's only exchange: AQE
+    * coalesces its partitions to the batch's bytes, so a small trigger
+    * writes one file per table rather than one per shuffle partition,
+    * and the kernel's key order serves the key-sorted write without
+    * another sort. */
   def mergeGroup(spark: SparkSession, mirrorRoot: String, changes: DataFrame,
-                 tables: Seq[String], keyCols: Seq[String], batchId: Long,
-                 maxDeltas: Int, bucketCount: Option[Int],
+                 tables: Seq[GroupTable], batchId: Long, maxDeltas: Int,
+                 bucketCount: Option[Int],
                  tableCol: String = "table_name"): Unit = {
     val fs = new Path(mirrorRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tables.foreach(t => precheck(fs, s"$mirrorRoot/$t", keyCols, batchId))
-    val delta = Materialize.versionedState(changes, tableCol +: keyCols)
-    val segSchema = StructType(delta.schema.filterNot(_.name == tableCol))
+    tables.foreach(t => precheck(fs, s"$mirrorRoot/${t.name}", t.keyCols, batchId))
+    // `c` restricted to the rows of the tables `having` it
+    def maskedTo(having: GroupTable => Seq[String])(c: String): Column = {
+      val owners = tables.filter(having(_).contains(c)).map(_.name)
+      if (owners.size == tables.size) col(c)
+      else when(col(tableCol).isin(owners: _*), col(c))
+    }
+    val dataCols = tables.flatMap(_.columns).distinct
+    val keys = tables.flatMap(_.keyCols).distinct
+    // a key every table shares keys the kernel as it is; any other key
+    // column keys it through a masked copy
+    val kernelKeys = keys.map(k =>
+      if (tables.forall(_.keyCols.contains(k))) k else s"_gk_$k")
+    val masked = changes.select(changes.columns.toSeq.map(c =>
+      if (dataCols.contains(c)) maskedTo(_.columns)(c).as(c) else col(c)) ++
+      keys.zip(kernelKeys).collect { case (k, g) if g != k =>
+        maskedTo(_.keyCols)(k).as(g) }: _*)
+    val kernelCols = tableCol +: kernelKeys
+    val delta = Materialize.versionedState(masked, kernelCols)
     val tmp = new Path(mirrorRoot,
       s".log_group_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       // one write: partition dirs split per table, rows key-sorted
       // within each task so every file's row groups carry usable stats
-      delta.sortWithinPartitions((tableCol +: keyCols).map(col): _*)
+      delta.sortWithinPartitions(kernelCols.map(col): _*)
+        .drop(kernelKeys.filterNot(keys.contains): _*)
         .write.partitionBy(tableCol).mode("overwrite").parquet(tmp.toString)
       tables.foreach { t =>
-        val part = new Path(tmp, s"$tableCol=$t")
+        val part = new Path(tmp, s"$tableCol=${t.name}")
         if (fs.exists(part)) { // absent = no surviving changes for t
-          val root = s"$mirrorRoot/$t"
+          val root = s"$mirrorRoot/${t.name}"
           val dst = new Path(deltaPath(root, batchId))
           fs.delete(dst, true) // replay overwrites its own slot
           graft.core.LocalFs.mkdirs(fs, dst.getParent)
           if (!fs.rename(part, dst))
-            sys.error(s"delta segment rename failed for $t")
+            sys.error(s"delta segment rename failed for ${t.name}")
           // stagger the folds: the group shares one batch counter, so
           // every table would hit maxDeltas on the SAME trigger and the
           // amortized fold would become a global pause; a deterministic
           // per-table offset spreads folds over [maxDeltas, 1.5×maxDeltas)
-          val stagger = math.abs(t.hashCode) % (maxDeltas / 2 + 1)
-          commitDelta(spark, fs, root, keyCols, batchId,
-            maxDeltas + stagger, bucketCount, segSchema)
+          val stagger = math.abs(t.name.hashCode) % (maxDeltas / 2 + 1)
+          val own = t.keyCols ++ t.columns.filterNot(t.keyCols.contains) ++
+            versionCols :+ Materialize.deletedFlag
+          commitDelta(spark, fs, root, t.keyCols, batchId,
+            maxDeltas + stagger, bucketCount,
+            StructType(own.map(delta.schema(_))))
         }
       }
     } finally fs.delete(tmp, true)

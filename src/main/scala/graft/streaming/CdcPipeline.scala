@@ -4,16 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.cdc.Envelope
 import graft.core.SwapPublish
 
 /** The CDC replication pipeline as a Structured Streaming job — the
   * Spark-native equivalent of the reference's Kafka Connect sink chain
-  * (EP1): envelope stream → route → per-table parse (each table has its
-  * own registered schema) → DLQ split → unwrap → upsert-merge into
-  * current-state mirrors.
+  * (EP1): envelope stream → route → one parse over the union of the
+  * tables' registered row schemas → DLQ split → unwrap → upsert-merge
+  * into current-state mirrors.
   *
   * Semantics carried over from the reference:
   *   - at-least-once delivery + idempotent keyed merge = effectively-once
@@ -136,66 +136,94 @@ object CdcPipeline {
   /** Start the pipeline on a streaming DataFrame of Kafka-shaped records
     * (topic, key, value, partition, offset) — from
     * `spark.readStream.format("kafka")` in production, MemoryStream in
-    * tests. */
-  def start(records: DataFrame, cfg: Config): StreamingQuery =
+    * tests. Whether each micro-batch's routed frame is persisted is
+    * decided here, once, from the source: `foreachBatch` hands every
+    * micro-batch over as an RDD-backed relation, whatever the source,
+    * so the batch's own plan cannot tell a broker read from an
+    * in-memory one (see [[rereadIsStable]]). */
+  def start(records: DataFrame, cfg: Config): StreamingQuery = {
+    val persistRouted = !rereadIsStable(records)
     records.writeStream
       .queryName("cdc-replication")
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, cfg); ()
+        processBatch(batch, batchId, cfg, persistRouted); ()
       }
       .start()
+  }
 
-  /** One micro-batch: route → parse (ONE pass per distinct registered
-    * schema, not per table) → per-table merge (concurrent) → one
-    * consolidated DLQ append. Runs on the driver but every DataFrame op
-    * is distributed; the only driver-side data is the list of table
-    * names present in the batch (≤ #tables).
-    *
-    * Tables sharing a row schema share one from_json pass and ONE cached
-    * frame: with N same-schema tables the old per-table formulation
-    * scanned the routed cache N times and pinned N subsets; this parses
-    * every record exactly once regardless of fan-out.
-    *
-    * Returns the batch's [[StageTimings]]. */
+  /** [[processBatch]] with the persist decision read off `batch`'s own
+    * plan: the entry point for batches built outside [[start]]. */
   def processBatch(batch: DataFrame, batchId: Long,
-                   cfg: Config): StageTimings = {
+                   cfg: Config): StageTimings =
+    processBatch(batch, batchId, cfg, !rereadIsStable(batch))
+
+  /** One micro-batch, planned as one group however many row schemas
+    * its tables have: route → ONE envelope parse over the union of the
+    * batch's registered row schemas (see [[parseGroups]]), cached once
+    * → ONE group merge for every LogMirror table without expectations
+    * (one latest-per-key pass and one partitioned write, see
+    * [[graft.sinks.LogMirror.mergeGroup]]) → one consolidated DLQ probe
+    * and append. Expectation-gated tables, non-LogMirror sinks, agg
+    * views and signal-snapshot chunks read the same parse, cut to their
+    * table's own columns ([[Envelope.narrow]]). Tables whose same-named
+    * columns differ in type parse and merge as separate groups through
+    * the same code; otherwise the batch's job count does not depend on
+    * how many schemas its tables have. Runs on the driver but every
+    * DataFrame op is distributed; the only driver-side data is the list
+    * of table names present in the batch (≤ #tables).
+    *
+    * `persistRouted` caches the routed batch for the stats pass and the
+    * parse-cache fill: set it when re-reading the source is expensive
+    * or unstable (a broker). Returns the batch's [[StageTimings]]. */
+  def processBatch(batch: DataFrame, batchId: Long, cfg: Config,
+                   persistRouted: Boolean): StageTimings = {
     val spark = batch.sparkSession
     val t0 = System.nanoTime()
     def secsSince(t: Long) = (System.nanoTime() - t) / 1e9
-    // Cache the routed batch only when re-reading the source is
-    // expensive or unstable (see rereadIsStable): the clean-path batch
-    // is read at most twice (table stats + parse-cache fill), and the
-    // columnar cache of the full payload costs MORE than that re-read
-    // for a cheap, byte-stable source (~1 s per 271k-event batch,
-    // measured — it dominated the route stage).
-    val doPersist = !rereadIsStable(batch)
+    // Without the persist, the clean-path batch is read at most twice
+    // (table stats + parse-cache fill): for a cheap, byte-stable source
+    // the columnar cache of the full payload costs MORE than that
+    // re-read (~1 s per 271k-event batch, measured — it dominated the
+    // route stage).
     val routed0 = batch
       .withColumn("table_name", Envelope.route(col("topic")))
-    val routed = if (doPersist) routed0.persist() else routed0
+    val routed = if (persistRouted) routed0.persist() else routed0
     try {
       // one pass yields the table list plus the unroutable flag (and,
       // when caching is on, fills the route cache) — the DLQ stage
       // below then never has to rescan `routed` to learn whether any
       // topic routed nowhere
       val tstats = routed.groupBy(col("table_name")).count().collect()
-      val tables = tstats.map(_.getString(0)).filter(_ != "")
+      val tables = tstats.map(_.getString(0)).filter(_ != "").toSeq.sorted
       val hasUnroutable = tstats.exists(_.getString(0) == "")
       val tRoute = secsSince(t0)
 
-      val bySchema = tables.toSeq.groupBy(t => cfg.specFor(t).rowSchema)
-      val parsedBySchema = bySchema.map { case (schema, ts) =>
-        val sub = routed.filter(col("table_name").isin(ts: _*))
-        // the well-formed bit is materialized INTO the cache: the
-        // clean-batch DLQ probe below then skips every cached batch
-        // via the boolean's min/max batch stats instead of
-        // decompressing value+env for all rows to find nothing
-        // (measured ~30% of batch wall before), and the merge filters
-        // read one boolean instead of re-evaluating the predicate
-        schema -> Envelope.parse(sub, schema)
-          .withColumn("_wf", Envelope.isWellFormed.cast("int")).persist()
+      // the well-formed bit is materialized INTO the cache: the
+      // clean-batch DLQ probe below then skips every cached batch via
+      // the boolean's min/max batch stats instead of decompressing
+      // value+env for all rows to find nothing (measured ~30% of batch
+      // wall before), and the merge filters read one boolean instead of
+      // re-evaluating the predicate
+      def parseAs(raw: DataFrame, schema: StructType): DataFrame =
+        Envelope.parse(raw, schema)
+          .withColumn("_wf", Envelope.isWellFormed.cast("int"))
+      val parsedGroups = parseGroups(tables, cfg).map { case (ts, schema) =>
+        ts -> parseAs(routed.filter(col("table_name").isin(ts: _*)), schema)
+          .persist()
       }
+      val parses = parsedGroups.map(_._2)
+      val parsedOf = parsedGroups.flatMap { case (ts, p) => ts.map(_ -> p) }.toMap
+      // a table's rows of this batch, shaped as a parse with its own row
+      // schema (an empty parse for a table absent from the batch)
+      def ownParse(t: String): DataFrame = {
+        val rowSchema = cfg.specFor(t).rowSchema
+        parsedOf.get(t).fold(parseAs(routed.filter(lit(false)), rowSchema))(p =>
+          Envelope.narrow(p.filter(col("table_name") === t), rowSchema))
+      }
+      def ownChanges(t: String): DataFrame = Envelope.unwrap(
+        ownParse(t).filter(col("_wf") === 1), cfg.specFor(t).keyCols)
 
       // Signal-driven incremental snapshots: plan this batch's chunk
       // per active table (DBLog dedup against THIS batch's changes);
@@ -203,30 +231,23 @@ object CdcPipeline {
       // regular merge below, idle tables merge their chunk alone.
       val snapPlan =
         if (cfg.signalDir.isEmpty) SignalSnapshot.noop
-        else SignalSnapshot.plan(spark, cfg, batchId, t => {
-          val spec = cfg.specFor(t)
-          val parsed = parsedBySchema.getOrElse(spec.rowSchema,
-            Envelope.parse(routed.filter(lit(false)), spec.rowSchema)
-              .withColumn("_wf", Envelope.isWellFormed.cast("int")))
-          Envelope.unwrap(parsed.filter(col("table_name") === t &&
-            col("_wf") === 1), spec.keyCols)
-        })
+        else SignalSnapshot.plan(spark, cfg, batchId, ownChanges)
       try {
         // Merges are submitted concurrently: each is an independent Spark
         // job, so many small per-table batches don't serialize on the
         // driver (the reference is single-threaded here, tasks.max=1).
-        // Tables sharing (row schema, key) merge in ONE job — one
-        // (table, key)-keyed latest-per-key + one partitioned write for the
-        // whole group instead of a shuffle + write + commit per table
-        // (the reference's 9-table fan-out is exactly this regime).
+        // The LogMirror tables of a parse group merge in ONE job — one
+        // (table, masked key)-keyed latest-per-key + one partitioned
+        // write for the whole group instead of a shuffle + write +
+        // commit per table (the reference's 9-table fan-out is exactly
+        // this regime).
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: ExecutionContext = mergeEc
         // mergeFor maps each table to the future completing its mirror
         // merge — view updates with max maintenance sequence on it (the
         // dirty-group recompute must read the POST-batch mirror)
-        // Log mirrors take the unified group-merge fast path (one job
-        // per same-schema same-key group — a layout-specific
+        // Log mirrors take the group-merge fast path (a layout-specific
         // optimization); every other sink merges per table through the
         // MirrorSink interface.
         val groupSink = cfg.mirrorSink match {
@@ -264,13 +285,11 @@ object CdcPipeline {
               batchId)
           } finally ann.unpersist()
         }
-        def perTableJob(parsed: DataFrame, t: String): Future[Unit] = Future {
+        def perTableJob(t: String): Future[Unit] = Future {
           val spec = cfg.specFor(t)
-          val sub = parsed.filter(col("table_name") === t).drop("table_name")
-          val base = Envelope.unwrap(sub.filter(col("_wf") === 1),
-            spec.keyCols)
           // snapshot chunk rides the table's own merge (same delta,
           // same commit — atomic and replay-idempotent with the batch)
+          val base = ownChanges(t)
           val unwrapped = snapPlan.chunkFor(t)
             .map(base.unionByName(_)).getOrElse(base)
           cfg.expectations.get(t).filter(_.nonEmpty) match {
@@ -282,22 +301,16 @@ object CdcPipeline {
         def hasRules(t: String) =
           cfg.expectations.get(t).exists(_.nonEmpty)
         val jobsWithTables: Seq[(Seq[String], Future[Unit])] =
-          bySchema.toSeq.flatMap { case (schema, ts) =>
-            val parsed = parsedBySchema(schema)
-            groupSink match {
-              case None =>
-                ts.map(t => Seq(t) -> perTableJob(parsed, t))
-              case Some(sink) =>
-                val (gated, fast) = ts.partition(hasRules)
-                gated.map(t => Seq(t) -> perTableJob(parsed, t)) ++
-                  fast.groupBy(t => cfg.specFor(t).keyCols).values.toSeq
-                    .map { group =>
-                      group -> Future {
-                        mergeGroupIntoLogMirrors(spark, parsed, group, cfg,
-                          sink, batchId, snapPlan)
-                      }
-                    }
+          parsedGroups.flatMap { case (ts, parsed) =>
+            val (perTable, fast) = groupSink match {
+              case None => (ts, Nil)
+              case Some(_) => ts.partition(hasRules)
             }
+            perTable.map(t => Seq(t) -> perTableJob(t)) ++
+              Option.when(fast.nonEmpty)(fast -> Future {
+                mergeGroupIntoLogMirrors(spark, parsed, fast, cfg,
+                  groupSink.get, batchId, snapPlan)
+              })
           }
         // active snapshot tables with NO events this batch still make
         // chunk progress: their chunk merges alone (manifest ids still
@@ -335,9 +348,7 @@ object CdcPipeline {
             }
             vs.map { case (name, v) =>
               mergeFor(table).map { _ =>
-                val parsed = parsedBySchema(cfg.specFor(table).rowSchema)
-                  .filter(col("table_name") === table)
-                updateAggView(spark, name, parsed, v, batchId, cfg,
+                updateAggView(spark, name, ownParse(table), v, batchId, cfg,
                   () => shared)
                 cfg.tableExpectations.get(name).foreach(te =>
                   checkTableExpectations(spark, name, v, te, batchId, cfg))
@@ -358,21 +369,20 @@ object CdcPipeline {
         // whole batch returns), so ordering it before the merges
         // finish loses nothing.
         //
-        // The emptiness probe itself is ONE aggregation job per cached
-        // schema frame (min over the materialized _wf ints) instead of
-        // the previous take(1) over a filter — take's limit-escalation
-        // runs up to four sequential jobs (1, 4, 16, then all cache
-        // partitions) to conclude a clean batch has nothing, paying
-        // scheduler latency four times; the min-agg answers in one
-        // cached columnar pass.
+        // The emptiness probe itself is ONE aggregation job (min over
+        // the materialized _wf ints of every parse cache) instead of a
+        // take(1) over a filter — take's limit-escalation runs up to
+        // four sequential jobs (1, 4, 16, then all cache partitions) to
+        // conclude a clean batch has nothing, paying scheduler latency
+        // four times; the min-agg answers in one cached columnar pass.
         val dlqJob: Future[Unit] = Future {
-          val hasMalformed = hasUnroutable || parsedBySchema.values
-            .exists(p => p.agg(coalesce(min(col("_wf")), lit(1)))
-              .head().getInt(0) == 0)
+          val hasMalformed = hasUnroutable || parses.nonEmpty &&
+            parses.map(_.select(col("_wf"))).reduce(_ union _)
+              .agg(coalesce(min(col("_wf")), lit(1))).head().getInt(0) == 0
           if (hasMalformed) {
             val unroutable = routed.filter(col("table_name") === "")
               .select(col("value").cast("string").as("payload_json"))
-            val dlqAll = parsedBySchema.values
+            val dlqAll = parses
               .map(p => p.filter(col("_wf") === 0)
                 .select(col("value").cast("string").as("payload_json")))
               .foldLeft(unroutable)(_ unionByName _)
@@ -411,7 +421,7 @@ object CdcPipeline {
           // same id idempotently).
           if (cfg.consistentSnapshots)
             graft.sinks.SnapshotCatalog.commit(spark, cfg.mirrorRoot, batchId,
-              tables.toSeq)
+              tables)
           val tSnap = secsSince(t0)
 
           // DLQ join point: malformed envelopes from every table +
@@ -434,17 +444,47 @@ object CdcPipeline {
           (jobs ++ viewJobs :+ dlqJob).foreach(Await.ready(_, Duration.Inf))
           sharedMirrors.forEach(_.unpersist())
         }
-      } finally parsedBySchema.values.foreach(_.unpersist())
-    } finally if (doPersist) { routed.unpersist(); () }
+      } finally parses.foreach(_.unpersist())
+    } finally if (persistRouted) { routed.unpersist(); () }
+  }
+
+  /** The batch's tables grouped to share one envelope parse, each group
+    * with the union of its members' row schemas (first-seen column
+    * order, every field nullable). A table joins the first group in
+    * which every column name it shares has the same type as its own
+    * (nullability aside); the reference's nine tables form one group. A
+    * table whose same-named column differs in type — a conflict, or
+    * even a widening (`SchemaEvolution.widensTo`): one shared column
+    * would pin the narrower table's mirror at the wider type — parses
+    * in a group of its own. */
+  private[streaming] def parseGroups(tables: Seq[String],
+      cfg: Config): Seq[(Seq[String], StructType)] = {
+    def sameType(a: DataType, b: DataType) =
+      StructType(Seq(StructField("c", a))).toNullable ==
+        StructType(Seq(StructField("c", b))).toNullable
+    tables.foldLeft(Vector.empty[(Seq[String], StructType)]) { (groups, t) =>
+      val row = cfg.specFor(t).rowSchema
+      groups.indexWhere { case (_, union) =>
+        row.forall(f => union.find(_.name == f.name)
+          .forall(u => sameType(u.dataType, f.dataType)))
+      } match {
+        case -1 => groups :+ (Seq(t) -> row.toNullable)
+        case i =>
+          val (ts, union) = groups(i)
+          groups.updated(i, (ts :+ t) -> StructType(union ++
+            row.filterNot(f => union.fieldNames.contains(f.name))).toNullable)
+      }
+    }
   }
 
   /** True when re-evaluating `df` is cheap AND deterministic: every
-    * leaf of its analyzed plan is a local in-memory relation (MemoryStream
-    * batches), an RDD-backed relation, or a file-snapshot relation
-    * (parquet/csv/... fixtures — a re-read returns the same bytes).
-    * Anything else — Kafka/JDBC/DSv2 external relations — is treated
-    * as expensive/unstable, so the routed batch gets persisted to
-    * guarantee the stats pass and the merge/DLQ passes observe the
+    * leaf of its analyzed plan is a local in-memory relation, an
+    * RDD-backed relation (a `foreachBatch` micro-batch), a file-snapshot
+    * relation (parquet/csv/... fixtures — a re-read returns the same
+    * bytes), or, for a streaming frame, a MemoryStream or file source.
+    * Anything else — Kafka/rate/JDBC/DSv2 external relations — is
+    * treated as expensive/unstable, so the routed batch gets persisted
+    * to guarantee the stats pass and the merge/DLQ passes observe the
     * SAME data. The analyzed plan, not the parsed one: a
     * `spark.read.parquet` frame's parsed leaf is an unresolved data
     * source, which only analysis turns into the file relation. */
@@ -454,34 +494,52 @@ object CdcPipeline {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation.isInstanceOf[
           org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+      case s: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
+        s.table.getClass.getSimpleName == "MemoryStreamTable"
+      case s: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
+        classOf[org.apache.spark.sql.execution.datasources.FileFormat]
+          .isAssignableFrom(s.dataSource.providingClass)
       case leaf =>
         val n = leaf.getClass.getSimpleName
         n == "LogicalRDD" || n == "OneRowRelation"
     }
 
-  /** Group merge for same-schema same-key tables on the LOG-STRUCTURED
-    * layout: one latest-per-key job + one partitioned write lands every
-    * table's delta segment (see [[graft.sinks.LogMirror.mergeGroup]]) —
-    * steady-state job count O(1) in the table count, write bytes still
-    * ∝ batch. */
+  /** Group merge for the LogMirror tables `ts` of one parse group: one
+    * latest-per-key job + one partitioned write lands every table's
+    * delta segment (see [[graft.sinks.LogMirror.mergeGroup]]), each
+    * table keyed by its own key columns and committing its own row
+    * schema — steady-state job count O(1) in the table count, write
+    * bytes still ∝ batch. */
   private def mergeGroupIntoLogMirrors(spark: SparkSession,
                                        parsed: DataFrame, ts: Seq[String],
                                        cfg: Config,
                                        sink: graft.sinks.LogMirrorSink,
                                        batchId: Long,
                                        snap: SignalSnapshot.Planned): Unit = {
-    val spec = cfg.specFor(ts.head) // group = same rowSchema + keyCols
+    val members = ts.map { t =>
+      val spec = cfg.specFor(t)
+      graft.sinks.LogMirror.GroupTable(t, spec.keyCols,
+        spec.rowSchema.fieldNames.toSeq)
+    }
+    // columns only tables outside `ts` register stay out of the write
+    val rowCols = members.flatMap(_.columns).toSet
+    val foreign = parsed.select(col("env.payload.after.*")).columns
+      .filterNot(rowCols)
+    // unwrapping with every key column of the group backfills each from
+    // the record key when the after-image lacks it (deletes); a
+    // Debezium record key carries only its own table's key fields
     val changes0 = Envelope.unwrap(
       parsed.filter(col("table_name").isin(ts: _*) && col("_wf") === 1),
-      spec.keyCols)
+      members.flatMap(_.keyCols).distinct)
+      .drop(foreign.toSeq: _*)
       .withColumn("table_name", Envelope.route(col("topic")))
     // snapshot chunks join the group's change set with an EXPLICIT
     // table_name (their synthetic topic routes nowhere)
     val changes = ts.flatMap(t => snap.chunkFor(t)
         .map(_.withColumn("table_name", lit(t))))
-      .foldLeft(changes0)(_.unionByName(_))
-    graft.sinks.LogMirror.mergeGroup(spark, cfg.mirrorRoot, changes, ts,
-      spec.keyCols, batchId, sink.maxDeltas, sink.bucketCount)
+      .foldLeft(changes0)(_.unionByName(_, allowMissingColumns = true))
+    graft.sinks.LogMirror.mergeGroup(spark, cfg.mirrorRoot, changes, members,
+      batchId, sink.maxDeltas, sink.bucketCount)
   }
 
   /** Fold one batch's deltas into a maintained view's state. Delta

@@ -333,13 +333,14 @@ class LogMirrorSpec extends SparkSpec {
       changes(rows: _*).withColumn("table_name",
         org.apache.spark.sql.functions.lit(t))
     val tables = Seq("ta", "tb", "tc")
+    val members = tables.map(LogMirror.GroupTable(_, keyCols, Seq("id", "v")))
     val b0 = tagged("ta", (1L, "a", "r", 1000L, 0L), (2L, "b", "r", 1000L, 1L))
       .unionByName(tagged("tb", (1L, "x", "r", 1000L, 2L)))
     // tc absent from both batches
     val b1 = tagged("ta", (1L, "a2", "u", 2000L, 3L), (2L, "", "d", 2000L, 4L))
       .unionByName(tagged("tb", (9L, "y", "c", 2000L, 5L)))
     Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
-      LogMirror.mergeGroup(spark, groupRoot, b, tables, keyCols, i.toLong,
+      LogMirror.mergeGroup(spark, groupRoot, b, members, i.toLong,
         maxDeltas = 16, bucketCount = None)
       tables.foreach { t =>
         val sub = b.filter(col("table_name") === t).drop("table_name")
@@ -348,7 +349,7 @@ class LogMirrorSpec extends SparkSpec {
       }
     }
     // replay the last group batch (foreachBatch at-least-once)
-    LogMirror.mergeGroup(spark, groupRoot, b1, tables, keyCols, 1L,
+    LogMirror.mergeGroup(spark, groupRoot, b1, members, 1L,
       maxDeltas = 16, bucketCount = None)
     for (t <- Seq("ta", "tb")) {
       assert(state(s"$groupRoot/$t") == state(s"$soloRoot/$t"),

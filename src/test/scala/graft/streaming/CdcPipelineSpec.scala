@@ -730,4 +730,292 @@ class CdcPipelineSpec extends SparkSpec {
       "observed-only mode cannot see a tail drop (the documented " +
         "limitation the reference bound exists for)")
   }
+
+  // ---- one plan per trigger: union parse, one group merge ----------
+
+  /** Spark jobs launched while `f` runs (every test runs alone on the
+    * shared session); the listener bus is async, so the count settles
+    * once every started job has ended. */
+  private def jobsDuring(f: => Unit): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      val deadline = System.nanoTime() + 10000000000L
+      while ((started.get() == 0 || started.get() != ended.get()) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(200)
+      started.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics
+    .METRIC_COMPILATION_TIME.getCount
+
+  test("one plan per trigger: a nine-schema batch launches no more Spark " +
+    "jobs than a one-table batch; a same-shape repeat compiles almost " +
+    "nothing") {
+    import PosTables._
+    def fresh() = config(Files.createTempDirectory("graft-pipe-jobs").toString)
+    val one = Seq(table("ventas"))
+    // warm-up: both shapes once, so neither measured run pays first use
+    CdcPipeline.processBatch(batch(one, 20, 1000L).toDF(), 0L, fresh())
+    CdcPipeline.processBatch(batch(all, 20, 1000L).toDF(), 0L, fresh())
+    val jobsOne = jobsDuring(CdcPipeline.processBatch(
+      batch(one, 20, 1000L).toDF(), 0L, fresh()))
+    val jobsNine = jobsDuring(CdcPipeline.processBatch(
+      batch(all, 20, 1000L).toDF(), 0L, fresh()))
+    info(s"Spark jobs: one-table batch $jobsOne, nine-schema batch $jobsNine")
+    assert(jobsNine <= jobsOne, s"nine schemas $jobsNine > one table $jobsOne")
+
+    // two same-shape nine-table batches: the second reuses the first's
+    // generated classes (a per-schema plan set outgrew the codegen cache)
+    val cfg = fresh()
+    CdcPipeline.processBatch(batch(all, 20, 1000L).toDF(), 0L, cfg)
+    val before = compiles()
+    CdcPipeline.processBatch(batch(all, 20, 2000L, off0 = 1000L).toDF(), 1L, cfg)
+    val fresh2 = compiles() - before
+    info(s"classes compiled by the second same-shape batch: $fresh2")
+    assert(fresh2 <= 4, s"$fresh2 new classes on a same-shape repeat")
+  }
+
+  test("every mirror of a nine-schema batch reads exactly its registered " +
+    "columns and equals its own materialization") {
+    import PosTables._
+    val cfg = config(Files.createTempDirectory("graft-pipe-nine").toString)
+    val b0 = batch(all, 30, 1000L)
+    val b1 = (all.zipWithIndex.flatMap { case (t, ti) =>
+      Seq(change(t, 1, "u", 2000L, 1000L + 3 * ti),
+        change(t, 2, "d", 2000L, 1001L + 3 * ti),
+        change(t, 40, "c", 2000L, 1002L + 3 * ti))
+    } :+ Rec("mysql-server.pos_bi_db.ventas", "k", "{broken", 0, 2000L))
+    CdcPipeline.processBatch(b0.toDF(), 0L, cfg)
+    CdcPipeline.processBatch(b1.toDF(), 1L, cfg)
+    val records = (b0 ++ b1).toDF()
+    for (t <- all) {
+      val got = CdcPipeline.mirror(spark, cfg, t.name)
+      assert(got.schema == t.schema.toNullable, t.name)
+      assert(rows(got) == rows(expected(spark, t, records)), t.name)
+      assert(got.count() == 30, t.name) // 30 - 1 delete + 1 insert
+    }
+    assert(CdcPipeline.deadLetters(spark, cfg).count() == 1)
+  }
+
+  test("masked keys: an update of a foreign-key column that is another " +
+    "table's key leaves one live row") {
+    import PosTables._
+    val (ventas, entidades) = (table("ventas"), table("entidades"))
+    val cfg = config(Files.createTempDirectory("graft-pipe-fk").toString,
+      Seq(ventas, entidades))
+    // one batch holds venta 1 twice, its id_entidad moving 10 -> 20, and
+    // entidades 10 and 20; keyed on the raw union of key columns, the
+    // two ventas versions would be two keys and both would stay live
+    CdcPipeline.processBatch(Seq(
+      change(ventas, 1, "r", 1000L, 0, "id_entidad" -> 10L),
+      change(entidades, 10, "r", 1000L, 1), change(entidades, 20, "r", 1000L, 2),
+      change(ventas, 1, "u", 2000L, 3, "id_entidad" -> 20L)).toDF(), 0L, cfg)
+    def ventasRows() = CdcPipeline.mirror(spark, cfg, "ventas")
+      .select("id_venta", "id_entidad").as[(Long, Long)].collect().toSeq
+    assert(ventasRows() == Seq((1L, 20L)))
+    // and across batches: the next move lands on the same row
+    CdcPipeline.processBatch(Seq(
+      change(ventas, 1, "u", 3000L, 4, "id_entidad" -> 10L)).toDF(), 1L, cfg)
+    assert(ventasRows() == Seq((1L, 10L)))
+    assert(CdcPipeline.mirror(spark, cfg, "entidades").count() == 2)
+  }
+
+  test("same-named columns of different types parse apart: INT vs " +
+    "STRING, a key-type mismatch and a widening each split the group") {
+    import PosTables.{Table, config, change, expected, rows}
+    val a = Table("ta", "id", Seq("code" -> "INT"))
+    val b = Table("tb", "id", Seq("code" -> "STRING"))
+    val c = Table("tc", "id_c", Seq("v" -> "STRING"))
+    // tk keys on `code`, typed as ta's INT; td keys on `id_c` as a string
+    val k = Table("tk", "code", Seq("v" -> "STRING"))
+    val d = Table("td", "x", Seq("id_c" -> "STRING"))
+    val w = Table("tw", "id_c", Seq("w" -> "INT"))
+    val cfg = config(Files.createTempDirectory("graft-pipe-split").toString,
+      Seq(a, b, c, k, d, w)).copy(tableSpecs = Map(
+      "ta" -> a.spec, "tb" -> b.spec, "tc" -> c.spec, "td" -> d.spec,
+      "tw" -> w.spec.copy(rowSchema = StructType.fromDDL(
+        "id_c INT, w INT")),
+      "tk" -> CdcPipeline.TableSpec(StructType.fromDDL(
+        "code INT, v STRING"), Seq("code"))))
+    val groups = CdcPipeline.parseGroups(
+      Seq("ta", "tb", "tc", "td", "tk", "tw"), cfg).map(_._1.toSet).toSet
+    assert(groups == Set(Set("ta", "tc", "tk"), Set("tb", "td"), Set("tw")),
+      groups)
+    val recs = Seq(
+      change(a, 1, "r", 1000L, 0, "code" -> 5), change(a, 1, "u", 2000L, 1, "code" -> 6),
+      change(b, 1, "r", 1000L, 2, "code" -> "five"),
+      change(c, 7, "r", 1000L, 3), change(d, 3, "r", 1000L, 4, "id_c" -> "seven"),
+      Rec("mysql-server.pos_bi_db.tk", """{"payload":{"code":5}}""",
+        """{"payload":{"after":{"code":5,"v":"k5"},"op":"r","ts_ms":1000}}""", 0, 5),
+      Rec("mysql-server.pos_bi_db.tw", """{"payload":{"id_c":7}}""",
+        """{"payload":{"after":{"id_c":7,"w":70},"op":"r","ts_ms":1000}}""", 0, 6))
+    CdcPipeline.processBatch(recs.toDF(), 0L, cfg)
+    for (t <- Seq(a, b, c, d)) {
+      val got = CdcPipeline.mirror(spark, cfg, t.name)
+      assert(got.schema == t.schema.toNullable, t.name)
+      assert(rows(got) == rows(expected(spark, t, recs.toDF())), t.name)
+    }
+    assert(CdcPipeline.mirror(spark, cfg, "ta").as[(Long, Int)].collect()
+      .toSeq == Seq((1L, 6)))
+    assert(CdcPipeline.mirror(spark, cfg, "tk").schema.map(_.dataType) ==
+      Seq(IntegerType, StringType))
+    assert(CdcPipeline.mirror(spark, cfg, "tw").as[(Int, Int)].collect()
+      .toSeq == Seq((7, 70)))
+  }
+
+  test("a MapSink table receives only its own columns, even when its " +
+    "record carries a field another table registers") {
+    val a = StructType.fromDDL("id BIGINT, v STRING, a_only BIGINT")
+    val b = StructType.fromDDL("id BIGINT, v STRING, b_only STRING")
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    val sink = new graft.sinks.MapSink {
+      override def merge(s: org.apache.spark.sql.SparkSession, tableRoot: String,
+                         changes: org.apache.spark.sql.DataFrame,
+                         keyCols: Seq[String], batchId: Long): Unit = {
+        seen.put(tableRoot.split('/').last, changes.columns.toSeq)
+        val leaked = changes.columns.filter(Set("a_only", "b_only"))
+        if (leaked.nonEmpty)
+          assert(changes.select(leaked.map(changes.col).toIndexedSeq: _*).collect()
+            .forall(r => !r.isNullAt(0)))
+        super.merge(s, tableRoot, changes, keyCols, batchId)
+      }
+    }
+    val root = Files.createTempDirectory("graft-pipe-own").toString
+    val cfg = CdcPipeline.Config(a, Seq("id"), s"$root/mirror", s"$root/dlq",
+      s"$root/ckpt", sinkOverride = Some(sink),
+      tableSpecs = Map("ta" -> CdcPipeline.TableSpec(a, Seq("id")),
+        "tb" -> CdcPipeline.TableSpec(b, Seq("id"))))
+    CdcPipeline.processBatch(Seq(
+      Rec("mysql-server.pos_bi_db.ta", """{"payload":{"id":1}}""",
+        """{"payload":{"after":{"id":1,"v":"x","a_only":3,"b_only":"leak"},""" +
+          """"op":"r","ts_ms":1000}}""", 0, 0),
+      Rec("mysql-server.pos_bi_db.tb", """{"payload":{"id":2}}""",
+        """{"payload":{"after":{"id":2,"v":"y","b_only":"z"},"op":"r",""" +
+          """"ts_ms":1000}}""", 0, 1)).toDF(), 0L, cfg)
+    val meta = Seq("topic", "partition", "offset", "op", "ts_ms")
+    assert(seen.get("ta") == meta ++ a.fieldNames)
+    assert(seen.get("tb") == meta ++ b.fieldNames)
+    assert(sink.read(spark, s"$root/mirror/ta").as[(Long, String)].collect()
+      .toSeq == Seq((1L, "x")))
+  }
+
+  test("a batch mixing a gated table, an agg view, a signal-snapshot " +
+    "chunk and plain tables of other schemas matches Materialize") {
+    import PosTables._
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val root = Files.createTempDirectory("graft-pipe-mixed").toString
+    val (ventas, entidades, productos, cierres) = (table("ventas"),
+      table("entidades"), table("productos"), table("cierres_caja"))
+    val source = spark.range(0, 50).select(col("id").as("id_producto"),
+      lit(3L).as("id_categoria"), lit("src").as("nombre"),
+      lit(1).as("stock"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/signals"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/signals/s.json"),
+      ("""{"id":"sig-1","type":"execute-snapshot",""" +
+        """"data":{"data-collections":["productos"]}}""").getBytes("UTF-8"))
+    val cfg = config(root, Seq(ventas, entidades, productos, cierres)).copy(
+      expectations = Map("entidades" -> Seq(graft.operators.Expectations.Rule(
+        "has_ciudad", col("ciudad").isNotNull))),
+      quarantineDir = Some(s"$root/quarantine"),
+      aggViews = Map("by_entidad" -> CdcPipeline.AggView("ventas",
+        IncrementalAgg.Spec(Seq("id_entidad"), Nil, maxCols = Seq("total")))),
+      signalDir = Some(s"$root/signals"),
+      snapshotSources = Map("productos" -> (() => source)),
+      snapshotChunkKeys = 100)
+    val recs = batch(Seq(ventas, entidades, cierres), 12, 1000L) ++ Seq(
+      change(entidades, 5, "u", 2000L, 100, "ciudad" -> null), // quarantined
+      change(productos, 4, "u", 2000L, 101), change(productos, 70, "c", 2000L, 102),
+      // a second venta in entidad 22's group (the view folds inserts;
+      // a retraction needs the before-image Debezium sends)
+      change(ventas, 50, "c", 2000L, 103, "id_entidad" -> 22L))
+    CdcPipeline.processBatch(recs.toDF(), 0L, cfg)
+    val df = recs.toDF()
+    for (t <- Seq(ventas, cierres))
+      assert(rows(CdcPipeline.mirror(spark, cfg, t.name)) ==
+        rows(expected(spark, t, df)), t.name)
+    // the gated table: every change but the quarantined update
+    assert(rows(CdcPipeline.mirror(spark, cfg, "entidades")) ==
+      rows(expected(spark, entidades, df.filter(col("offset") =!= 100L))))
+    assert(spark.read.parquet(s"$root/quarantine/entidades")
+      .select("id_entidad").as[Long].collect().toSeq == Seq(5L))
+    // the snapshot table: the chunk at the signal epoch, overridden by
+    // the batch's own changes
+    val chunk = source.select(lit("graft-snapshot").as("topic"),
+      lit(0).as("partition"), lit(Long.MaxValue).as("offset"), lit("r").as("op"),
+      lit(0L).as("ts_ms"), col("id_producto"), col("id_categoria"),
+      col("nombre"), col("stock"))
+    val own = graft.cdc.Envelope.unwrap(graft.cdc.Envelope.parse(
+      df.filter(col("topic") === "mysql-server.pos_bi_db.productos"),
+      productos.schema), Seq("id_producto"))
+    assert(rows(CdcPipeline.mirror(spark, cfg, "productos")) == rows(
+      graft.cdc.Materialize.currentState(own.unionByName(chunk), Seq("id_producto"))))
+    assert(CdcPipeline.mirror(spark, cfg, "productos").count() == 51)
+    // the agg view: the one-shot GROUP BY over the ventas mirror
+    assert(rows(CdcPipeline.aggView(spark, cfg, "by_entidad")
+      .select("id_entidad", "n_rows", "max_total")) ==
+      rows(CdcPipeline.mirror(spark, cfg, "ventas").groupBy("id_entidad")
+        .agg(count(lit(1)).as("n_rows"), max(col("total")).as("max_total"))))
+  }
+
+  test("start decides the routed-batch persist from its source: a rate " +
+    "source mapped to the Kafka shape persists, a MemoryStream does not") {
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    // the parse cache reads a routed cache only when the routed batch
+    // was persisted
+    def readsRoutedCache(changes: org.apache.spark.sql.DataFrame): Boolean =
+      changes.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.exists(_.cacheBuilder.cachedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+      }.isDefined)
+    def run(records: org.apache.spark.sql.DataFrame,
+            feed: () => Unit): Boolean = {
+      val verdicts = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+      val sink = new graft.sinks.MapSink {
+        override def merge(s: org.apache.spark.sql.SparkSession, tableRoot: String,
+                           changes: org.apache.spark.sql.DataFrame,
+                           keyCols: Seq[String], batchId: Long): Unit = {
+          verdicts.add(readsRoutedCache(changes))
+          super.merge(s, tableRoot, changes, keyCols, batchId)
+        }
+      }
+      val root = Files.createTempDirectory("graft-pipe-src").toString
+      val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
+        s"$root/dlq", s"$root/ckpt", triggerMs = 10, sinkOverride = Some(sink))
+      val q = CdcPipeline.start(records, cfg)
+      try {
+        feed()
+        val deadline = System.nanoTime() + 60000000000L
+        while (verdicts.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      } finally q.stop()
+      assert(!verdicts.isEmpty, "no batch reached the sink")
+      assert(verdicts.asScala.toSet.size == 1, verdicts)
+      verdicts.peek()
+    }
+    val ms = MemoryStream[Rec]
+    assert(!run(ms.toDF(), () => ms.addData(rec("ventas", 1, "a", "r", 1000, 0))))
+    val rate = spark.readStream.format("rate").option("rowsPerSecond", "20")
+      .load().selectExpr("'mysql-server.pos_bi_db.ventas' AS topic",
+        """concat('{"payload":{"id":', value, '}}') AS key""",
+        """concat('{"payload":{"after":{"id":', value, ',"v":"a"},"op":"r",""" +
+          """"ts_ms":1000}}') AS value""",
+        "0 AS partition", "value AS offset")
+    assert(CdcPipeline.rereadIsStable(ms.toDF()))
+    assert(!CdcPipeline.rereadIsStable(rate))
+    assert(run(rate, () => ()))
+  }
 }

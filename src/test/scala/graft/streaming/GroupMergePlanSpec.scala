@@ -11,19 +11,21 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
-/** Plan audit for the unified CDC group merge: tables sharing a row
-  * schema and key must land their delta segments from ONE job whose
-  * plan has exactly ONE shuffle and ONE sort — the `(table_name, pk)`
-  * hash exchange and key sort of the latest-per-key kernel, whose
-  * output order also serves the key-sorted partitioned write — instead
-  * of a merge + write per table (PLANS.md "CDC group merge"). AQE
+/** Plan audit for the CDC group merge: the LogMirror tables of a
+  * batch — sharing a row schema or not — must land their delta segments
+  * from ONE job whose plan has exactly ONE shuffle and ONE sort — the
+  * `(table_name, masked keys)` hash exchange and key sort of the
+  * latest-per-key kernel, whose output order also serves the key-sorted
+  * partitioned write — over ONE parse cache, instead of a parse, merge
+  * and write per schema or per table (PLANS.md "CDC group merge"). AQE
   * coalescing that exchange sizes the write tasks: a small batch still
   * writes one file per table (the per-file create tax of a 288-file
   * dynamic-partition commit was once the measured merge floor).
   * Captured from the REAL pipeline via a QueryExecutionListener, on the
   * default sink and on an explicitly configured LogMirrorSink, so a
-  * refactor that silently reverts to per-table merges, adds a shuffle
-  * or a sort, or fans a small batch into many files fails here. */
+  * refactor that silently reverts to per-schema or per-table merges,
+  * adds a shuffle or a sort, or fans a small batch into many files
+  * fails here. */
 class GroupMergePlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -56,7 +58,7 @@ class GroupMergePlanSpec extends SparkSpec {
 
       val mirrorWrites = writes.filter(_.contains("table_name"))
       assert(mirrorWrites.size == 1,
-        s"same-schema tables must produce ONE group write, got " +
+        s"the batch's LogMirror tables must produce ONE group write, got " +
           s"${mirrorWrites.size}:\n${writes.mkString("\n----\n")}")
       // AQE's toString appends an "== Initial Plan ==" section that
       // repeats every node — read the final plan only
@@ -114,5 +116,17 @@ class GroupMergePlanSpec extends SparkSpec {
       // the writer-sizing repartition this path had before wrote one
       assert(files == 1, s"$t: $files files")
     }
+  }
+
+  test("a nine-schema batch plans one parse, one exchange, one sort, one " +
+    "LatestPerKey and one write") {
+    val cfg = PosTables.config(Files.createTempDirectory("graft-gm9").toString)
+    // groupWritePlan already asserts the one mirror write
+    val plan = groupWritePlan(PosTables.batch(PosTables.all, 40, 1000L), cfg)
+    assertOneExchangeOneSort(plan)
+    assert("LatestPerKey \\[".r.findAllIn(plan).size == 1, plan)
+    // the envelope parse: one cache, holding the parsed envelope
+    val caches = "InMemoryRelation \\[[^\\]]*\\]".r.findAllIn(plan).toSeq
+    assert(caches.size == 1 && caches.head.contains("env"), plan)
   }
 }

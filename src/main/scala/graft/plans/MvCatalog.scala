@@ -160,7 +160,7 @@ object MvCatalog {
     * defaults to the combined file-listing fingerprint of BOTH source
     * dirs (any change to either side falls the query through);
     * `freshCheck` overrides it for version-maintained views — e.g. an
-    * [[graft.sinks.IncrementalJoinView]] whose checkpoint versions must
+    * [[graft.sinks.IncrementalJoinView]] whose cursor versions must
     * equal the source mirrors' current versions, or a view chain
     * comparing `_GRAFT_BATCH` markers. `sourcePredicate` declares the
     * per-side row predicate the view is built under (mirror reads are
@@ -263,8 +263,9 @@ object MvCatalog {
     * `CdcPipeline.updateAggView`) as a rewrite target for queries that
     * aggregate the table's mirror directly. Freshness is VERSION-based
     * instead of file listings: the view state's applied-batch
-    * watermark (`_b_upto`) must equal the mirror's last merged batch
-    * id (`MirrorSink.lastBatchId`: the log layout's manifest id) — a
+    * watermark (its `_GRAFT_BATCH` swap marker) must equal the mirror's
+    * last merged batch id (`MirrorSink.lastBatchId`: the log layout's
+    * manifest id) — a
     * mirror merge the view hasn't folded yet makes the claim stale, and
     * queries fall through to the base scan until the view catches up.
     * Registered aggregates: `count(*)` → n_rows plus the spec's
@@ -289,23 +290,16 @@ object MvCatalog {
         spec.sumCols.map(c => (("sum", c): AggKey) -> s"sum_$c") ++
         spec.maxCols.map(c => (("max", c): AggKey) -> s"max_$c") ++
         spec.minCols.map(c => (("min", c): AggKey) -> s"min_$c"))
-    def viewState() = spark.read.parquet(stateDir)
     val fresh: SparkSession => Boolean = sp => {
       val mirrorBatch = cfg.mirrorSink.lastBatchId(sp, tableRoot)
       mirrorBatch.exists { mb =>
         try {
           val fs = new Path(stateDir)
             .getFileSystem(sp.sparkContext.hadoopConfiguration)
-          // the _GRAFT_BATCH marker rides the view swap — one
-          // filesystem read instead of a per-compile Spark job on the
-          // state parquet; marker-less legacy states fall back
+          // the _GRAFT_BATCH marker rides the view swap: one filesystem
+          // read, no Spark job; a state without one reads as stale
           graft.core.SwapPublish
-            .readBatchMarker(fs, new Path(stateDir)).getOrElse {
-              import org.apache.spark.sql.functions.{coalesce, lit, max => fmax}
-              viewState().agg(coalesce(fmax(
-                org.apache.spark.sql.functions.col("_b_upto")), lit(-1L)))
-                .head().getLong(0)
-            } == mb
+            .readBatchMarker(fs, new Path(stateDir)).contains(mb)
         } catch { case _: Exception => false } // no state yet = stale
       }
     }
@@ -319,9 +313,8 @@ object MvCatalog {
     // is correct: cells partition the rows disjointly.
     entries.put(q, Entry(q, spec.allGroupCols, aggs,
       () => {
-        val st = viewState()
-        val drop = Seq("_b_upto") ++
-          graft.streaming.IncrementalAgg.hiddenCols(spec) ++
+        val st = spark.read.parquet(stateDir)
+        val drop = graft.streaming.IncrementalAgg.hiddenCols(spec) ++
           spec.distinctCols.map(c => s"hll_$c")
         st.drop(drop.filter(st.columns.contains): _*)
       },

@@ -1,70 +1,39 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Materialize
 
 /** Poll-based downstream replication: apply a source [[LogMirror]]'s
-  * changefeed into ANY [[MirrorSink]] target, with a durable checkpoint
-  * committed on the target — the consumer half of the reference's
-  * replication chain (a sink connector applying row-level changes at
-  * its own pace, register-postgres-sink.json:15-17), fed from the
-  * mirror instead of a broker.
+  * changefeed into ANY [[MirrorSink]] target — the consumer half of the
+  * reference's replication chain (a sink connector applying row-level
+  * changes at its own pace, register-postgres-sink.json:15-17), fed
+  * from the mirror instead of a broker.
   *
-  * Each [[poll]]:
-  *   1. reads the target-side checkpoint (last source version applied),
-  *   2. pulls `changesSinceVersioned(ckpt)` — ONLY the delta segments
-  *      past the checkpoint, so a poll costs ∝ new data, never ∝ the
-  *      mirror — and re-applies the stored (ts_ms, offset) versions, so
-  *      the target converges to the SAME versioned state as the source
-  *      (late/replayed polls can never regress it),
-  *   3. merges through the target sink's idempotent `merge`, then
-  *      commits the checkpoint (tmp + atomic rename). A crash between
-  *      merge and checkpoint re-applies the same window next poll —
-  *      version-ordered merge makes that a no-op.
+  * Each [[poll]] is one [[ChangefeedConsumer.poll]]: the window is
+  * ONLY the delta segments past the cursor, so a poll costs ∝ new data,
+  * never ∝ the mirror. It re-applies the stored (ts_ms, offset)
+  * versions through the target sink's idempotent `merge`, so the
+  * target converges to the SAME versioned state as the source
+  * (late/replayed polls can never regress it). A lost cursor re-reads the feed from the start, which is not a
+  * resnapshot while the source keeps its deltas.
   *
-  * When the source has compacted past the checkpoint (a slow consumer
-  * outlived `maxDeltas` retention), the poll catches
-  * [[LogMirror.RetentionLostException]] and RE-SNAPSHOTS: the source's
-  * full VERSIONED state — tombstones included, which LogMirror retains
-  * through compaction — replays as one batch, so deletions the consumer
-  * missed still land. Cost ∝ source size, exactly once per fall-behind;
-  * subsequent polls are incremental again.
+  * When the source has compacted past the cursor (a slow consumer
+  * outlived `maxDeltas` retention), the window is the source's full
+  * VERSIONED state — tombstones included, which LogMirror retains
+  * through compaction — so deletions the consumer missed still land.
+  * Cost ∝ source size, exactly once per fall-behind; subsequent polls
+  * are incremental again.
   */
 object ChangefeedReplicator {
 
-  /** One poll's outcome: rows applied, the checkpoint movement, and
+  /** One poll's outcome: rows applied, the cursor movement, and
     * whether the retention-lost re-snapshot path ran. */
   final case class Result(applied: Long, fromVersion: Option[Long],
                           toVersion: Option[Long], resnapshot: Boolean)
 
-  private def ckptPath(targetRoot: String) =
-    new Path(s"$targetRoot/_CHANGEFEED_CKPT")
-
-  /** Last source version applied to the target; None = never polled. */
-  def readCheckpoint(spark: SparkSession, targetRoot: String): Option[Long] = {
-    val p = ckptPath(targetRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.trim.toLongOption
-    }
-  }
-
-  private def writeCheckpoint(fs: FileSystem, targetRoot: String,
-                              v: Long): Unit = {
-    val tmp = new Path(s"$targetRoot/._CHANGEFEED_CKPT.tmp")
-    graft.core.LocalFs.writeSmall(fs, tmp, s"$v\n".getBytes("UTF-8"))
-    val dst = ckptPath(targetRoot)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      sys.error(s"changefeed checkpoint commit failed for $targetRoot")
-  }
+  private val Source = "source"
 
   /** Versioned feed rows → the unwrapped-changes shape `MirrorSink
     * .merge` consumes, carrying the source's stored versions. */
@@ -76,60 +45,45 @@ object ChangefeedReplicator {
       .withColumnRenamed(Materialize.versionOffset, "offset")
       .withColumn("topic", lit(null).cast("string"))
       .withColumn("partition", lit(null).cast("int"))
-      .drop(Materialize.deletedFlag, LogMirror.commitVersion)
+      .drop(Materialize.deletedFlag)
 
-  /** Apply everything the source committed after the target's
-    * checkpoint. Idempotent: re-polling after any crash re-applies the
-    * same window through the sink's replay-safe merge. */
+  /** Apply everything the source committed after the target's cursor.
+    * Idempotent: re-polling after any crash re-applies the same window
+    * through the sink's replay-safe merge. */
   def poll(spark: SparkSession, sourceRoot: String, targetRoot: String,
            sink: MirrorSink, keyCols: Seq[String]): Result = {
     require(sourceRoot != targetRoot,
       "changefeed source and target must be different mirrors")
-    val fs = new Path(targetRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckpt = readCheckpoint(spark, targetRoot)
-    // version read BEFORE the feed: deltas committed in between are
-    // included this poll AND re-applied next poll — idempotent, never
-    // skipped (the reverse order could silently lose them)
-    val srcVersion = LogMirror.currentVersion(spark, sourceRoot)
-    if (srcVersion.isEmpty || srcVersion == ckpt)
-      return Result(0L, ckpt, ckpt, resnapshot = false)
-    val since = ckpt.getOrElse(-1L)
-    val (versioned, resnap) =
-      try (LogMirror.changesSinceVersioned(spark, sourceRoot, since), false)
-      catch {
-        case _: LogMirror.RetentionLostException =>
-          // tombstones survive compaction, so the full versioned state
-          // IS the catch-up batch: missed deletions still apply
-          (LogMirror.readVersioned(spark, sourceRoot), true)
-      }
-    val changes = asChanges(versioned).persist()
-    try {
-      val n = changes.count()
-      if (n > 0) sink.merge(spark, targetRoot, changes, keyCols,
-        batchId = srcVersion.get)
-      // Forget-propagation: a key hard-purged upstream (purgeKeys) has
-      // NO record in the source — not even a tombstone — so the
-      // re-snapshot batch cannot delete it and the target would retain
-      // forgotten data forever. Purge target keys absent from the
-      // source's versioned state (tombstoned keys are present there and
-      // propagate as ordinary deletes above). LogMirror targets purge
-      // natively; other sinks document the caveat in [[MirrorSink]].
-      if (resnap) sink match {
-        case _: LogMirrorSink
-          if LogMirror.currentVersion(spark, targetRoot).nonEmpty =>
-          // persisted: the emptiness probe + purgeKeys otherwise each
-          // re-reconcile the target mirror for this key-grain frame
-          val stale = LogMirror.readVersioned(spark, targetRoot)
-            .select(keyCols.map(col): _*)
-            .join(changes.select(keyCols.map(col): _*), keyCols, "left_anti")
-            .persist()
-          try if (!stale.isEmpty) LogMirror.purgeKeys(spark, targetRoot, stale)
-          finally stale.unpersist()
-        case _ => ()
-      }
-      writeCheckpoint(fs, targetRoot, srcVersion.get)
-      Result(n, ckpt, srcVersion, resnap)
-    } finally changes.unpersist()
+    ChangefeedConsumer.poll(spark, targetRoot, Seq(Source -> sourceRoot),
+      counterRoots = Seq(targetRoot), resnapshotOnCursorLoss = false) {
+      (cursor, _) =>
+      val at = cursor.flatMap(_.versions.get(Source))
+      Result(0L, at, at, resnapshot = false)
+    } { w =>
+      val changes = asChanges(w.feeds(Source)).persist()
+      try {
+        val n = changes.count()
+        if (n > 0) sink.merge(spark, targetRoot, changes, keyCols, w.batch)
+        // Forget-propagation: a key hard-purged upstream (purgeKeys) has
+        // NO record in the source — not even a tombstone — so the
+        // re-snapshot batch cannot delete it and the target would retain
+        // forgotten data forever. Purge target keys absent from the
+        // source's versioned state (tombstoned keys are present there and
+        // propagate as ordinary deletes above). LogMirror targets purge
+        // natively; other sinks document the caveat in [[MirrorSink]].
+        if (w.resnapshot) sink match {
+          case _: LogMirrorSink =>
+            // persisted: the emptiness probe + purgeKeys otherwise each
+            // re-reconcile the target mirror for this key-grain frame
+            val stale = ChangefeedConsumer.staleKeys(spark, targetRoot,
+              keyCols, changes).persist()
+            try if (!stale.isEmpty) LogMirror.purgeKeys(spark, targetRoot, stale)
+            finally stale.unpersist()
+          case _ => ()
+        }
+        Result(n, w.cursor.flatMap(_.versions.get(Source)),
+          Some(w.versions(Source)), w.resnapshot)
+      } finally changes.unpersist()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,11 +35,15 @@ import graft.cdc.Materialize
   * when resolving old groups — bucket the map for pruning if that
   * matters at your key cardinality.
   *
-  * Durability follows [[IncrementalJoinView]]: checkpoint (source
-  * version + the view's own batch counter) commits by tmp+rename AFTER
-  * both merges; crash windows replay the same derivation into the same
-  * batch slots. Retention lost on the source re-derives the whole view
-  * (one aggregate pass), tombstoning agg groups and map keys the
+  * Resume follows [[ChangefeedConsumer]]: the cursor (source version +
+  * the view's own batch counter) commits AFTER the view's one
+  * [[LogMirror.mergeGroup]] write, which lands the agg and keymap
+  * deltas in one job and commits the agg manifest before the keymap's.
+  * A crash anywhere replays the same derivation into the same batch
+  * slot: with the agg committed and the keymap not, the map still holds
+  * every fed key's old group, so the replay dirties the same groups.
+  * Retention lost on the source, or a lost cursor, re-derives the whole
+  * view (one aggregate pass), tombstoning agg groups and map keys the
   * snapshot no longer covers — upstream hard purges included. The
   * caller passes the SAME `aggs` every poll (the view's definition);
   * single-poller discipline per view.
@@ -50,45 +54,12 @@ object IncrementalAggView {
   final case class Result(groupsRefreshed: Long, resnapshot: Boolean,
                           sourceVersion: Option[Long])
 
-  final case class Checkpoint(sourceVersion: Long, batch: Long)
-
-  private def aggRootOf(viewRoot: String) = s"$viewRoot/agg"
-  private def mapRootOf(viewRoot: String) = s"$viewRoot/keymap"
-  private def ckptPath(viewRoot: String) = new Path(s"$viewRoot/_AGG_VIEW_CKPT")
-
-  def readCheckpoint(spark: SparkSession,
-                     viewRoot: String): Option[Checkpoint] = {
-    val p = ckptPath(viewRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val kv = txt.linesIterator.filter(_.contains(":")).map { l =>
-        val Array(k, v) = l.split(":", 2); k -> v.trim.toLong
-      }.toMap
-      Some(Checkpoint(kv("src"), kv("batch")))
-    }
-  }
-
-  private def writeCheckpoint(fs: FileSystem, viewRoot: String,
-                              c: Checkpoint): Unit = {
-    val tmp = new Path(s"$viewRoot/._AGG_VIEW_CKPT.tmp")
-    graft.core.LocalFs.writeSmall(fs, tmp,
-      s"src:${c.sourceVersion}\nbatch:${c.batch}\n".getBytes("UTF-8"))
-    val dst = ckptPath(viewRoot)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      sys.error(s"agg-view checkpoint commit failed for $viewRoot")
-  }
-
-  /** Null-safe multi-column join condition (a null group key is a
-    * group like any other — plain equality would never re-aggregate
-    * it). */
-  private def nullSafeOn(left: DataFrame, right: DataFrame,
-                         cols: Seq[String]): Column =
-    cols.map(c => left(c) <=> right(c)).reduce(_ && _)
+  private val Source = "source"
+  /** The view's two mirrors, `<viewRoot>/agg` and `<viewRoot>/keymap`:
+    * the layout one [[LogMirror.mergeGroup]] writes, in commit order. */
+  private val Agg = "agg"
+  private val KeyMap = "keymap"
+  private val tableCol = "_view_table"
 
   /** Apply everything the source committed since the last poll.
     * `aggs` are aliased aggregate expressions over the source's
@@ -101,145 +72,99 @@ object IncrementalAggView {
       "need at least one group column and one aggregate")
     require(sourceRoot != viewRoot,
       "source mirror and agg view must be different roots")
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(viewRoot).getFileSystem(hadoopConf)
-    val (aggRoot, mapRoot) = (aggRootOf(viewRoot), mapRootOf(viewRoot))
-
-    val ckpt = readCheckpoint(spark, viewRoot)
-    val srcV = LogMirror.currentVersion(spark, sourceRoot)
-    if (srcV.isEmpty) return Result(0L, resnapshot = false, srcV)
-    if (ckpt.exists(c => srcV.contains(c.sourceVersion)))
-      return Result(0L, resnapshot = false, srcV)
-    val srcKeys = LogMirror
-      .readManifest(new Path(sourceRoot).getFileSystem(hadoopConf), sourceRoot)
-      .get.keyCols
-
-    var resnap = ckpt.isEmpty
-    val feed: Option[DataFrame] =
-      if (resnap) None
-      else try Some(LogMirror
-        .changesSinceVersioned(spark, sourceRoot, ckpt.get.sourceVersion)
-        .persist())
-      catch {
-        case _: LogMirror.RetentionLostException => resnap = true; None
-      }
-    // frames referenced by BOTH merge jobs stay cached until the last
-    // merge commits
-    val cached = scala.collection.mutable.ListBuffer[DataFrame]()
-    feed.foreach(cached += _)
-    try {
-      val batchId = ckpt.map(_.batch + 1).getOrElse(
-        LogMirror.currentVersion(spark, aggRoot).map(_ + 1).getOrElse(0L))
-      val source = LogMirror.read(spark, sourceRoot)
-
-      val (aggChanges, mapChanges) =
-        if (resnap) {
-          // full re-derivation: one aggregate pass + map rebuild, then
-          // tombstone whatever the snapshot no longer covers (groups
-          // emptied or keys purged while the feed window was lost).
-          // `fresh` (group-grain, tiny) and `freshMap` (key-grain,
-          // narrow) are each referenced twice below (their 'c' branch
-          // + the stale anti-join): persisted, the source mirror
-          // reconciles once per projection instead of once per
-          // REFERENCE — unpersisted, the resnapshot poll paid four
-          // full source reconciles (r14, guide §3.3 / §5)
-          val fresh = source.groupBy(groupCols.map(col): _*)
-            .agg(aggs.head, aggs.tail: _*).persist()
-          cached += fresh
-          val staleGroups =
-            if (LogMirror.currentVersion(spark, aggRoot).isEmpty)
-              fresh.limit(0).select(groupCols.map(col): _*)
-            else {
-              val held = LogMirror.readVersioned(spark, aggRoot)
+    val (aggRoot, mapRoot) = (s"$viewRoot/$Agg", s"$viewRoot/$KeyMap")
+    ChangefeedConsumer.poll(spark, viewRoot, Seq(Source -> sourceRoot),
+      counterRoots = Seq(aggRoot, mapRoot), resnapshotOnCursorLoss = true) {
+      (_, v) => Result(0L, resnapshot = false, v(Source))
+    } { w =>
+      val srcKeys = LogMirror.readManifest(new Path(sourceRoot)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration), sourceRoot)
+        .get.keyCols
+      val mapCols = (srcKeys ++ groupCols).distinct
+      // frames referenced twice (two branches of the changes, or the
+      // count and the write) stay cached until the write commits
+      val cached = scala.collection.mutable.ListBuffer[DataFrame]()
+      def cache(df: DataFrame): DataFrame = { val p = df.persist(); cached += p; p }
+      try {
+        val source = LogMirror.read(spark, sourceRoot)
+        val (aggChanges, mapChanges) =
+          if (w.resnapshot) {
+            // full re-derivation: one aggregate pass + map rebuild, then
+            // tombstone whatever the snapshot no longer covers (groups
+            // emptied or keys purged while the feed window was lost).
+            // `fresh` (group-grain, tiny) and `freshMap` (key-grain,
+            // narrow) are each referenced twice below (their 'c' branch
+            // + the stale anti-join): persisted, the source mirror
+            // reconciles once per projection instead of once per
+            // REFERENCE
+            val fresh = cache(source.groupBy(groupCols.map(col): _*)
+              .agg(aggs.head, aggs.tail: _*))
+            val freshMap = cache(source.select(mapCols.map(col): _*))
+            (fresh.withColumn("op", lit("c")).unionByName(
+              ChangefeedConsumer.staleKeys(spark, aggRoot, groupCols, fresh)
+                .withColumn("op", lit("d")), allowMissingColumns = true),
+              freshMap.withColumn("op", lit("c")).unionByName(
+                ChangefeedConsumer.staleKeys(spark, mapRoot, srcKeys, freshMap)
+                  .withColumn("op", lit("d")), allowMissingColumns = true))
+          } else {
+            val f = cache(w.feeds(Source))
+            val fedKeys = f.select(srcKeys.map(col): _*)
+            val live = f.filter(!col(Materialize.deletedFlag))
+            // dirty = new groups of upserts ∪ old groups of every fed key
+            // (the sidecar map is the only place a delete's — or a moved
+            // key's former — group can be found)
+            val newGroups = live.select(groupCols.map(col): _*)
+            val oldGroups =
+              if (LogMirror.currentVersion(spark, mapRoot).isEmpty)
+                newGroups.limit(0) // map not born: source was empty so far
+              else LogMirror.read(spark, mapRoot)
+                .join(broadcast(fedKeys), srcKeys, "left_semi")
                 .select(groupCols.map(col): _*)
-              held.join(fresh, nullSafeOn(held, fresh, groupCols),
-                "left_anti")
-            }
-          val freshMap = source.select((srcKeys ++ groupCols).map(col): _*)
-            .persist()
-          cached += freshMap
-          val staleKeys =
-            if (LogMirror.currentVersion(spark, mapRoot).isEmpty)
-              freshMap.limit(0).select(srcKeys.map(col): _*)
-            else LogMirror.readVersioned(spark, mapRoot)
-              .select(srcKeys.map(col): _*)
-              .join(freshMap.select(srcKeys.map(col): _*), srcKeys,
-                "left_anti")
-          (fresh.withColumn("op", lit("c"))
-            .unionByName(staleGroups.withColumn("op", lit("d")),
-              allowMissingColumns = true),
-            freshMap.withColumn("op", lit("c"))
-              .unionByName(staleKeys.withColumn("op", lit("d")),
-                allowMissingColumns = true))
-        } else {
-          val f = feed.get
-          val fedKeys = f.select(srcKeys.map(col): _*)
-          val live = f.filter(!col(Materialize.deletedFlag))
-          // dirty = new groups of upserts ∪ old groups of every fed key
-          // (the sidecar map is the only place a delete's — or a moved
-          // key's former — group can be found)
-          val newGroups = live.select(groupCols.map(col): _*)
-          val oldGroups =
-            if (LogMirror.currentVersion(spark, mapRoot).isEmpty)
-              newGroups.limit(0) // map not born: source was empty so far
-            else LogMirror.read(spark, mapRoot)
-              .join(broadcast(fedKeys), srcKeys, "left_semi")
-              .select(groupCols.map(col): _*)
-          val dirty = newGroups.union(oldGroups).distinct().persist()
-          cached += dirty
-          val touched = source.join(broadcast(dirty),
-            nullSafeOn(source, dirty, groupCols), "left_semi")
-          // persisted: `recomputed` (group-grain, ≤ dirty-set rows) is
-          // referenced by BOTH the upsert branch and the `gone`
-          // anti-join — unpersisted, the source reconcile + dirty
-          // semi-probe + aggregate ran twice per poll (r14, guide §3.3)
-          val recomputed = touched.groupBy(groupCols.map(col): _*)
-            .agg(aggs.head, aggs.tail: _*).persist()
-          cached += recomputed
-          val gone = dirty.join(recomputed,
-            nullSafeOn(dirty, recomputed, groupCols), "left_anti")
-          val aggC = recomputed.withColumn("op", lit("c"))
-            .unionByName(gone.withColumn("op", lit("d")),
-              allowMissingColumns = true)
-          val mapC = live.select((srcKeys ++ groupCols).map(col): _*)
-            .withColumn("op", lit("c"))
-            .unionByName(
-              f.filter(col(Materialize.deletedFlag))
-                .select(srcKeys.map(col): _*)
-                .withColumn("op", lit("d")),
-              allowMissingColumns = true)
-          (aggC, mapC)
-        }
-
-      val stamp = (df: DataFrame) => df
-        .withColumn("ts_ms", lit(batchId)).withColumn("offset", lit(0L))
-      val changes = stamp(aggChanges).persist()
-      cached += changes
-      // one action answers refresh count AND emptiness (the previous
-      // filter-count + isEmpty pair ran two jobs over the same cache)
-      val byOp = changes.groupBy(col("op")).count().collect()
-      val n = byOp.collectFirst {
-        case r if r.getString(0) == "c" => r.getLong(1) }.getOrElse(0L)
-      if (byOp.nonEmpty)
-        LogMirror.merge(spark, aggRoot, changes, groupCols, batchId,
-          maxDeltas, bucketCount = None)
-      // persisted BEFORE the emptiness probe: unpersisted, the probe +
-      // the merge's versionedState each re-evaluated mapChanges from
-      // scratch — on the resnapshot path that is two extra full
-      // reconciles of the source mirror
-      val mc = stamp(mapChanges).persist()
-      cached += mc
-      if (!mc.isEmpty)
-        LogMirror.merge(spark, mapRoot, mc, srcKeys, batchId, maxDeltas,
-          bucketCount = None)
-      writeCheckpoint(fs, viewRoot, Checkpoint(srcV.get, batchId))
-      Result(n, resnap, srcV)
-    } finally cached.foreach(_.unpersist())
+            val dirty = cache(newGroups.union(oldGroups).distinct())
+            val touched = source.join(broadcast(dirty),
+              ChangefeedConsumer.nullSafeOn(source, dirty, groupCols), "left_semi")
+            // persisted: `recomputed` (group-grain, ≤ dirty-set rows) is
+            // referenced by BOTH the upsert branch and the `gone`
+            // anti-join — unpersisted, the source reconcile + dirty
+            // semi-probe + aggregate ran twice per poll
+            val recomputed = cache(touched.groupBy(groupCols.map(col): _*)
+              .agg(aggs.head, aggs.tail: _*))
+            val gone = dirty.join(recomputed,
+              ChangefeedConsumer.nullSafeOn(dirty, recomputed, groupCols),
+              "left_anti")
+            (recomputed.withColumn("op", lit("c"))
+              .unionByName(gone.withColumn("op", lit("d")),
+                allowMissingColumns = true),
+              live.select(mapCols.map(col): _*).withColumn("op", lit("c"))
+                .unionByName(f.filter(col(Materialize.deletedFlag))
+                  .select(srcKeys.map(col): _*).withColumn("op", lit("d")),
+                  allowMissingColumns = true))
+          }
+        val aggCols = aggChanges.columns.toSeq.filterNot(_ == "op")
+        aggChanges.schema.filter(f => mapCols.contains(f.name)).foreach(f =>
+          require(mapChanges.schema(f.name).dataType == f.dataType,
+            s"aggregate ${f.name} shares its name with a source key of " +
+              "another type; alias it apart"))
+        val changes = cache(aggChanges.withColumn(tableCol, lit(Agg))
+          .unionByName(mapChanges.withColumn(tableCol, lit(KeyMap)),
+            allowMissingColumns = true)
+          .withColumn("ts_ms", lit(w.batch)).withColumn("offset", lit(0L)))
+        // one action answers the refresh count AND emptiness
+        val counts = changes.agg(count(lit(1)),
+          count(when(col(tableCol) === Agg && col("op") === "c", 1))).head()
+        if (counts.getLong(0) > 0)
+          LogMirror.mergeGroup(spark, viewRoot, changes,
+            Seq(LogMirror.GroupTable(Agg, groupCols, aggCols),
+              LogMirror.GroupTable(KeyMap, srcKeys, mapCols)),
+            w.batch, maxDeltas, bucketCount = None, tableCol = tableCol)
+        Result(counts.getLong(1), w.resnapshot, Some(w.versions(Source)))
+      } finally cached.foreach(_.unpersist())
+    }
   }
 
   /** The aggregate view's live rows (a plain [[LogMirror]] keyed by the
     * group columns — its own changefeed, replication and lookups all
     * compose). */
   def read(spark: SparkSession, viewRoot: String): DataFrame =
-    LogMirror.read(spark, aggRootOf(viewRoot))
+    LogMirror.read(spark, s"$viewRoot/$Agg")
 }

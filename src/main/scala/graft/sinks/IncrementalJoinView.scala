@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,7 @@ import graft.cdc.Materialize
   *     is gone (inner join).
   *
   * Cost at scale (the reason to maintain instead of recompute):
-  *   - the fact side reads ONLY delta segments past the checkpoint
+  *   - the fact side reads ONLY delta segments past the cursor
   *     (bytes ∝ fact churn) plus one dim current-state read — never the
   *     fact base;
   *   - the dim side — the expensive direction in any IVM scheme without
@@ -43,16 +43,15 @@ import graft.cdc.Materialize
   *     rarely relative to facts);
   *   - a dim-quiet, fact-quiet poll is a metadata no-op.
   *
-  * Durability follows [[ChangefeedReplicator]]: the view checkpoint
-  * (both source versions + the view's own batch counter) commits by
-  * tmp+rename AFTER the merge, so a crash in between replays the same
-  * derivation into the same view batch slot — idempotent. When either
-  * source has compacted past its checkpoint
-  * ([[LogMirror.RetentionLostException]]), the poll re-derives the view
-  * from the fact's full VERSIONED state (tombstones included) and
-  * tombstones view keys the snapshot no longer covers, then resumes
-  * incrementally. Single-poller discipline per view, same as every
-  * mirror writer in this package.
+  * Resume follows [[ChangefeedConsumer]]: the cursor (both source
+  * versions + the view's own batch counter) commits AFTER the merge, so
+  * a crash in between replays the same derivation into the same view
+  * batch slot — idempotent. When either source has compacted past the
+  * cursor, or the cursor is lost, the poll re-derives the view from the
+  * fact's full VERSIONED state (tombstones included) and tombstones
+  * view keys the snapshot no longer covers, then resumes incrementally.
+  * Single-poller discipline per view, same as every mirror writer in
+  * this package.
   */
 object IncrementalJoinView {
 
@@ -62,41 +61,8 @@ object IncrementalJoinView {
                           factVersion: Option[Long],
                           dimVersion: Option[Long])
 
-  /** Checkpoint: last (fact, dim) source versions applied + the view's
-    * own monotone batch counter. */
-  final case class Checkpoint(factVersion: Long, dimVersion: Long,
-                              batch: Long)
-
-  private def ckptPath(viewRoot: String) =
-    new Path(s"$viewRoot/_JOIN_VIEW_CKPT")
-
-  def readCheckpoint(spark: SparkSession,
-                     viewRoot: String): Option[Checkpoint] = {
-    val p = ckptPath(viewRoot)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val kv = txt.linesIterator.filter(_.contains(":")).map { l =>
-        val Array(k, v) = l.split(":", 2); k -> v.trim.toLong
-      }.toMap
-      Some(Checkpoint(kv("fact"), kv("dim"), kv("batch")))
-    }
-  }
-
-  private def writeCheckpoint(fs: FileSystem, viewRoot: String,
-                              c: Checkpoint): Unit = {
-    val tmp = new Path(s"$viewRoot/._JOIN_VIEW_CKPT.tmp")
-    graft.core.LocalFs.writeSmall(fs, tmp,
-      s"fact:${c.factVersion}\ndim:${c.dimVersion}\nbatch:${c.batch}\n"
-        .getBytes("UTF-8"))
-    val dst = ckptPath(viewRoot)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      sys.error(s"join-view checkpoint commit failed for $viewRoot")
-  }
+  private val Fact = "fact"
+  private val Dim = "dim"
 
   /** Apply everything both sources committed since the last poll.
     * `dimCols` picks the dim payload columns carried into the view
@@ -111,136 +77,109 @@ object IncrementalJoinView {
       s"joinType must be 'inner' or 'left', got '$joinType'")
     require(Seq(factRoot, dimRoot, viewRoot).distinct.size == 3,
       "fact, dim and view must be three different mirror roots")
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(viewRoot).getFileSystem(hadoopConf)
+    ChangefeedConsumer.poll(spark, viewRoot,
+      Seq(Fact -> factRoot, Dim -> dimRoot), counterRoots = Seq(viewRoot),
+      resnapshotOnCursorLoss = true) { (_, v) =>
+      Result(0L, resnapshot = false, v(Fact), v(Dim)) // unborn or caught up
+    } { w =>
+      // the dim mirror must be keyed by exactly the join keys — a
+      // coarser-keyed dim could match several rows per key and the view
+      // (keyed by the fact PK) would silently drop all but one
+      val dimManifest = LogMirror.readManifest(
+        new Path(dimRoot).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        dimRoot)
+      require(dimManifest.exists(_.keyCols == joinKeys),
+        s"dim mirror at $dimRoot is keyed by " +
+          s"${dimManifest.map(_.keyCols).getOrElse(Nil)}; the join needs " +
+          s"$joinKeys")
 
-    val ckpt = readCheckpoint(spark, viewRoot)
-    // versions read BEFORE the feeds (the replicator's ordering): a
-    // source batch committed in between is applied this poll AND
-    // re-applied next poll — never skipped
-    val factV = LogMirror.currentVersion(spark, factRoot)
-    val dimV = LogMirror.currentVersion(spark, dimRoot)
-    if (factV.isEmpty || dimV.isEmpty)
-      return Result(0L, resnapshot = false, factV, dimV) // sources not born
-    if (ckpt.exists(c => factV.contains(c.factVersion) &&
-        dimV.contains(c.dimVersion)))
-      return Result(0L, resnapshot = false, factV, dimV) // caught up
-
-    // the dim mirror must be keyed by exactly the join keys — a
-    // coarser-keyed dim could match several rows per key and the view
-    // (keyed by the fact PK) would silently drop all but one
-    val dimManifest = LogMirror
-      .readManifest(new Path(dimRoot).getFileSystem(hadoopConf), dimRoot)
-    require(dimManifest.exists(_.keyCols == joinKeys),
-      s"dim mirror at $dimRoot is keyed by " +
-        s"${dimManifest.map(_.keyCols).getOrElse(Nil)}; the join needs " +
-        s"$joinKeys")
-
-    // ---- feeds (either source may have folded past the checkpoint)
-    var resnap = ckpt.isEmpty
-    def feedOrResnap(root: String, since: Long): Option[DataFrame] =
-      try Some(LogMirror.changesSinceVersioned(spark, root, since))
-      catch { case _: LogMirror.RetentionLostException => resnap = true; None }
-    var factFeed: Option[DataFrame] = None
-    var dimChanged: Option[DataFrame] = None
-    ckpt.foreach { c =>
-      factFeed = feedOrResnap(factRoot, c.factVersion)
-      if (!resnap) dimChanged = feedOrResnap(dimRoot, c.dimVersion)
-        .map(_.select(joinKeys.map(col): _*).distinct())
-    }
-    // full re-derivation: the fact's versioned state (tombstones
-    // included) IS the feed; the dim side is moot (every key re-derives)
-    val feed = (if (resnap) LogMirror.readVersioned(spark, factRoot)
-      else factFeed.get).drop(LogMirror.commitVersion).persist()
-    try {
-      val bcast: DataFrame => DataFrame =
-        if (broadcastDim) broadcast else identity
-
-      // dim current state, marked so an inner join can tell a miss
-      val dimAll = LogMirror.read(spark, dimRoot)
-      val dimPayload: Seq[String] =
-        if (dimCols.nonEmpty) dimCols
-        else dimAll.columns.toSeq.filterNot(joinKeys.contains)
-      val dim = dimAll
-        .select((joinKeys ++ dimPayload).distinct.map(col): _*)
-        .withColumn("_dim_hit", lit(true))
-
-      val factLive = feed.filter(!col(Materialize.deletedFlag))
-        .drop(Materialize.versionTs, Materialize.versionOffset,
-          Materialize.deletedFlag)
-      require(factLive.columns.toSeq.intersect(dimPayload).isEmpty,
-        s"dim payload columns ${dimPayload.mkString(",")} collide with " +
-          "fact columns; project the dim side (dimCols) apart first")
-
-      // joined deltas referenced by BOTH branches (hits → upserts,
-      // misses → deletes) persist for the span of the poll: unpersisted,
-      // the feed ⋈ dim join ran twice when `changes` materialized (r14,
-      // guide §3.3 — the frame is delta-grain, never the view)
-      val cached = scala.collection.mutable.ListBuffer[DataFrame]()
-      def derive(facts: DataFrame): (DataFrame, DataFrame) = {
-        val joined0 = facts.join(bcast(dim), joinKeys.toSeq, "left")
-        val joined =
-          if (joinType == "left") joined0
-          else { val j = joined0.persist(); cached += j; j }
-        if (joinType == "left")
-          (joined.drop("_dim_hit"), joined.limit(0).select(factKeys.map(col): _*))
-        else
-          (joined.filter(col("_dim_hit")).drop("_dim_hit"),
-            joined.filter(col("_dim_hit").isNull)
-              .select(factKeys.map(col): _*))
-      }
-
-      // ΔFact ⋈ dim_now
-      val (ups1, dels1) = derive(factLive)
-      val factDeadKeys = feed.filter(col(Materialize.deletedFlag))
-        .select(factKeys.map(col): _*)
-
-      // fact_now ⋉ ΔDim ⋈ dim_now (skipped when the dim didn't move)
-      val (ups2, dels2) = dimChanged.filter(_ => !resnap) match {
-        case Some(dk) =>
-          val affected = LogMirror.read(spark, factRoot)
-            .join(bcast(dk), joinKeys.toSeq, "left_semi")
-            .join(feed.select(factKeys.map(col): _*), factKeys, "left_anti")
-          derive(affected)
-        case None =>
-          (ups1.limit(0), dels1.limit(0))
-      }
-
-      // full re-derivation covers only keys the fact snapshot knows;
-      // tombstone anything else the view still holds (e.g. keys
-      // hard-purged upstream, which leave no record to replicate)
-      val dels3 =
-        if (resnap && LogMirror.currentVersion(spark, viewRoot).nonEmpty)
-          LogMirror.readVersioned(spark, viewRoot)
-            .select(factKeys.map(col): _*)
-            .join(feed.select(factKeys.map(col): _*), factKeys, "left_anti")
-        else dels1.limit(0)
-
-      // lost checkpoint + surviving view manifest (crash between merge
-      // and an earlier checkpoint write, then ckpt loss): resume the
-      // counter from the manifest — commit ids must never move backwards
-      val batchId = ckpt.map(_.batch + 1).getOrElse(
-        LogMirror.currentVersion(spark, viewRoot).map(_ + 1).getOrElse(0L))
-      val ups = ups1.unionByName(ups2).withColumn("op", lit("c"))
-      val dels = Seq(dels1, dels2, dels3, factDeadKeys)
-        .reduce(_.unionByName(_)).withColumn("op", lit("d"))
-      // one change per view key per poll (the feed is post-image and
-      // the dim side anti-joins the fact side), versioned by the view's
-      // own batch counter — later polls always outrank earlier ones
-      val changes = ups.unionByName(dels, allowMissingColumns = true)
-        .withColumn("ts_ms", lit(batchId))
-        .withColumn("offset", lit(0L))
-        .persist()
+      // a full re-derivation's fact feed is the fact's versioned state
+      // (tombstones included); its dim side is moot (every key re-derives)
+      val resnap = w.resnapshot
+      val dimChanged = Option.when(!resnap)(
+        w.feeds(Dim).select(joinKeys.map(col): _*).distinct())
+      val feed = w.feeds(Fact).persist()
       try {
-        val n = changes.count()
-        if (n > 0)
-          LogMirror.merge(spark, viewRoot, changes, factKeys, batchId,
-            maxDeltas, bucketCount = None)
-        writeCheckpoint(fs, viewRoot,
-          Checkpoint(factV.get, dimV.get, batchId))
-        Result(n, resnap, factV, dimV)
-      } finally { changes.unpersist(); cached.foreach(_.unpersist()) }
-    } finally feed.unpersist()
+        val bcast: DataFrame => DataFrame =
+          if (broadcastDim) broadcast else identity
+
+        // dim current state, marked so an inner join can tell a miss
+        val dimAll = LogMirror.read(spark, dimRoot)
+        val dimPayload: Seq[String] =
+          if (dimCols.nonEmpty) dimCols
+          else dimAll.columns.toSeq.filterNot(joinKeys.contains)
+        val dim = dimAll
+          .select((joinKeys ++ dimPayload).distinct.map(col): _*)
+          .withColumn("_dim_hit", lit(true))
+
+        val factLive = feed.filter(!col(Materialize.deletedFlag))
+          .drop(Materialize.versionTs, Materialize.versionOffset,
+            Materialize.deletedFlag)
+        require(factLive.columns.toSeq.intersect(dimPayload).isEmpty,
+          s"dim payload columns ${dimPayload.mkString(",")} collide with " +
+            "fact columns; project the dim side (dimCols) apart first")
+
+        // joined deltas referenced by BOTH branches (hits → upserts,
+        // misses → deletes) persist for the span of the poll: unpersisted,
+        // the feed ⋈ dim join ran twice when `changes` materialized (r14,
+        // guide §3.3 — the frame is delta-grain, never the view)
+        val cached = scala.collection.mutable.ListBuffer[DataFrame]()
+        def derive(facts: DataFrame): (DataFrame, DataFrame) = {
+          val joined0 = facts.join(bcast(dim), joinKeys.toSeq, "left")
+          val joined =
+            if (joinType == "left") joined0
+            else { val j = joined0.persist(); cached += j; j }
+          if (joinType == "left")
+            (joined.drop("_dim_hit"), joined.limit(0).select(factKeys.map(col): _*))
+          else
+            (joined.filter(col("_dim_hit")).drop("_dim_hit"),
+              joined.filter(col("_dim_hit").isNull)
+                .select(factKeys.map(col): _*))
+        }
+
+        // ΔFact ⋈ dim_now
+        val (ups1, dels1) = derive(factLive)
+        val factDeadKeys = feed.filter(col(Materialize.deletedFlag))
+          .select(factKeys.map(col): _*)
+
+        // fact_now ⋉ ΔDim ⋈ dim_now (skipped when the dim didn't move)
+        val (ups2, dels2) = dimChanged match {
+          case Some(dk) =>
+            val affected = LogMirror.read(spark, factRoot)
+              .join(bcast(dk), joinKeys.toSeq, "left_semi")
+              .join(feed.select(factKeys.map(col): _*), factKeys, "left_anti")
+            derive(affected)
+          case None =>
+            (ups1.limit(0), dels1.limit(0))
+        }
+
+        // full re-derivation covers only keys the fact snapshot knows;
+        // tombstone anything else the view still holds (e.g. keys
+        // hard-purged upstream, which leave no record to replicate)
+        val dels3 =
+          if (resnap) ChangefeedConsumer.staleKeys(spark, viewRoot, factKeys, feed)
+          else dels1.limit(0)
+
+        val batchId = w.batch
+        val ups = ups1.unionByName(ups2).withColumn("op", lit("c"))
+        val dels = Seq(dels1, dels2, dels3, factDeadKeys)
+          .reduce(_.unionByName(_)).withColumn("op", lit("d"))
+        // one change per view key per poll (the feed is post-image and
+        // the dim side anti-joins the fact side), versioned by the view's
+        // own batch counter — later polls always outrank earlier ones
+        val changes = ups.unionByName(dels, allowMissingColumns = true)
+          .withColumn("ts_ms", lit(batchId))
+          .withColumn("offset", lit(0L))
+          .persist()
+        try {
+          val n = changes.count()
+          if (n > 0)
+            LogMirror.merge(spark, viewRoot, changes, factKeys, batchId,
+              maxDeltas, bucketCount = None)
+          Result(n, resnap, Some(w.versions(Fact)), Some(w.versions(Dim)))
+        } finally { changes.unpersist(); cached.foreach(_.unpersist()) }
+      } finally feed.unpersist()
+    }
   }
 
   /** The view's live rows (it is a plain [[LogMirror]] — changefeed,

@@ -263,7 +263,7 @@ object CdcPipeline {
         // and written into their `_batch_id=` partition with DYNAMIC
         // partition overwrite, so a replayed batch overwrites its own
         // partition instead of appending duplicates (the same guard the
-        // agg views get from `_b_upto`).
+        // agg views get from their `_GRAFT_BATCH` marker).
         def gatedMerge(t: String, unwrapped: DataFrame,
                        rules: Seq[graft.operators.Expectations.Rule]): Unit = {
           // annotate once, persist once: the bad-row probe, the
@@ -543,12 +543,12 @@ object CdcPipeline {
   }
 
   /** Fold one batch's deltas into a maintained view's state. Delta
-    * application is not idempotent, so the state carries the last
-    * applied batch id as a constant column `_b_upto` (RLE-compressed to
-    * nothing in parquet): state and watermark commit ATOMICALLY in the
-    * same staging-dir swap ([[graft.core.SwapPublish]]), and a replayed
-    * batch (foreachBatch restart) is skipped instead of double-counted;
-    * the swap's crash recovery runs first. */
+    * application is not idempotent, so the state's swap carries the last
+    * applied batch id as its `_GRAFT_BATCH` marker: state and watermark
+    * commit ATOMICALLY in the same staging-dir swap
+    * ([[graft.core.SwapPublish]]), and a replayed batch (foreachBatch
+    * restart) is skipped instead of double-counted; the swap's crash
+    * recovery runs first. */
   private def updateAggView(spark: SparkSession, name: String,
       parsed: DataFrame, view: AggView, batchId: Long, cfg: Config,
       sharedMirror: () => DataFrame): Unit = {
@@ -569,37 +569,28 @@ object CdcPipeline {
     // mirror (this view job is sequenced after the table's merge);
     // the mirror read is the batch-shared cached one
     val mirrorRows = Some(sharedMirror)
+    // None = a live state without a marker: its batch is unknown
     val upto =
-      if (!fs.exists(live)) -1L
-      else SwapPublish.readBatchMarker(fs, live).getOrElse {
-        // legacy state (written before the marker rode the swap): fall
-        // back to the parquet watermark column. coalesce guards the
-        // empty-state file (all groups deleted, or a first batch that
-        // was entirely malformed): max over zero rows is null, and a
-        // bare getLong would NPE and crash-loop the stream on replay.
-        // The marker path replaces a per-view-per-trigger Spark job
-        // (scan + agg + head on the state file) with one tiny
-        // filesystem read — measured as a real slice of the multi-view
-        // drain cost (a views sweep with the since-removed StreamSweep
-        // dev main)
-        spark.read.parquet(live.toString)
-          .agg(coalesce(max(col("_b_upto")), lit(-1L))).head().getLong(0)
-      }
-    if (upto >= batchId) return // replayed batch: already applied
+      if (!fs.exists(live)) Some(-1L) else SwapPublish.readBatchMarker(fs, live)
+    if (upto.exists(_ >= batchId)) return // replayed batch: already applied
     val merged =
-      if (batchId > upto + 1)
-        // GAP: batches merged into the mirror while this view wasn't
-        // riding the pipeline (registered mid-stream, or the pipeline
-        // ran with a config that omitted it). Folding only this
-        // batch's delta would silently bake the missing batches out of
-        // the state forever — REBUILD from the post-batch mirror
-        // instead (correct by construction; the MvCatalog freshness
-        // watermark advances only through here, so a lagging view
-        // stays out of query rewrites until this runs).
+      if (upto.forall(batchId > _ + 1) || retractsUnseen(parsed))
+        // REBUILD from the post-batch mirror (correct by construction)
+        // when folding this batch's delta cannot reach it:
+        //   - a GAP: batches merged into the mirror while this view
+        //     wasn't riding the pipeline (registered mid-stream, or the
+        //     pipeline ran with a config that omitted it), or a state
+        //     whose batch is unknown — folding only this batch would
+        //     silently bake the missing batches out of the state
+        //     forever (the MvCatalog freshness watermark advances only
+        //     through here, so a lagging view stays out of query
+        //     rewrites until this runs);
+        //   - a delete without a before image: the delta retracts only
+        //     through `before`, so the deleted row would stay counted.
+        // `distinctCols` sketches degrade to current-row distincts here
         IncrementalAgg.rebuild(sharedMirror(), view.spec)
-      else if (upto >= 0)
-        IncrementalAgg.merge(
-          spark.read.parquet(live.toString).drop("_b_upto"), delta,
+      else if (upto.exists(_ >= 0))
+        IncrementalAgg.merge(spark.read.parquet(live.toString), delta,
           view.spec, mirrorRows, cacheBatch)
       else
         // empty-state merge (NOT a bare filter): a within-batch
@@ -610,13 +601,20 @@ object CdcPipeline {
     try SwapPublish.atomicSwap(fs, root) { staging =>
       // aggregate state is #groups rows — orders of magnitude smaller
       // than the stream; one file keeps the swap cheap and the read local
-      merged.withColumn("_b_upto", lit(batchId))
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      merged.coalesce(1).write.mode("overwrite").parquet(staging.toString)
       // watermark marker rides the SAME atomic rename as the state, so
       // the cheap read path above can never disagree with the data
       SwapPublish.writeBatchMarker(fs, staging, batchId)
     } finally cached.forEach(_.unpersist())
   }
+
+  /** Whether `parsed` holds a delete an agg-view delta cannot retract:
+    * op='d' with a value but no before image. A Kafka tombstone (null
+    * value) does not count: it deletes only a key with no other record,
+    * which no view counted. */
+  private def retractsUnseen(parsed: DataFrame): Boolean =
+    !parsed.filter(col("env.payload.op") === "d" &&
+      col("env.payload.before").isNull).isEmpty
 
   /** Evaluate a view's table-grain expectations after its batch update:
     * the O(groups) view state rolls up to one stats row, rules run
@@ -693,7 +691,6 @@ object CdcPipeline {
     IncrementalAgg.withDistinctEstimates(
       IncrementalAgg.withAverages(
         spark.read.parquet(s"${cfg.mirrorRoot}/_views/$name/live")
-          .drop("_b_upto")
           // candidate-list internals stay in the state file, not the
           // read surface
           .drop(IncrementalAgg.hiddenCols(spec): _*),

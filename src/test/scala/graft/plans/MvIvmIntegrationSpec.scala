@@ -12,8 +12,9 @@ import graft.streaming.{CdcPipeline, IncrementalAgg, Rec}
 /** MV rewrite ⇄ incremental view maintenance, end to end: a pipeline-
   * maintained agg view registers as a TRANSPARENT rewrite target for
   * aggregates over its table's mirror, with VERSION-based freshness —
-  * the view's applied-batch watermark (`_b_upto`) against the mirror's
-  * last merged batch id (the default LogMirror sink's manifest id). A
+  * the view's applied-batch watermark (its `_GRAFT_BATCH` swap marker)
+  * against the mirror's last merged batch id (the default LogMirror
+  * sink's manifest id). A
   * query over the mirror silently reads the O(groups) view while
   * fresh, falls through to the base scan the moment the mirror advances
   * past the view, and resumes (via the gap REBUILD) when the view
@@ -106,5 +107,28 @@ class MvIvmIntegrationSpec extends SparkSpec
     val versioned = graft.sinks.LogMirror.readVersioned(spark, s"$root/mirror/t1")
       .groupBy("g").agg(count(lit(1)).as("n"))
     assert(!scanOf(versioned).contains("_views/by_g"))
+  }
+
+  test("a maintained view state without a batch marker reads as stale: " +
+    "queries fall through to the mirror") {
+    val root = Files.createTempDirectory("mv-ivm-nomarker").toString
+    val cfg = CdcPipeline.Config(rowSchema, Seq("id"),
+      s"$root/mirror", s"$root/dlq", s"$root/ckpt",
+      aggViews = Map("by_g" -> CdcPipeline.AggView("t1",
+        IncrementalAgg.Spec(Seq("g"), Seq("x")))))
+    def q(): DataFrame = CdcPipeline.mirror(spark, cfg, "t1")
+      .groupBy("g").agg(sum("x").as("sx"))
+    CdcPipeline.processBatch(
+      Seq(rec(1, "a", 10.0, "c", 1000, 0), rec(2, "b", 4.0, "c", 1000, 1))
+        .toDF(), 0L, cfg)
+    MvCatalog.registerMaintained(spark, cfg, "by_g")
+    assert(q().queryExecution.executedPlan.toString.contains("_views/by_g"))
+
+    new java.io.File(s"$root/mirror/_views/by_g/live/_GRAFT_BATCH").delete()
+    val plan = q().queryExecution.executedPlan.toString
+    assert(!plan.contains("_views/by_g"), plan.take(1500))
+    assert(q().as[(String, Double)].collect().toMap ==
+      Map("a" -> 10.0, "b" -> 4.0))
+    MvCatalog.clear()
   }
 }

@@ -67,13 +67,14 @@ class ChangefeedReplicatorSpec extends SparkSpec {
     // simulate the crash window: merge landed, checkpoint didn't
     val fs = new org.apache.hadoop.fs.Path(dst)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckpt = new org.apache.hadoop.fs.Path(s"$dst/_CHANGEFEED_CKPT")
+    val ckpt = new org.apache.hadoop.fs.Path(s"$dst/_CURSOR")
     fs.delete(ckpt, false)
-    assert(ChangefeedReplicator.readCheckpoint(spark, dst).isEmpty)
+    assert(ChangefeedConsumer.readCursor(spark, dst).isEmpty)
     val r = ChangefeedReplicator.poll(spark, src, dst, sink, keyCols)
     assert(r.resnapshot == false)
     assert(state(sink, dst) == Map(1L -> "a2"))
-    assert(ChangefeedReplicator.readCheckpoint(spark, dst).contains(1L))
+    assert(ChangefeedConsumer.readCursor(spark, dst)
+      .flatMap(_.versions.get("source")).contains(1L))
   }
 
   test("retention lost: a consumer behind the compacted base " +

@@ -104,7 +104,7 @@ class IncrementalAggViewSpec extends SparkSpec {
     poll(src, view)
     val fs = new org.apache.hadoop.fs.Path(view)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$view/_AGG_VIEW_CKPT"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$view/_CURSOR"), false)
     val r = poll(src, view)
     assert(r.resnapshot)
     assert(viewState(view) == expected(src))

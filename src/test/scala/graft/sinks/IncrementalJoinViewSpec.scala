@@ -167,7 +167,7 @@ class IncrementalJoinViewSpec extends SparkSpec {
     // crash window: the merge committed, the checkpoint write didn't
     val fs = new org.apache.hadoop.fs.Path(view)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$view/_JOIN_VIEW_CKPT"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$view/_CURSOR"), false)
     val r = IncrementalJoinView.poll(spark, fact, dim, view, factKeys,
       joinKeys)
     assert(r.resnapshot, "a lost checkpoint re-derives from scratch")

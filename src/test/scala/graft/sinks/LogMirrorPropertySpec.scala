@@ -86,7 +86,7 @@ class LogMirrorPropertySpec extends SparkSpec {
           ChangefeedReplicator.poll(spark, src, dst, sink, Seq("id"))
         if (rnd.nextInt(5) == 0) // crash window: merge landed, ckpt lost
           fs.delete(new org.apache.hadoop.fs.Path(
-            s"$dst/_CHANGEFEED_CKPT"), false)
+            s"$dst/_CURSOR"), false)
       }
       ChangefeedReplicator.poll(spark, src, dst, sink, Seq("id"))
       val target = sink.read(spark, dst).select("id", "v")

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,6 +68,26 @@ class AggViewSpec extends SparkSpec {
       .as[(String, Long, Double)].collect()
       .map { case (g, n, s) => g -> ((n, s)) }.toMap
     assert(viewMap(cfg) == recompute)
+  }
+
+  test("a live state without a batch marker is not folded onto: the " +
+    "next batch rebuilds the view from the mirror") {
+    val cfg = cfgWithView()
+    CdcPipeline.processBatch(Seq(
+      rec(1, env("c", "null", img(1, "a", 10.0)), 0),
+      rec(2, env("c", "null", img(2, "b", 20.0)), 1)).toDF(), 0L, cfg)
+    // a state of unknown batch (wrong counts, no marker)
+    val live = s"${cfg.mirrorRoot}/_views/by_g/live"
+    val state = spark.read.parquet(live)
+    val bogus = spark.createDataFrame(state.collect().toSeq.asJava, state.schema)
+      .withColumn("n_rows", col("n_rows") * 10)
+    bogus.write.mode("overwrite").parquet(live)
+    assert(!new java.io.File(s"$live/_GRAFT_BATCH").exists())
+
+    CdcPipeline.processBatch(Seq(
+      rec(3, env("c", "null", img(3, "a", 5.0)), 2)).toDF(), 1L, cfg)
+    assert(viewMap(cfg) == Map("a" -> ((2L, 15.0)), "b" -> ((1L, 20.0))))
+    assert(new java.io.File(s"$live/_GRAFT_BATCH").exists())
   }
 
   test("MAX(id) integrity-probe view: retraction recomputes from mirror") {
@@ -175,7 +197,7 @@ class AggViewSpec extends SparkSpec {
     assert(ids() == Map("a" -> 3L, "b" -> 1L),
       "ever-written: the deleted id stays counted, the update doesn't double")
 
-    // foreachBatch replay: guarded by _b_upto AND idempotent by algebra
+    // foreachBatch replay: guarded by the batch marker AND idempotent by algebra
     CdcPipeline.processBatch(b1, 1L, cfg)
     assert(ids() == Map("a" -> 3L, "b" -> 1L))
   }

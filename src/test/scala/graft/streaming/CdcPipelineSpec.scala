@@ -700,7 +700,7 @@ class CdcPipelineSpec extends SparkSpec {
     assert(flagged == Set((1L, 28L, 36L), (2L, 0L, 64L)),
       s"expected the two dropped ranges flagged in THIS batch: $flagged")
 
-    // foreachBatch replay of batch 1: the _b_upto guard skips the
+    // foreachBatch replay of batch 1: the batch-marker guard skips the
     // re-fold; flags unchanged (no double retraction)
     CdcPipeline.processBatch(
       dropped.zipWithIndex.map { case (i, k) =>
@@ -938,9 +938,9 @@ class CdcPipelineSpec extends SparkSpec {
     val recs = batch(Seq(ventas, entidades, cierres), 12, 1000L) ++ Seq(
       change(entidades, 5, "u", 2000L, 100, "ciudad" -> null), // quarantined
       change(productos, 4, "u", 2000L, 101), change(productos, 70, "c", 2000L, 102),
-      // a second venta in entidad 22's group (the view folds inserts;
-      // a retraction needs the before-image Debezium sends)
-      change(ventas, 50, "c", 2000L, 103, "id_entidad" -> 22L))
+      // a delete without a before image: venta 3 is entidad 22's only
+      // row, so the group must leave the view
+      change(ventas, 3, "d", 2000L, 103))
     CdcPipeline.processBatch(recs.toDF(), 0L, cfg)
     val df = recs.toDF()
     for (t <- Seq(ventas, cierres))

@@ -857,7 +857,7 @@ object AdvancedQueries {
     // The 100 TB distinct-count shape: per-partition sketches (here
     // per month) built once, UNIONED for any rollup — no re-scan of the
     // raw data per rollup, and the running view is incrementally
-    // maintainable (IncrementalDistinct operator + spec). Sketch bytes
+    // maintainable (an agg view's `distinctCols`). Sketch bytes
     // and estimates are engine-specific, so the oracle checks the
     // property: exact counts hash-match and both the direct and the
     // merged-from-partitions estimates land within 5% of exact.

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, IsNotNull, Literal, Not}
 import org.apache.spark.sql.types.BooleanType
 
+import graft.sinks.LogMirror
+
 /** Registry of materialized aggregate views for transparent query
   * rewrite (see [[MvRewriteRule]]): each entry claims "`view` holds
   * exactly `GROUP BY groupCols` + `aggs` over the table at
@@ -161,8 +163,7 @@ object MvCatalog {
     * dirs (any change to either side falls the query through);
     * `freshCheck` overrides it for version-maintained views — e.g. an
     * [[graft.sinks.IncrementalJoinView]] whose cursor versions must
-    * equal the source mirrors' current versions, or a view chain
-    * comparing `_GRAFT_BATCH` markers. `sourcePredicate` declares the
+    * equal the source mirrors' current versions. `sourcePredicate` declares the
     * per-side row predicate the view is built under (mirror reads are
     * `NOT _v_deleted`-filtered scans — pass [[LiveMirrorRows]]). */
   def registerJoin(spark: SparkSession, factDir: String, dimDir: String,
@@ -262,12 +263,12 @@ object MvCatalog {
     * ([[graft.streaming.IncrementalAgg]] state kept by
     * `CdcPipeline.updateAggView`) as a rewrite target for queries that
     * aggregate the table's mirror directly. Freshness is VERSION-based
-    * instead of file listings: the view state's applied-batch
-    * watermark (its `_GRAFT_BATCH` swap marker) must equal the mirror's
-    * last merged batch id (`MirrorSink.lastBatchId`: the log layout's
-    * manifest id) — a
-    * mirror merge the view hasn't folded yet makes the claim stale, and
-    * queries fall through to the base scan until the view catches up.
+    * instead of file listings: the view state's manifest version (the
+    * last batch id it applied) must equal the mirror's last merged
+    * batch id (`MirrorSink.lastBatchId`: the log layout's manifest id)
+    * — a mirror merge the view hasn't folded yet makes the claim stale,
+    * and queries fall through to the base scan until the view catches
+    * up.
     * Registered aggregates: `count(*)` → n_rows plus the spec's
     * sum/max/min columns (HLL distinct sketches are not relational
     * aggregates and are not claimed).
@@ -284,25 +285,16 @@ object MvCatalog {
     val v = cfg.aggViews(viewName)
     val spec = v.spec
     val tableRoot = s"${cfg.mirrorRoot}/${v.table}"
-    val stateDir = s"${cfg.mirrorRoot}/_views/$viewName/live"
+    val viewRoot = graft.streaming.CdcPipeline.viewRoot(cfg, viewName)
     val aggs: Map[AggKey, String] =
       (Map[AggKey, String](("count", "*") -> "n_rows") ++
         spec.sumCols.map(c => (("sum", c): AggKey) -> s"sum_$c") ++
         spec.maxCols.map(c => (("max", c): AggKey) -> s"max_$c") ++
         spec.minCols.map(c => (("min", c): AggKey) -> s"min_$c"))
-    val fresh: SparkSession => Boolean = sp => {
-      val mirrorBatch = cfg.mirrorSink.lastBatchId(sp, tableRoot)
-      mirrorBatch.exists { mb =>
-        try {
-          val fs = new Path(stateDir)
-            .getFileSystem(sp.sparkContext.hadoopConfiguration)
-          // the _GRAFT_BATCH marker rides the view swap: one filesystem
-          // read, no Spark job; a state without one reads as stale
-          graft.core.SwapPublish
-            .readBatchMarker(fs, new Path(stateDir)).contains(mb)
-        } catch { case _: Exception => false } // no state yet = stale
-      }
-    }
+    // two manifest listings, no Spark job; no state yet = stale
+    val fresh: SparkSession => Boolean = sp =>
+      cfg.mirrorSink.lastBatchId(sp, tableRoot).exists(mb =>
+        LogMirror.currentVersion(sp, viewRoot).contains(mb))
     val q = qualify(spark, tableRoot)
     // the claim's grain is the view's EFFECTIVE grouping — declared
     // columns PLUS derived cell columns: claiming only groupCols would
@@ -312,12 +304,9 @@ object MvCatalog {
     // so cell views serve only the coarser re-aggregate path — which
     // is correct: cells partition the rows disjointly.
     entries.put(q, Entry(q, spec.allGroupCols, aggs,
-      () => {
-        val st = spark.read.parquet(stateDir)
-        val drop = graft.streaming.IncrementalAgg.hiddenCols(spec) ++
-          spec.distinctCols.map(c => s"hll_$c")
-        st.drop(drop.filter(st.columns.contains): _*)
-      },
+      () => LogMirror.read(spark, viewRoot).drop(
+        graft.streaming.IncrementalAgg.hiddenCols(spec) ++
+          spec.distinctCols.map(c => s"hll_$c"): _*),
       fingerprint = "<maintained>", freshCheck = Some(fresh),
       sourcePredicate = Some(LiveMirrorRows)))
   }

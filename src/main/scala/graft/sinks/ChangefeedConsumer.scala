@@ -138,7 +138,7 @@ object ChangefeedConsumer {
 
   /** Null-safe multi-column join condition (a null key is a key like
     * any other — plain equality would never match it). */
-  private[sinks] def nullSafeOn(left: DataFrame, right: DataFrame,
+  private[graft] def nullSafeOn(left: DataFrame, right: DataFrame,
                                 cols: Seq[String]): Column =
     cols.map(c => left(c) <=> right(c)).reduce(_ && _)
 

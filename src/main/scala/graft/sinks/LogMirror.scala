@@ -285,6 +285,10 @@ object LogMirror {
   final case class GroupTable(name: String, keyCols: Seq[String],
                               columns: Seq[String])
 
+  /** Prefix of a [[mergeGroup]] staging dir under the group's root,
+    * `<prefix><batchId>_<hash of the group's table names>`. */
+  private[graft] val groupStaging = ".log_group_staging_"
+
   /** Group merge: ONE latest-per-key pass and ONE `partitionBy(table)`
     * write land the delta segment of every table in `tables`, whatever
     * their keys and row schemas; each table then receives its segment
@@ -340,8 +344,17 @@ object LogMirror {
         maskedTo(_.keyCols)(k).as(g) }: _*)
     val kernelCols = tableCol +: kernelKeys
     val delta = Materialize.versionedState(masked, kernelCols)
-    val tmp = new Path(mirrorRoot,
-      s".log_group_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = new Path(mirrorRoot, s"$groupStaging${batchId}_" +
+      f"${tables.map(_.name).sorted.mkString(",").hashCode}%08x")
+    // a crash skips the `finally` below: a replay of this batch reuses
+    // its staging dir, and a later batch sweeps what earlier ones left.
+    // Concurrent groups of the same batch (other names) are not touched
+    val rootDir = new Path(mirrorRoot)
+    if (fs.exists(rootDir)) for (st <- fs.listStatus(rootDir);
+         n = st.getPath.getName if n.startsWith(groupStaging);
+         b <- n.stripPrefix(groupStaging).takeWhile(_ != '_').toLongOption
+         if b < batchId)
+      fs.delete(st.getPath, true)
     try {
       // one write: partition dirs split per table, rows key-sorted
       // within each task so every file's row groups carry usable stats

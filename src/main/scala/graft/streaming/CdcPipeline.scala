@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, StructField, StructType}
 
 import graft.cdc.Envelope
-import graft.core.SwapPublish
+import graft.sinks.{ChangefeedConsumer, LogMirror}
 
 /** The CDC replication pipeline as a Structured Streaming job — the
   * Spark-native equivalent of the reference's Kafka Connect sink chain
@@ -76,8 +76,9 @@ object CdcPipeline {
     * @param tableSpecs  per-table overrides (schema registry)
     * @param aggViews    maintained aggregate views by name; each batch
     *   folds its deltas into the view state (O(touched groups), never a
-    *   mirror rescan), guarded by the applied batch id for idempotence
-    *   under foreachBatch replay.
+    *   mirror rescan). The state is a [[graft.sinks.LogMirror]] at
+    *   `<mirrorRoot>/_views/<name>` whose manifest version is the last
+    *   batch id applied, so a foreachBatch replay is skipped.
     * @param sinkOverride plug in any [[graft.sinks.MirrorSink]] — the
     *   adapter point for transactional table formats (a Delta/Iceberg
     *   MERGE sink implements the trait; the pipeline is unchanged).
@@ -254,6 +255,12 @@ object CdcPipeline {
           case s: graft.sinks.LogMirrorSink => Some(s)
           case _ => None
         }
+        // each viewed table's mirror version BEFORE this batch's merges
+        // (read before the futures below start): a view at that version
+        // has folded every change the mirror holds (updateAggView)
+        val priorVersion = cfg.aggViews.values.map(_.table).toSeq.distinct
+          .filter(tables.contains).map(t =>
+            t -> cfg.mirrorSink.lastBatchId(spark, s"${cfg.mirrorRoot}/$t")).toMap
         // Row-level expectations: violating CHANGE rows (deletes exempt
         // — removing a bad row is always clean) are quarantined to a
         // typed side table with their rule names and excluded from the
@@ -262,8 +269,8 @@ object CdcPipeline {
         // under foreachBatch replay: rows are stamped with the batch id
         // and written into their `_batch_id=` partition with DYNAMIC
         // partition overwrite, so a replayed batch overwrites its own
-        // partition instead of appending duplicates (the same guard the
-        // agg views get from their `_GRAFT_BATCH` marker).
+        // partition instead of appending duplicates (the agg views skip
+        // a replay by their state's manifest version instead).
         def gatedMerge(t: String, unwrapped: DataFrame,
                        rules: Seq[graft.operators.Expectations.Rule]): Unit = {
           // annotate once, persist once: the bad-row probe, the
@@ -349,6 +356,7 @@ object CdcPipeline {
             vs.map { case (name, v) =>
               mergeFor(table).map { _ =>
                 updateAggView(spark, name, ownParse(table), v, batchId, cfg,
+                  priorVersion(table), snapPlan.chunkFor(table).isDefined,
                   () => shared)
                 cfg.tableExpectations.get(name).foreach(te =>
                   checkTableExpectations(spark, name, v, te, batchId, cfg))
@@ -542,69 +550,95 @@ object CdcPipeline {
       batchId, sink.maxDeltas, sink.bucketCount)
   }
 
-  /** Fold one batch's deltas into a maintained view's state. Delta
-    * application is not idempotent, so the state's swap carries the last
-    * applied batch id as its `_GRAFT_BATCH` marker: state and watermark
-    * commit ATOMICALLY in the same staging-dir swap
-    * ([[graft.core.SwapPublish]]), and a replayed batch (foreachBatch
-    * restart) is skipped instead of double-counted; the swap's crash
-    * recovery runs first. */
+  /** Where a maintained view's state lives: a [[LogMirror]] keyed by
+    * the view's groups (`spec.allGroupCols`). */
+  private[graft] def viewRoot(cfg: Config, name: String): String =
+    s"${cfg.mirrorRoot}/_views/$name"
+
+  /** Rolling delta depth of a view's state mirror (its fold cadence). */
+  private val viewMaxDeltas = 16
+
+  /** Fold one batch's deltas into a maintained view's state, a
+    * [[LogMirror]] whose manifest version is the last batch id the view
+    * applied. Delta application is not idempotent, so a replayed batch
+    * (foreachBatch restart) at or below that version is skipped. The
+    * batch lands as ONE merge at `batchId`: each touched group's folded
+    * row, or a tombstone once its count reaches 0. `priorVersion` is
+    * the table mirror's version before this batch's merges. */
   private def updateAggView(spark: SparkSession, name: String,
       parsed: DataFrame, view: AggView, batchId: Long, cfg: Config,
+      priorVersion: Option[Long], withChunk: Boolean,
       sharedMirror: () => DataFrame): Unit = {
-    // merge's dirty probe + the state write would otherwise evaluate
-    // the candidate fold twice per batch — measured as the dominant
-    // per-view trigger cost (a views sweep with the since-removed
-    // StreamSweep dev main)
+    val root = viewRoot(cfg, name)
+    val upto = LogMirror.currentVersion(spark, root)
+    if (upto.exists(_ >= batchId)) return // replayed batch: already applied
+    val groups = view.spec.allGroupCols
+    // the fold's state read, dirty probe and write would otherwise
+    // evaluate the delta and the candidate fold more than once per
+    // batch — measured as the dominant per-view trigger cost (a views
+    // sweep with the since-removed StreamSweep dev main)
     val cached = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def cacheBatch(df: DataFrame): DataFrame = {
       val p = df.persist(); cached.add(p); p
     }
-    val root = s"${cfg.mirrorRoot}/_views/$name"
-    val live = new Path(s"$root/live")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapPublish.recover(fs, root)
-    val delta = IncrementalAgg.deltas(parsed, view.spec)
-    // max maintenance recomputes dirty groups from the POST-batch
-    // mirror (this view job is sequenced after the table's merge);
-    // the mirror read is the batch-shared cached one
-    val mirrorRows = Some(sharedMirror)
-    // None = a live state without a marker: its batch is unknown
-    val upto =
-      if (!fs.exists(live)) Some(-1L) else SwapPublish.readBatchMarker(fs, live)
-    if (upto.exists(_ >= batchId)) return // replayed batch: already applied
-    val merged =
-      if (upto.forall(batchId > _ + 1) || retractsUnseen(parsed))
-        // REBUILD from the post-batch mirror (correct by construction)
-        // when folding this batch's delta cannot reach it:
-        //   - a GAP: batches merged into the mirror while this view
-        //     wasn't riding the pipeline (registered mid-stream, or the
-        //     pipeline ran with a config that omitted it), or a state
-        //     whose batch is unknown — folding only this batch would
-        //     silently bake the missing batches out of the state
-        //     forever (the MvCatalog freshness watermark advances only
-        //     through here, so a lagging view stays out of query
-        //     rewrites until this runs);
-        //   - a delete without a before image: the delta retracts only
-        //     through `before`, so the deleted row would stay counted.
-        // `distinctCols` sketches degrade to current-row distincts here
-        IncrementalAgg.rebuild(sharedMirror(), view.spec)
-      else if (upto.exists(_ >= 0))
-        IncrementalAgg.merge(spark.read.parquet(live.toString), delta,
-          view.spec, mirrorRows, cacheBatch)
-      else
-        // empty-state merge (NOT a bare filter): a within-batch
-        // insert+delete of a group's max row must already trigger the
-        // dirty recompute on the very first batch
-        IncrementalAgg.merge(delta.limit(0), delta, view.spec, mirrorRows,
-          cacheBatch)
-    try SwapPublish.atomicSwap(fs, root) { staging =>
-      // aggregate state is #groups rows — orders of magnitude smaller
-      // than the stream; one file keeps the swap cheap and the read local
-      merged.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      // watermark marker rides the SAME atomic rename as the state, so
-      // the cheap read path above can never disagree with the data
-      SwapPublish.writeBatchMarker(fs, staging, batchId)
+    // the state holds every earlier change of the table when it applied
+    // the previous batch, or when the mirror has not moved since the
+    // batch it applied (the table was absent from the batches between)
+    val folds = (upto.getOrElse(-1L) == batchId - 1 ||
+      upto.exists(priorVersion.contains)) && !withChunk && !retractsUnseen(parsed)
+    try {
+      // (upserts, tombstones) of the view's groups
+      val (live, dead) =
+        if (folds) {
+          val delta = cacheBatch(IncrementalAgg.deltas(parsed, view.spec))
+          val touched = delta.select(groups.map(col): _*)
+          val state =
+            if (upto.isEmpty) delta.limit(0) // empty-state merge, NOT a
+            // bare filter: a within-batch insert+delete of a group's max
+            // row must already trigger the dirty recompute
+            else {
+              val st = LogMirror.read(spark, root)
+              st.join(broadcast(touched),
+                ChangefeedConsumer.nullSafeOn(st, touched, groups), "left_semi")
+            }
+          // max maintenance recomputes dirty groups from the POST-batch
+          // mirror (this view job is sequenced after the table's merge);
+          // the mirror read is the batch-shared cached one. Every touched
+          // group also gets a tombstone, which the merge's latest-per-key
+          // drops wherever the group's folded row (later offset) survives
+          (IncrementalAgg.merge(state, delta, view.spec, Some(sharedMirror),
+            cacheBatch), touched)
+        } else {
+          // REBUILD from the post-batch mirror (correct by construction)
+          // when folding this batch's delta cannot reach it:
+          //   - a GAP: the mirror committed batches this view did not
+          //     fold (registered mid-stream, a pipeline run whose config
+          //     omitted it, a snapshot chunk merged into the idle table)
+          //     — folding only this batch would bake them out of the
+          //     state forever (the MvCatalog freshness check compares
+          //     versions, so a lagging view stays out of query rewrites
+          //     until this runs);
+          //   - a snapshot chunk riding this batch's merge: its rows
+          //     reach the mirror without a delta;
+          //   - a delete without a before image: the delta retracts only
+          //     through `before`, so the deleted row would stay counted.
+          // Groups the mirror no longer holds tombstone, as in the
+          // rollup view's resnapshot. `distinctCols` sketches degrade to
+          // current-row distincts here
+          val fresh = cacheBatch(IncrementalAgg.rebuild(sharedMirror(), view.spec))
+          (fresh, ChangefeedConsumer.staleKeys(spark, root, groups, fresh))
+        }
+      val changes = live.withColumn("op", lit("c")).withColumn("offset", lit(1L))
+        .unionByName(dead.withColumn("op", lit("d")).withColumn("offset", lit(0L)),
+          allowMissingColumns = true)
+      // a commit keeps each column's type, and a decimal sum's precision
+      // grows with every fold: store decimals at the widest precision
+      val stable = changes.select(changes.schema.map(f => f.dataType match {
+        case d: DecimalType => col(f.name).cast(DecimalType(38, d.scale)).as(f.name)
+        case _ => col(f.name)
+      }): _*)
+      LogMirror.merge(spark, root, stable.withColumn("ts_ms", lit(batchId)),
+        groups, batchId, viewMaxDeltas, bucketCount = None)
     } finally cached.forEach(_.unpersist())
   }
 
@@ -690,9 +724,9 @@ object CdcPipeline {
     val spec = cfg.aggViews(name).spec
     IncrementalAgg.withDistinctEstimates(
       IncrementalAgg.withAverages(
-        spark.read.parquet(s"${cfg.mirrorRoot}/_views/$name/live")
-          // candidate-list internals stay in the state file, not the
-          // read surface
+        LogMirror.read(spark, viewRoot(cfg, name))
+          // candidate-list internals stay in the state, not the read
+          // surface
           .drop(IncrementalAgg.hiddenCols(spec): _*),
         spec),
       spec)

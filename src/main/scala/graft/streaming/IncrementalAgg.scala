@@ -50,8 +50,8 @@ object IncrementalAgg {
     * from the mirror: O(dirty groups' rows), never a full rescan.
     *
     * `distinctCols` maintain per-group distinct cardinalities as
-    * mergeable HLL sketches (`hll_<c>` state columns, KBs per group —
-    * see [[IncrementalDistinct]] for the standalone form). Semantics:
+    * mergeable HLL sketches (`hll_<c>` state columns, KBs per group).
+    * Semantics:
     * distinct values EVER WRITTEN (inserts + update after-images) — a
     * sketch cannot retract, so deletes don't decrement and a row that
     * moves groups is counted in both. That is the "users ever active

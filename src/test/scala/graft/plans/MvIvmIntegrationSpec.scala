@@ -12,7 +12,7 @@ import graft.streaming.{CdcPipeline, IncrementalAgg, Rec}
 /** MV rewrite ⇄ incremental view maintenance, end to end: a pipeline-
   * maintained agg view registers as a TRANSPARENT rewrite target for
   * aggregates over its table's mirror, with VERSION-based freshness —
-  * the view's applied-batch watermark (its `_GRAFT_BATCH` swap marker)
+  * the view state's manifest version (the last batch it applied)
   * against the mirror's last merged batch id (the default LogMirror
   * sink's manifest id). A
   * query over the mirror silently reads the O(groups) view while
@@ -109,9 +109,9 @@ class MvIvmIntegrationSpec extends SparkSpec
     assert(!scanOf(versioned).contains("_views/by_g"))
   }
 
-  test("a maintained view state without a batch marker reads as stale: " +
+  test("a maintained view whose version lags its mirror reads as stale: " +
     "queries fall through to the mirror") {
-    val root = Files.createTempDirectory("mv-ivm-nomarker").toString
+    val root = Files.createTempDirectory("mv-ivm-lag").toString
     val cfg = CdcPipeline.Config(rowSchema, Seq("id"),
       s"$root/mirror", s"$root/dlq", s"$root/ckpt",
       aggViews = Map("by_g" -> CdcPipeline.AggView("t1",
@@ -124,11 +124,14 @@ class MvIvmIntegrationSpec extends SparkSpec
     MvCatalog.registerMaintained(spark, cfg, "by_g")
     assert(q().queryExecution.executedPlan.toString.contains("_views/by_g"))
 
-    new java.io.File(s"$root/mirror/_views/by_g/live/_GRAFT_BATCH").delete()
+    // a commit no pipeline batch carried: the mirror moves to version 1
+    graft.sinks.LogMirror.merge(spark, s"$root/mirror/t1",
+      Seq((3L, "a", 1.0, "c", 2000L, 2L)).toDF("id", "g", "x", "op", "ts_ms", "offset"),
+      Seq("id"), 1L, 16, None)
     val plan = q().queryExecution.executedPlan.toString
     assert(!plan.contains("_views/by_g"), plan.take(1500))
     assert(q().as[(String, Double)].collect().toMap ==
-      Map("a" -> 10.0, "b" -> 4.0))
+      Map("a" -> 11.0, "b" -> 4.0))
     MvCatalog.clear()
   }
 }

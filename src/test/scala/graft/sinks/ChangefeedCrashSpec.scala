@@ -1,14 +1,13 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path => JPath, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.cdc.Materialize
+import graft.sinks.CrashFs.{copyTree, deleteRoot, forEveryN, freshRoot, local, quietly, stagingLeft}
 
 /** Crash/replay over every changefeed consumer: for each scenario, a
   * poll crashes at its N-th create, rename or delete ([[CrashFs]]) for
@@ -17,7 +16,7 @@ import graft.cdc.Materialize
   * state for the replica, the one-shot join / GROUP BY for the views.
   * Scenarios: an incremental window (updates, a group move, a delete,
   * a dim change), retention lost behind an upstream `purgeKeys`, and a
-  * lost cursor. */
+  * lost cursor. A converged target keeps no group-merge staging dir. */
 class ChangefeedCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -94,22 +93,6 @@ class ChangefeedCrashSpec extends SparkSpec {
       Seq(wave)
     }))
 
-  private def local(p: String): JPath = Paths.get(p.stripPrefix("crashfs://"))
-
-  private def copyTree(from: JPath, to: JPath): Unit =
-    Files.walk(from).iterator().asScala.foreach { p =>
-      val dst = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else Files.copy(p, dst)
-    }
-
-  private def deleteTree(p: JPath): Unit =
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder[JPath]())
-      .forEach(f => Files.delete(f))
-
-  private def freshRoot(tag: String): String =
-    "crashfs://" + Files.createTempDirectory(tag).toString + "/t"
-
   /** Builds the scenario's fixture under a fresh root; returns the root
     * and every fact change. */
   private def fixture(s: Scenario): (String, DataFrame) = {
@@ -126,7 +109,7 @@ class ChangefeedCrashSpec extends SparkSpec {
     * root and the poll's numbered operations. */
   private def cleanCopy(template: String, c: Consumer): (String, Seq[String]) = {
     val root = freshRoot("cfcrash-clean")
-    copyTree(local(template), local(root))
+    copyTree(template, root)
     CrashFs.arm(root)
     c.poll(root)
     (root, CrashFs.disarm(root))
@@ -136,7 +119,7 @@ class ChangefeedCrashSpec extends SparkSpec {
     * returns the copy's root. */
   private def crashedCopy(template: String, c: Consumer, at: Int): String = {
     val root = freshRoot("cfcrash-run")
-    copyTree(local(template), local(root))
+    copyTree(template, root)
     CrashFs.arm(root, at)
     val crashed = try { c.poll(root); false } catch { case _: Exception => true }
     CrashFs.disarm(root)
@@ -144,29 +127,9 @@ class ChangefeedCrashSpec extends SparkSpec {
     root
   }
 
-  private def quietly[T](body: => T): T = {
-    spark.sparkContext.setLogLevel("OFF") // injected task failures log
-    try body finally spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  /** `check(n)` for n in 1..total, three at a time (each run numbers
-    * its own root); every failure is reported. */
-  private def forEveryN(total: Int)(check: Int => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val runs = (1 to total).map(n => n -> pool.submit[Unit](() => check(n)))
-      val failed = runs.flatMap { case (n, f) =>
-        try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          Some(s"operation $n: ${e.getCause.getMessage}") }
-      }
-      assert(failed.isEmpty, failed.mkString("\n"))
-    } finally pool.shutdown()
-  }
-
   for (s <- scenarios; c <- consumers)
     test(s"${c.name}, ${s.name}: a crash at every create, rename or " +
-      "delete of the poll converges on the next poll") { quietly {
+      "delete of the poll converges on the next poll") { quietly(spark.sparkContext) {
       val (template, changes) = fixture(s)
       val (clean, ops) = cleanCopy(template, c)
       val want = rows(c.oracle(clean, changes))
@@ -178,17 +141,19 @@ class ChangefeedCrashSpec extends SparkSpec {
           c.poll(root)
           assert(rows(c.state(root)) == want,
             s"${c.name}: crash at operation $n of ${ops.size} diverged")
+          assert(!stagingLeft(root), s"${c.name}: a group merge's staging " +
+            s"outlives the crash at operation $n")
           if (c == replica && s.purged.nonEmpty) // not even a tombstone
             assert(LogMirror.readVersioned(spark, c.target(root))
               .filter(col("id").isin(s.purged: _*)).isEmpty,
               s"purged keys survive a crash at operation $n")
-        } finally deleteTree(local(root).getParent)
+        } finally deleteRoot(root)
       }
     }}
 
   test("IncrementalAggView: a crash between the agg and keymap manifest " +
     "commits of the view's one group merge converges on the next poll") {
-    quietly {
+    quietly(spark.sparkContext) {
       val (template, changes) = fixture(scenarios.head)
       val (clean, ops) = cleanCopy(template, aggView)
       val agg = ops.indexWhere(o => o.startsWith("rename") &&

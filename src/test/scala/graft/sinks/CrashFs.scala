@@ -1,8 +1,11 @@
 package graft.sinks
 
 import java.net.URI
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.nio.file.{Files, Path => JPath, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -63,6 +66,53 @@ object CrashFs {
   def disarm(root: String): Seq[String] =
     Option(runs.remove(pathOf(root))).fold(Seq.empty[String])(
       _.log.toArray(Array.empty[String]).toSeq)
+
+  /** A fresh, empty `crashfs://` root in a new temp dir. */
+  def freshRoot(tag: String): String =
+    "crashfs://" + Files.createDirectories(Files.createTempDirectory(tag).resolve("t"))
+
+  /** The local directory behind a `crashfs://` root. */
+  def local(root: String): JPath = Paths.get(root.stripPrefix("crashfs://"))
+
+  /** Copies the tree under root `from` into root `to`. */
+  def copyTree(from: String, to: String): Unit = {
+    val (src, dst) = (local(from), local(to))
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val d = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d) else Files.copy(p, d)
+    }
+  }
+
+  /** Deletes a [[freshRoot]] with the temp dir holding it. */
+  def deleteRoot(root: String): Unit =
+    Files.walk(local(root).getParent).sorted(java.util.Comparator.reverseOrder[JPath]())
+      .forEach(f => Files.delete(f))
+
+  /** Whether a `LogMirror.mergeGroup` staging dir remains under `root`. */
+  def stagingLeft(root: String): Boolean =
+    Files.walk(local(root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith(LogMirror.groupStaging))
+
+  /** `check(n)` for n in 1..total, three at a time (each run numbers
+    * its own root); every failure is reported. */
+  def forEveryN(total: Int)(check: Int => Unit): Unit = {
+    val pool = Executors.newFixedThreadPool(3)
+    try {
+      val runs = (1 to total).map(n => n -> pool.submit[Unit](() => check(n)))
+      val failed = runs.flatMap { case (n, f) =>
+        try { f.get(); None }
+        catch { case e: ExecutionException =>
+          Some(s"operation $n: ${e.getCause.getMessage}") }
+      }
+      assert(failed.isEmpty, failed.mkString("\n"))
+    } finally pool.shutdown()
+  }
+
+  /** Runs `body` with Spark's logging off: injected task failures log. */
+  def quietly[T](sc: org.apache.spark.SparkContext)(body: => T): T = {
+    sc.setLogLevel("OFF")
+    try body finally sc.setLogLevel("ERROR")
+  }
 
   private def tick(kind: String, p: Path): Unit = {
     val path = p.toUri.getPath

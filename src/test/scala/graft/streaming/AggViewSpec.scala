@@ -41,6 +41,12 @@ class AggViewSpec extends SparkSpec {
       .select("g", "n_rows", "sum_x").as[(String, Long, Double)]
       .collect().map { case (g, n, s) => g -> ((n, s)) }.toMap
 
+  private def recompute(cfg: CdcPipeline.Config) =
+    CdcPipeline.mirror(spark, cfg, "ventas")
+      .groupBy("g").agg(count(lit(1)).as("n"), sum("x").as("s"))
+      .as[(String, Long, Double)].collect()
+      .map { case (g, n, s) => g -> ((n, s)) }.toMap
+
   test("view folds batches, survives replay, matches mirror recompute") {
     val cfg = cfgWithView()
     val b0 = Seq(
@@ -63,31 +69,112 @@ class AggViewSpec extends SparkSpec {
     assert(viewMap(cfg) == after1, "replayed batch must be a no-op")
 
     // and the maintained state equals a recompute from the mirror
-    val recompute = CdcPipeline.mirror(spark, cfg, "ventas")
-      .groupBy("g").agg(count(lit(1)).as("n"), sum("x").as("s"))
-      .as[(String, Long, Double)].collect()
-      .map { case (g, n, s) => g -> ((n, s)) }.toMap
-    assert(viewMap(cfg) == recompute)
+    assert(viewMap(cfg) == recompute(cfg))
   }
 
-  test("a live state without a batch marker is not folded onto: the " +
+  private def viewRoot(cfg: CdcPipeline.Config) = CdcPipeline.viewRoot(cfg, "by_g")
+
+  /** Multiplies the view's counts by 10 in place (a replay of the
+    * view's own batch), so a later fold shows on the numbers. */
+  private def corruptView(cfg: CdcPipeline.Config): Unit = {
+    val v = graft.sinks.LogMirror.currentVersion(spark, viewRoot(cfg)).get
+    val state = graft.sinks.LogMirror.read(spark, viewRoot(cfg))
+    val bogus = spark.createDataFrame(state.collect().toSeq.asJava, state.schema)
+      .withColumn("n_rows", col("n_rows") * 10)
+      .withColumn("op", lit("c")).withColumn("ts_ms", lit(v))
+      .withColumn("offset", lit(1L))
+    graft.sinks.LogMirror.merge(spark, viewRoot(cfg), bogus, Seq("g"), v,
+      16, None)
+  }
+
+  test("a view whose version lags its mirror is not folded onto: the " +
     "next batch rebuilds the view from the mirror") {
     val cfg = cfgWithView()
     CdcPipeline.processBatch(Seq(
       rec(1, env("c", "null", img(1, "a", 10.0)), 0),
       rec(2, env("c", "null", img(2, "b", 20.0)), 1)).toDF(), 0L, cfg)
-    // a state of unknown batch (wrong counts, no marker)
-    val live = s"${cfg.mirrorRoot}/_views/by_g/live"
-    val state = spark.read.parquet(live)
-    val bogus = spark.createDataFrame(state.collect().toSeq.asJava, state.schema)
-      .withColumn("n_rows", col("n_rows") * 10)
-    bogus.write.mode("overwrite").parquet(live)
-    assert(!new java.io.File(s"$live/_GRAFT_BATCH").exists())
+    corruptView(cfg)
+    // batch 1 merges without the view: the mirror moves on, the view
+    // stays at version 0
+    CdcPipeline.processBatch(Seq(
+      rec(4, env("c", "null", img(4, "b", 1.0)), 2)).toDF(), 1L,
+      cfg.copy(aggViews = Map.empty))
+    assert(graft.sinks.LogMirror.currentVersion(spark, viewRoot(cfg)).contains(0L))
 
     CdcPipeline.processBatch(Seq(
-      rec(3, env("c", "null", img(3, "a", 5.0)), 2)).toDF(), 1L, cfg)
-    assert(viewMap(cfg) == Map("a" -> ((2L, 15.0)), "b" -> ((1L, 20.0))))
-    assert(new java.io.File(s"$live/_GRAFT_BATCH").exists())
+      rec(3, env("c", "null", img(3, "a", 5.0)), 3)).toDF(), 2L, cfg)
+    assert(viewMap(cfg) == Map("a" -> ((2L, 15.0)), "b" -> ((2L, 21.0))))
+    assert(graft.sinks.LogMirror.currentVersion(spark, viewRoot(cfg)).contains(2L))
+  }
+
+  test("a batch without the view's table leaves the view foldable: the " +
+    "next batch of its table folds onto the state, no rebuild") {
+    val cfg = cfgWithView()
+    CdcPipeline.processBatch(Seq(
+      rec(1, env("c", "null", img(1, "a", 10.0)), 0)).toDF(), 0L, cfg)
+    corruptView(cfg) // a rebuild would repair these counts, a fold keeps them
+    // batch 1 carries only another table: ventas' mirror stays at 0
+    CdcPipeline.processBatch(Seq(Rec("mysql-server.pos_bi_db.entidades",
+      """{"payload":{"id":7}}""", env("c", "null", img(7, "z", 1.0)), 0, 1))
+      .toDF(), 1L, cfg)
+    CdcPipeline.processBatch(Seq(
+      rec(2, env("c", "null", img(2, "a", 1.0)), 2)).toDF(), 2L, cfg)
+    assert(viewMap(cfg) == Map("a" -> ((11L, 11.0))))
+    assert(graft.sinks.LogMirror.currentVersion(spark, viewRoot(cfg)).contains(2L))
+  }
+
+  test("snapshot chunks reach the view: a chunk riding the table's batch " +
+    "and a chunk merged into the idle table both rebuild it") {
+    val root = Files.createTempDirectory("graft-aggview-snap").toString
+    val source = spark.range(0, 35).select(col("id"),
+      when(col("id") % 2 === 0, "a").otherwise("c").as("g"),
+      col("id").cast("double").as("x"))
+    val cfg = cfgWithView().copy(mirrorRoot = s"$root/mirror",
+      signalDir = Some(s"$root/signals"),
+      snapshotSources = Map("ventas" -> (() => source)),
+      snapshotChunkKeys = 20)
+    CdcPipeline.processBatch(Seq(
+      rec(1, env("c", "null", img(1, "b", 10.0)), 0),
+      rec(100, env("c", "null", img(100, "b", 3.0)), 1)).toDF(), 0L, cfg)
+    assert(viewMap(cfg) == recompute(cfg))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/signals"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/signals/s.json"),
+      ("""{"id":"s1","type":"execute-snapshot",""" +
+        """"data":{"data-collections":["ventas"]}}""").getBytes("UTF-8"))
+    // batch 1: ventas events plus the chunk [0, 19] in one merge
+    CdcPipeline.processBatch(Seq(
+      rec(101, env("c", "null", img(101, "b", 4.0)), 2)).toDF(), 1L, cfg)
+    assert(viewMap(cfg) == recompute(cfg))
+    // batch 2: no events, the last chunk [20, 34] merges into the idle
+    // table; batch 3 carries no chunk
+    CdcPipeline.processBatch(Seq.empty[Rec].toDF(), 2L, cfg)
+    CdcPipeline.processBatch(Seq(
+      rec(102, env("c", "null", img(102, "b", 5.0)), 3)).toDF(), 3L, cfg)
+    val want = recompute(cfg)
+    assert(want("a")._1 == 18L && viewMap(cfg) == want)
+  }
+
+  test("a decimal sum keeps one stored type across folds and a rebuild") {
+    val root = Files.createTempDirectory("graft-aggview-dec").toString
+    val decSchema = StructType(Seq(StructField("id", LongType),
+      StructField("g", StringType), StructField("x", DecimalType(10, 2))))
+    val cfg = CdcPipeline.Config(decSchema, Seq("id"), s"$root/mirror",
+      s"$root/dlq", s"$root/ckpt",
+      aggViews = Map("by_g" -> CdcPipeline.AggView("ventas",
+        IncrementalAgg.Spec(Seq("g"), Seq("x")))))
+    def sums() = CdcPipeline.aggView(spark, cfg, "by_g")
+      .select(col("g"), col("sum_x").cast("string")).as[(String, String)]
+      .collect().toMap
+    CdcPipeline.processBatch(Seq(
+      rec(1, env("c", "null", img(1, "a", 10.25)), 0)).toDF(), 0L, cfg)
+    CdcPipeline.processBatch(Seq(
+      rec(2, env("c", "null", img(2, "a", 0.5)), 1)).toDF(), 1L, cfg) // fold
+    CdcPipeline.processBatch(Seq(
+      rec(3, env("c", "null", img(3, "b", 1.0)), 2)).toDF(), 2L,
+      cfg.copy(aggViews = Map.empty))
+    CdcPipeline.processBatch(Seq( // gap: rebuild from the mirror
+      rec(4, env("c", "null", img(4, "a", 2.0)), 3)).toDF(), 3L, cfg)
+    assert(sums() == Map("a" -> "12.75", "b" -> "1.00"))
   }
 
   test("MAX(id) integrity-probe view: retraction recomputes from mirror") {
@@ -197,7 +284,7 @@ class AggViewSpec extends SparkSpec {
     assert(ids() == Map("a" -> 3L, "b" -> 1L),
       "ever-written: the deleted id stays counted, the update doesn't double")
 
-    // foreachBatch replay: guarded by the batch marker AND idempotent by algebra
+    // foreachBatch replay: skipped by the view's version AND idempotent by algebra
     CdcPipeline.processBatch(b1, 1L, cfg)
     assert(ids() == Map("a" -> 3L, "b" -> 1L))
   }

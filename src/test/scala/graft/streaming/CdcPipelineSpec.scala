@@ -404,54 +404,6 @@ class CdcPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("mirror swap crash recovery: no prior state is lost") {
-    // Maintained-view state publishes through the two-rename swap
-    // (SwapPublish) under the mirror root. A crash between
-    // rename(live, .old) and rename(.staging, live) leaves no live dir;
-    // without recovery the next update would find no state and rebuild
-    // the view from the mirror instead of folding the batch into the
-    // state it already had. A sum-only view never reads the mirror on
-    // its incremental path, so a counting sink shows which path ran.
-    val root = Files.createTempDirectory("graft-pipe-swap").toString
-    val sink = new graft.sinks.MapSink {
-      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def read(spark: org.apache.spark.sql.SparkSession,
-                        tableRoot: String) = {
-        reads.incrementAndGet(); super.read(spark, tableRoot)
-      }
-    }
-    val cfg = CdcPipeline.Config(rowSchema, Seq("id"), s"$root/mirror",
-      s"$root/dlq", s"$root/ckpt", sinkOverride = Some(sink),
-      aggViews = Map("by_v" -> CdcPipeline.AggView("ventas",
-        IncrementalAgg.Spec(Seq("v"), Nil))))
-    val fs = fsOf(root)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"${cfg.mirrorRoot}/_views/by_v/$s")
-    def view() = CdcPipeline.aggView(spark, cfg, "by_v")
-      .select("v", "n_rows").as[(String, Long)].collect().toMap
-
-    CdcPipeline.processBatch(Seq(rec("ventas", 1, "a", "r", 1000, 0),
-      rec("ventas", 2, "b", "r", 1000, 1)).toDF(), 0L, cfg)
-    assert(view() == Map("a" -> 1L, "b" -> 1L))
-
-    // crash window A: live renamed away, .old holds the consistent state
-    fs.rename(p("live"), p(".old"))
-    CdcPipeline.processBatch(Seq(rec("ventas", 3, "c", "c", 2000, 2)).toDF(),
-      1L, cfg)
-    assert(view() == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
-    assert(sink.reads.get() == 0,
-      "the batch rebuilt the view from the mirror: the swap lost its state")
-    assert(!fs.exists(p(".old")))
-
-    // crash window B: swap died after the staging write completed
-    // (_SUCCESS present) but before rename — staging is the NEWEST state
-    // and must win over .old
-    fs.rename(p("live"), p(".staging"))
-    fs.mkdirs(p(".old"))
-    graft.core.SwapPublish.recover(fs, s"${cfg.mirrorRoot}/_views/by_v")
-    assert(fs.exists(p("live")) && !fs.exists(p(".old")))
-    assert(view() == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
-  }
-
   test("log mirror crash recovery: a replay after a crash between segment " +
     "write and manifest commit, or inside a fold, equals one-shot " +
     "materialization") {
@@ -700,8 +652,8 @@ class CdcPipelineSpec extends SparkSpec {
     assert(flagged == Set((1L, 28L, 36L), (2L, 0L, 64L)),
       s"expected the two dropped ranges flagged in THIS batch: $flagged")
 
-    // foreachBatch replay of batch 1: the batch-marker guard skips the
-    // re-fold; flags unchanged (no double retraction)
+    // foreachBatch replay of batch 1: the view's manifest version skips
+    // the re-fold; flags unchanged (no double retraction)
     CdcPipeline.processBatch(
       dropped.zipWithIndex.map { case (i, k) =>
         drec(i, "d", 2000, 1000L + k) }.toDF(), 1L, cfg)
